@@ -53,6 +53,9 @@ _EMB_DIM = 64
 _EPOCH_1995 = 9131  # days from 1970-01-01 to 1995-01-01
 _EPOCH_2024 = 19723  # days from 1970-01-01 to 2024-01-01
 
+STREAM_FILES = 2  # staged event files, one micro-batch each
+_STAGE_MTIME = 1_700_000_000  # epoch seconds of the first staged file
+
 
 def _strings(values: list[str], idx: np.ndarray) -> pa.Array:
     """Categorical column: pick ``values[idx]`` as a plain string array."""
@@ -222,6 +225,25 @@ def embeddings_table(seed: int, scale: float) -> pa.Table:
     })
 
 
+def stage_events(events: pa.Table, stream_dir: str) -> dict[str, dict]:
+    """Stage ``events`` for the file-stream source as STREAM_FILES files in
+    event-time order, the earlier half first, with modification times one
+    second apart. With one file read per trigger, a drain runs one
+    micro-batch per file in this order, so the state store is reloaded and
+    committed across versions, and no row arrives behind the watermark."""
+    os.makedirs(stream_dir)
+    cuts = np.linspace(0, events.num_rows, STREAM_FILES + 1).astype(int)
+    rows = nbytes = 0
+    for k in range(STREAM_FILES):
+        path = os.path.join(stream_dir, f"events-{k}.parquet")
+        pq.write_table(events.slice(cuts[k], cuts[k + 1] - cuts[k]), path,
+                       row_group_size=ROW_GROUP)
+        os.utime(path, (_STAGE_MTIME + k, _STAGE_MTIME + k))
+        rows += cuts[k + 1] - cuts[k]
+        nbytes += os.path.getsize(path)
+    return {"events": {"rows": int(rows), "bytes": nbytes}}
+
+
 def tera_sql(seed: int, n_rows: int, path: str) -> str:
     """TeraGen records with the seed folded into the md5 input (20-hex-char
     key, 90-char value, as ``sources.generators.teragen``), written by DuckDB."""
@@ -252,12 +274,7 @@ def generate(workload: str, seed: int, scale: float, out_dir: str) -> dict[str, 
             "embeddings": embeddings_table(seed, scale),
         }, out_dir)
     if workload == "stream_replay":
-        events = events_table(seed, scale)
-        # the file-stream source watches a directory; one file is one
-        # micro-batch (each further batch adds seconds of state-store work)
-        os.makedirs(os.path.join(out_dir, "stream"))
-        _write({"events": events}, os.path.join(out_dir, "stream"))
-        return _write({"events": events}, out_dir)
+        return stage_events(events_table(seed, scale), os.path.join(out_dir, "stream"))
     if workload == "terasort":
         import duckdb
 

@@ -6,23 +6,27 @@
 One driver process, one client, closed loop: the jobs of a workload run one
 after another on ``local[nproc]``, each waiting for the previous one. A run
 
-1. sets up five times (``session.get_session``, seeded input generation,
-   first touch of the parquet footers; the first set-up launches the JVM)
-   and reports the median wall time as ``setup_s``;
+1. sets up twice from cold (``session.get_session`` launching a new JVM,
+   seeded input generation, first touch of the parquet footers), the first
+   set-up stopping the session and its JVM again, and reports the median
+   wall time as ``setup_s``;
 2. runs one cold pass over the workload's jobs (``first_pass_cpu_s``);
-3. repeats warm passes for ``--seconds``, at least three, and reports their
-   median (``pass_cpu_s``, less the JVM's JIT compile time, a warm-up cost
-   that fades pass by pass at a rate that differs between runs), each job
-   materializing every row and column of its result into the noop sink and
-   releasing its caches afterwards;
-4. checks every job's output once, outside the timed passes: against its
-   registry oracle SQL in DuckDB over the same files, or TeraValidate.
+3. runs one warm-up pass, whose cost is not reported, that checks every
+   job's output: it collects the rows and compares them with the job's
+   registry oracle SQL in DuckDB over the same files (TeraSort passes
+   TeraValidate on every pass);
+4. runs timed passes for ``--seconds``, at least three, and reports their
+   median (``pass_cpu_s``), each job materializing every row and column of
+   its result into the noop sink and releasing its caches afterwards.
 
 Pass costs are CPU seconds (user + system) of this process, the driver JVM
 and the Python workers, read from ``/proc``: on a shared virtual host the
 wall time of the same pass swings with the CPU time the host withholds,
 while the CPU it needs does not. Wall times of every pass are in the
-metadata line.
+metadata line. The JVM's JIT compiler keeps working for a minute or more of
+passes, so the timed passes include compile work that fades from pass to
+pass; the fixed pass order puts every run's timed passes at the same point
+of that decline.
 
 With ``--trace 1`` the run interleaves untraced and traced passes and prints
 per-layer metrics instead: spans around the benchmark's calls into each
@@ -50,7 +54,7 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PACKAGE = "hadoop_3_0_0_beta1_gaia_spark"
-SETUP_REPS = 5
+SETUP_REPS = 2
 MIN_STEADY_PASSES = 3
 MIN_TRACE_PASSES = 2  # of each kind, untraced and traced, in a traced run
 
@@ -141,20 +145,19 @@ class Runner:
         self.errors: list[str] = []
         self.sizes: dict[str, dict] = {}
         self.ctx_state: dict = {}
-        self.drained: dict = {}  # job -> drained Output of the latest pass
         self.cpu: list[float] = []  # CPU seconds of each pass, in order
-        self.jit: list[float] = []  # JVM JIT compile ms of each pass
 
     # set-up -----------------------------------------------------------------
     def setup(self) -> dict:
+        """Set up SETUP_REPS times, each from cold: every set-up but the last
+        stops the session and waits for its JVM to exit."""
         import gen
 
         from hadoop_3_0_0_beta1_gaia_spark import session
 
         totals, starts, gens, cpus = [], [], [], []
-        for rep in range(SETUP_REPS):
-            if self.spark is not None:
-                self.spark.stop()
+        for _ in range(SETUP_REPS):
+            self.stop()
             cpu0 = self.tr.cpu_seconds(os.getpid())
             t0 = time.perf_counter()
             with self.tracer.span("get_session", "session"):
@@ -172,7 +175,7 @@ class Runner:
             gens.append(t2 - t1)
         if "tera" in self.sizes:
             self.ctx_state["tera_rows"] = self.sizes["tera"]["rows"]
-        return {"setup_s": statistics.median(totals), "start_cold_s": starts[0],
+        return {"setup_s": statistics.median(totals), "start_s": statistics.median(starts),
                 "gen_s": statistics.median(gens), "setup_runs_s": totals,
                 "setup_cpu_s": cpus}
 
@@ -190,15 +193,18 @@ class Runner:
     def ctx(self):
         return self.wl.Ctx(self.spark, self.in_dir, self.work, self.tracer, self.ctx_state)
 
-    def run_pass(self, index: int, traced: bool, per_job: dict | None = None) -> float:
+    def run_pass(self, index: int, traced: bool, per_job: dict | None = None,
+                 check: bool = False) -> float:
         """One pass over the jobs; returns its wall time in seconds and
-        appends the CPU seconds it used to ``self.cpu``."""
+        appends the CPU seconds it used to ``self.cpu``. A checking pass
+        collects every job's rows and compares them with the job's oracle
+        instead of writing them to the noop sink."""
         from hadoop_3_0_0_beta1_gaia_spark.session import cached_entry_count, force_release_all
 
         tr = self.tr
+        con = self.wl.oracle_connection(self.workload, self.in_dir) if check else None
         self.tracer.enabled = traced
         cpu0 = tr.cpu_seconds(os.getpid())
-        jit0 = self._jit_ms()
         t0 = time.perf_counter()
         with self.tracer.span("pass", None, index=index):
             for name in self.jobs:
@@ -206,13 +212,16 @@ class Runner:
                 with self.tracer.span("job", None, job=name):
                     try:
                         out = self.wl.job_runner(self.workload, name)(self.ctx())
-                        if out.df is not None:
+                        if out.df is not None and con is not None:
+                            err = self.wl.check(con, name, out.df)
+                            if err:
+                                raise RuntimeError(f"output check: {err}")
+                        elif out.df is not None:
                             with self.tracer.span("action", out.layer):
                                 out.df.write.format("noop").mode("overwrite").save()
-                        if out.drained:
-                            self.drained[name] = out
                         if out.ok is False:
-                            raise RuntimeError(f"{name}: output failed validation")
+                            raise RuntimeError(
+                                f"{name}: TeraValidate failed {self.ctx_state.get('validation')}")
                     except Exception as ex:  # noqa: BLE001 - count the job, run the rest
                         self.failed += 1
                         self.errors.append(f"pass {index} {name}: {ex!r}"[:500])
@@ -227,48 +236,18 @@ class Runner:
         self.tracer.enabled = False
         wall = time.perf_counter() - t0
         self.cpu.append(tr.cpu_seconds(os.getpid()) - cpu0)
-        self.jit.append(self._jit_ms() - jit0)
+        if con is not None:
+            con.close()
         return wall
-
-    def _jit_ms(self) -> float:
-        jvm = self.spark.sparkContext._jvm
-        return jvm.java.lang.management.ManagementFactory.getCompilationMXBean(
-        ).getTotalCompilationTime()
 
     def _cache_bytes(self) -> int:
         infos = self.spark.sparkContext._jsc.sc().getRDDStorageInfo()
         return sum(int(i.memSize()) + int(i.diskSize()) for i in infos)
 
-    def check_outputs(self) -> None:
-        """Run every job once more and compare its rows with the oracle."""
-        from hadoop_3_0_0_beta1_gaia_spark.session import force_release_all
-
-        con = self.wl.oracle_connection(self.workload, self.in_dir)
-        try:
-            for name in self.jobs:
-                self.attempted += 1
-                try:
-                    out = self.drained.get(name) or self.wl.job_runner(
-                        self.workload, name)(self.ctx())
-                    err = None
-                    if out.df is not None:
-                        err = self.wl.check(con, name, out.df)
-                    elif out.ok is False:
-                        err = f"{name}: TeraValidate failed {self.ctx_state.get('validation')}"
-                except Exception as ex:  # noqa: BLE001
-                    err = f"{name}: {ex!r}"
-                    traceback.print_exc(file=sys.stderr)
-                if err:
-                    self.failed += 1
-                    self.errors.append(f"check {err}"[:500])
-                force_release_all(self.spark)
-        finally:
-            con.close()
-
     # protocol ---------------------------------------------------------------
     def run(self) -> tuple[dict, dict]:
-        """Set up, time the passes, check the outputs; returns the metrics
-        and the set-up timings."""
+        """Set up, then run the cold, checking and timed passes; returns the
+        metrics and the set-up timings."""
         self.tracer.enabled = self.trace
         with self.tracer.span("workload", None, workload=self.workload, seed=self.seed):
             with self.tracer.span("setup", None):
@@ -277,19 +256,15 @@ class Runner:
             if self.trace:
                 return self._run_traced(setup)
             first = self.run_pass(0, traced=False)
+            check = self.run_pass(1, traced=False, check=True)
             steady = []
             t_end = time.perf_counter() + self.seconds
             while len(steady) < MIN_STEADY_PASSES or time.perf_counter() < t_end:
-                steady.append(self.run_pass(len(steady) + 1, traced=False))
-            self.check_outputs()
+                steady.append(self.run_pass(len(self.cpu), traced=False))
         rows, _ = self.input_rows()
-        # warm passes: without the JIT compiler's work, which fades pass by
-        # pass at a rate that differs from run to run
-        pass_cpu_s = statistics.median(
-            cpu - jit / 1000.0 for cpu, jit in zip(self.cpu[1:], self.jit[1:])
-        )
-        self.passes = {"first_s": first, "steady_s": steady, "cpu_s": self.cpu,
-                       "jit_ms": self.jit}
+        pass_cpu_s = statistics.median(self.cpu[2:])
+        self.passes = {"first_s": first, "check_s": check, "steady_s": steady,
+                       "cpu_s": self.cpu}
         return {
             "setup_s": setup["setup_s"],
             "first_pass_cpu_s": self.cpu[0],
@@ -329,14 +304,15 @@ class Runner:
         untraced, traced, windows, pass_ids = [], [], [], set()
         with tr.RssSampler() as rss:
             first = self.run_pass(0, traced=False)
+            check = self.run_pass(1, traced=False, check=True)
             t_end = time.perf_counter() + self.seconds
-            k = 1
+            k = 2
             while min(len(untraced), len(traced)) < MIN_TRACE_PASSES or (
                 time.perf_counter() < t_end
             ):
                 # untraced, traced, traced, untraced, ...: a warm-up trend
                 # across passes weighs on both kinds alike
-                if k % 4 in (0, 1):
+                if k % 4 in (1, 2):
                     untraced.append(self.run_pass(k, traced=False))
                 else:
                     n_before = len(self.tracer.spans)
@@ -345,9 +321,8 @@ class Runner:
                     windows.append((w0, w1))
                     pass_ids.add(n_before)  # the pass span is the first recorded
                 k += 1
-        self.check_outputs()
-        self.passes = {"first_s": first, "untraced_s": untraced, "traced_s": traced,
-                       "cpu_s": self.cpu}
+        self.passes = {"first_s": first, "check_s": check, "untraced_s": untraced,
+                       "traced_s": traced, "cpu_s": self.cpu}
         n = len(traced)
         cores = self.spark.sparkContext.defaultParallelism
         self.stop()
@@ -355,7 +330,7 @@ class Runner:
 
         m: dict[str, float] = {}
         wall_ms = sum(traced) * 1000.0
-        m["session.start_s"] = setup["start_cold_s"]
+        m["session.start_s"] = setup["start_s"]
         m["session.core_busy_share"] = events["session.executor_cpu_ms"] / (wall_ms * cores)
         for key in ("session.tasks", "session.scheduler_delay_ms", "session.gc_ms"):
             m[key] = events[key] / n
@@ -451,12 +426,11 @@ class Runner:
             "input_rows": rows, "input_bytes": nbytes, "inputs": self.sizes,
             "jobs": self.jobs,
             "protocol": (
-                f"closed loop, 1 client; {SETUP_REPS} set-ups (first launches the JVM), "
-                "1 cold pass, warm passes for --seconds "
+                f"closed loop, 1 client; {SETUP_REPS} cold set-ups, each launching "
+                "a JVM; 1 cold pass; 1 untimed warm-up pass that checks every "
+                "job's output; timed passes for --seconds "
                 f"(at least {MIN_STEADY_PASSES}), noop sink, force_release_all after "
-                "each job; pass cost in CPU seconds of the driver process tree, "
-                "warm passes less JIT compile time; outputs checked once after the "
-                "timed passes"
+                "each job; pass cost in CPU seconds of the driver process tree"
                 + ("; traced run alternates untraced and traced passes, per-layer "
                    "metrics are per traced pass" if self.trace else "")
             ),

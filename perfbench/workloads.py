@@ -31,7 +31,7 @@ RELATIONAL = [
 LLM_PIPELINE = [
     "word_count", "dedup_minhash_lsh", "dsir_importance_select", "knn_cosine_topk",
 ]
-STREAM_REPLAY = ["stream_windowed_counts", "stream_sliding_topk"]
+STREAM_REPLAY = ["stream_sliding_topk"]
 TERASORT = ["teragen_checksum", "terasort_write", "teravalidate"]
 
 WORKLOADS = {
@@ -41,13 +41,13 @@ WORKLOADS = {
     "stream_replay": STREAM_REPLAY,
 }
 
-# oracle views per workload (tables the DuckDB side registers)
+# oracle views per workload: table the DuckDB side registers -> its files
 VIEWS = {
-    "relational": ("region", "nation", "customer", "supplier", "part",
-                   "orders", "lineitem", "events"),
-    "llm_pipeline": ("documents", "embeddings"),
-    "stream_replay": ("events",),
-    "terasort": ("tera",),
+    "relational": {t: f"{t}.parquet" for t in (
+        "region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events")},
+    "llm_pipeline": {"documents": "documents.parquet", "embeddings": "embeddings.parquet"},
+    "stream_replay": {"events": "stream/*.parquet"},
+    "terasort": {"tera": "tera.parquet"},
 }
 
 
@@ -67,9 +67,6 @@ class Output:
     df: Any = None  # materialized by the pass (noop sink)
     layer: str = "plans"  # layer the materializing action is charged to
     ok: bool | None = None  # set when the job validates itself (TeraSort)
-    # the result is already materialized (a drained memory sink), so the
-    # output check reads it instead of running the job again
-    drained: bool = False
 
 
 def relational_job(name: str) -> Callable[[Ctx], Output]:
@@ -85,7 +82,7 @@ def relational_job(name: str) -> Callable[[Ctx], Output]:
 
 
 # ---------------------------------------------------------------------------
-# stream_replay: availableNow drains over the staged event file
+# stream_replay: availableNow drains over the staged event files
 # ---------------------------------------------------------------------------
 
 
@@ -104,7 +101,9 @@ def _event_stream(ctx: Ctx):
         StructField("value", DoubleType()),
         StructField("props", StringType()),
     ])
-    raw = ctx.spark.readStream.schema(schema).parquet(os.path.join(ctx.in_dir, "stream"))
+    # one staged file per micro-batch
+    raw = ctx.spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
+        os.path.join(ctx.in_dir, "stream"))
     with ctx.tracer.span("instant_ts", "session"):
         return instant_ts(raw, "ts")
 
@@ -116,15 +115,6 @@ def _drain(ctx: Ctx, df, sink: str):
         return ev.run_to_memory(df, sink, ctx.spark)
 
 
-def stream_windowed_counts(ctx: Ctx) -> Output:
-    from hadoop_3_0_0_beta1_gaia_spark.streaming import events as ev
-
-    with ctx.tracer.span("windowed_counts", "streaming"):
-        counted = ev.windowed_counts(_event_stream(ctx), window="1 hour", watermark="1 hour")
-    return Output(df=_drain(ctx, counted, "pb_stream_windowed_counts"), layer="streaming",
-                  drained=True)
-
-
 def stream_sliding_topk(ctx: Ctx) -> Output:
     from hadoop_3_0_0_beta1_gaia_spark.streaming import events as ev
 
@@ -132,8 +122,7 @@ def stream_sliding_topk(ctx: Ctx) -> Output:
         agg = ev.sliding_counts(_event_stream(ctx), window="2 hours", slide="1 hour")
     drained = _drain(ctx, agg, "pb_stream_sliding_topk")
     with ctx.tracer.span("rank_topk_per_window", "streaming"):
-        return Output(df=ev.rank_topk_per_window(drained, k=3), layer="streaming",
-                      drained=True)
+        return Output(df=ev.rank_topk_per_window(drained, k=3), layer="streaming")
 
 
 # ---------------------------------------------------------------------------
@@ -186,9 +175,7 @@ def teravalidate(ctx: Ctx) -> Output:
     return Output(ok=v.ok and v.n_rows == ctx.state["tera_rows"])
 
 
-_STREAM_JOBS = {f.__name__: f for f in (
-    stream_windowed_counts, stream_sliding_topk,
-)}
+_STREAM_JOBS = {"stream_sliding_topk": stream_sliding_topk}
 _TERA_JOBS = {f.__name__: f for f in (teragen_checksum, terasort_write, teravalidate)}
 
 
@@ -228,10 +215,8 @@ def oracle_connection(workload: str, in_dir: str):
     import duckdb
 
     con = duckdb.connect()
-    for t in VIEWS[workload]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(in_dir, t)}.parquet'"
-        )
+    for t, files in VIEWS[workload].items():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(in_dir, files)}'")
     return con
 
 
