@@ -441,7 +441,8 @@ def _descendants(root: int) -> list[int]:
 def cpu_seconds(root: int) -> float:
     """User plus system CPU seconds used so far by ``root`` and all its
     descendants, counting children they have already reaped. Unlike wall
-    time, this does not grow when the host withholds CPU from the guest."""
+    time, this does not grow when the host withholds CPU from the guest; it
+    does grow when the host runs the guest's CPUs slower (see ``calibrate``)."""
     total = 0
     for pid in [root, *_descendants(root)]:
         try:
@@ -452,6 +453,35 @@ def cpu_seconds(root: int) -> float:
         # the command name may contain spaces; fields resume after ')'
         total += sum(int(v) for v in data[data.rindex(")") + 2:].split()[11:15])
     return total / os.sysconf("SC_CLK_TCK")
+
+
+def calibrate(spark) -> float:
+    """CPU seconds of one fixed kernel that uses no engine code: a seeded
+    numpy sort and a dict/str loop in this Python thread, then a seeded int
+    sort and a BigInteger square root in the JVM thread py4j pins to it.
+
+    On a shared host the CPU time of the same work swings with what the
+    neighbours run (clock speed, the sibling hyperthread, memory bandwidth):
+    the same llm_pipeline pass read 4 CPU-s and, a few hours apart, 10.
+    The kernel slows with the host and not with the engine, so pass CPU
+    divided by the kernel's CPU measures the engine's work in units of the
+    host's speed at the time. Its size and content are fixed: changing them
+    changes the unit."""
+    import numpy as np
+
+    t0 = time.thread_time()
+    np.sort(np.random.default_rng(0).integers(0, 1 << 40, 500_000))
+    d = {}
+    for i in range(300_000):
+        d[str(i * 7919 % 100_003)] = i
+    py_s = time.thread_time() - t0
+    jvm = spark._jvm
+    mx = jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    j0 = mx.getCurrentThreadCpuTime()
+    arr = jvm.java.util.Random(0).ints(1_000_000).toArray()
+    jvm.java.util.Arrays.sort(arr)
+    jvm.java.math.BigInteger.valueOf(7).pow(60_000).sqrt().bitLength()
+    return py_s + (mx.getCurrentThreadCpuTime() - j0) / 1e9
 
 
 def rss_bytes(pids: list[int]) -> int:

@@ -8,25 +8,32 @@ after another on ``local[nproc]``, each waiting for the previous one. A run
 
 1. sets up twice from cold (``session.get_session`` launching a new JVM,
    seeded input generation, first touch of the parquet footers), the first
-   set-up stopping the session and its JVM again, and reports the median
-   wall time as ``setup_s``;
-2. runs one cold pass over the workload's jobs (``first_pass_cpu_s``);
-3. runs one warm-up pass, whose cost is not reported, that checks every
-   job's output: it collects the rows and compares them with the job's
-   registry oracle SQL in DuckDB over the same files (TeraSort passes
-   TeraValidate on every pass);
-4. runs timed passes for ``--seconds``, at least three, and reports their
-   median (``pass_cpu_s``), each job materializing every row and column of
-   its result into the noop sink and releasing its caches afterwards.
+   set-up stopping the session and its JVM again (``setup_s``: the median
+   wall time);
+2. runs one cold pass over the workload's jobs (``first_pass_ref_s``) that
+   collects every job's rows; after the pass, outside its measurement, they
+   are compared with the job's registry oracle SQL run by DuckDB over the
+   same files (TeraSort passes TeraValidate on every pass);
+3. runs ``--seconds / 2`` timed passes (at least three), each job
+   materializing every row and column of its result into the noop sink and
+   releasing its caches afterwards (``pass_ref_s``: their mean).
 
-Pass costs are CPU seconds (user + system) of this process, the driver JVM
-and the Python workers, read from ``/proc``: on a shared virtual host the
-wall time of the same pass swings with the CPU time the host withholds,
-while the CPU it needs does not. Wall times of every pass are in the
-metadata line. The JVM's JIT compiler keeps working for a minute or more of
-passes, so the timed passes include compile work that fades from pass to
-pass; the fixed pass order puts every run's timed passes at the same point
-of that decline.
+A pass costs the CPU seconds (user + system) of this process, the driver JVM
+and the Python workers, read from ``/proc``. Neither wall nor CPU time of
+the same work holds still on a shared host: wall time swings with the CPU
+the host withholds, CPU time with how fast the host runs the CPUs it gives
+(the same llm_pipeline pass read 4 and 10 CPU-s a few hours apart). So the
+run also times a fixed calibration kernel that uses no engine code
+(``probes.calibrate``): once unrecorded after set-up, then before every
+pass and after the last. The kernel slows with the host, not with the
+engine, and every time is scaled by ``CAL_REF_S`` / kernel CPU time into
+seconds on the reference host (``*_ref_s``): the timed passes by the kernel
+runs that bracket them, set-up and the cold pass by the median of all. The
+number of timed passes depends on ``--seconds`` only, not on how fast the
+host is: the JIT compiler keeps working for a minute or more of passes and
+pass cost falls as it does, so every run reports the same passes of that
+decline. Raw wall and CPU times of every set-up and pass, and every kernel
+time, are in the metadata line.
 
 With ``--trace 1`` the run interleaves untraced and traced passes and prints
 per-layer metrics instead: spans around the benchmark's calls into each
@@ -55,12 +62,16 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PACKAGE = "hadoop_3_0_0_beta1_gaia_spark"
 SETUP_REPS = 2
+SECONDS_PER_PASS = 2.0  # timed passes per run: --seconds / SECONDS_PER_PASS
 MIN_STEADY_PASSES = 3
+# CPU seconds of one calibration kernel run on the reference host, a quiet
+# 4-core Xeon VM (0.21-0.24 measured): the unit of the *_ref_s metrics
+CAL_REF_S = 0.25
 MIN_TRACE_PASSES = 2  # of each kind, untraced and traced, in a traced run
 
 END_TO_END_UNITS = {
-    "setup_s": "s", "first_pass_cpu_s": "s", "pass_cpu_s": "s",
-    "rows_per_cpu_s": "1/s", "ok_frac": "share",
+    "setup_s": "s", "first_pass_ref_s": "s", "pass_ref_s": "s",
+    "rows_per_ref_s": "1/s", "ok_frac": "share",
 }
 
 # Traced-run metrics: per traced pass unless named otherwise (set-up times,
@@ -146,6 +157,7 @@ class Runner:
         self.sizes: dict[str, dict] = {}
         self.ctx_state: dict = {}
         self.cpu: list[float] = []  # CPU seconds of each pass, in order
+        self.cal: list[float] = []  # kernel CPU seconds: before each pass, after the last
 
     # set-up -----------------------------------------------------------------
     def setup(self) -> dict:
@@ -195,14 +207,17 @@ class Runner:
 
     def run_pass(self, index: int, traced: bool, per_job: dict | None = None,
                  check: bool = False) -> float:
-        """One pass over the jobs; returns its wall time in seconds and
-        appends the CPU seconds it used to ``self.cpu``. A checking pass
-        collects every job's rows and compares them with the job's oracle
-        instead of writing them to the noop sink."""
+        """One pass over the jobs, after one run of the calibration kernel;
+        returns its wall time in seconds and appends the CPU seconds it used
+        to ``self.cpu`` and the kernel's to ``self.cal``. A checking pass
+        collects every job's rows instead of writing them to the noop sink,
+        and compares them with the job's oracle after the pass's CPU time is
+        read."""
         from hadoop_3_0_0_beta1_gaia_spark.session import cached_entry_count, force_release_all
 
         tr = self.tr
-        con = self.wl.oracle_connection(self.workload, self.in_dir) if check else None
+        collected = []  # (job, columns, rows) of a checking pass
+        self.cal.append(tr.calibrate(self.spark))
         self.tracer.enabled = traced
         cpu0 = tr.cpu_seconds(os.getpid())
         t0 = time.perf_counter()
@@ -212,10 +227,10 @@ class Runner:
                 with self.tracer.span("job", None, job=name):
                     try:
                         out = self.wl.job_runner(self.workload, name)(self.ctx())
-                        if out.df is not None and con is not None:
-                            err = self.wl.check(con, name, out.df)
-                            if err:
-                                raise RuntimeError(f"output check: {err}")
+                        if out.df is not None and check:
+                            with self.tracer.span("action", out.layer):
+                                rows = [tuple(r) for r in out.df.collect()]
+                            collected.append((name, out.df.columns, rows))
                         elif out.df is not None:
                             with self.tracer.span("action", out.layer):
                                 out.df.write.format("noop").mode("overwrite").save()
@@ -223,8 +238,7 @@ class Runner:
                             raise RuntimeError(
                                 f"{name}: TeraValidate failed {self.ctx_state.get('validation')}")
                     except Exception as ex:  # noqa: BLE001 - count the job, run the rest
-                        self.failed += 1
-                        self.errors.append(f"pass {index} {name}: {ex!r}"[:500])
+                        self._fail(f"pass {index} {name}: {ex!r}")
                         traceback.print_exc(file=sys.stderr)
                     if traced and per_job is not None:
                         tr.drain_listeners(self.spark)
@@ -236,9 +250,18 @@ class Runner:
         self.tracer.enabled = False
         wall = time.perf_counter() - t0
         self.cpu.append(tr.cpu_seconds(os.getpid()) - cpu0)
-        if con is not None:
+        if collected:
+            con = self.wl.oracle_connection(self.workload, self.in_dir)
+            for name, cols, rows in collected:
+                err = self.wl.check(con, name, cols, rows)
+                if err:
+                    self._fail(f"pass {index} output check: {err}")
             con.close()
         return wall
+
+    def _fail(self, msg: str) -> None:
+        self.failed += 1
+        self.errors.append(msg[:500])
 
     def _cache_bytes(self) -> int:
         infos = self.spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -246,32 +269,39 @@ class Runner:
 
     # protocol ---------------------------------------------------------------
     def run(self) -> tuple[dict, dict]:
-        """Set up, then run the cold, checking and timed passes; returns the
+        """Set up, then run the cold checking pass and the timed passes; returns the
         metrics and the set-up timings."""
         self.tracer.enabled = self.trace
         with self.tracer.span("workload", None, workload=self.workload, seed=self.seed):
             with self.tracer.span("setup", None):
                 setup = self.setup()
             self.default_parallelism = self.spark.sparkContext.defaultParallelism
+            prop = self.spark._jvm.java.lang.System.getProperty
+            self.java = f"{prop('java.vm.name')} {prop('java.runtime.version')}"
+            self.tr.calibrate(self.spark)  # unrecorded: the kernel's first run is JIT-cold
             if self.trace:
                 return self._run_traced(setup)
-            first = self.run_pass(0, traced=False)
-            check = self.run_pass(1, traced=False, check=True)
-            steady = []
-            t_end = time.perf_counter() + self.seconds
-            while len(steady) < MIN_STEADY_PASSES or time.perf_counter() < t_end:
-                steady.append(self.run_pass(len(self.cpu), traced=False))
+            first = self.run_pass(0, traced=False, check=True)
+            steady = [self.run_pass(k, traced=False)
+                      for k in range(1, 1 + self.steady_passes())]
+            self.cal.append(self.tr.calibrate(self.spark))  # closes the last timed pass
         rows, _ = self.input_rows()
-        pass_cpu_s = statistics.median(self.cpu[2:])
-        self.passes = {"first_s": first, "check_s": check, "steady_s": steady,
-                       "cpu_s": self.cpu}
+        # host speed as reference kernel CPU over measured kernel CPU: over the
+        # whole run, and over the kernel runs that bracket the timed passes
+        run_speed = CAL_REF_S / statistics.median(self.cal)
+        pass_ref_s = statistics.fmean(self.cpu[1:]) * CAL_REF_S / statistics.fmean(self.cal[1:])
+        self.passes = {"first_s": first, "steady_s": steady,
+                       "cpu_s": self.cpu, "cal_cpu_s": self.cal, "run_speed": run_speed}
         return {
-            "setup_s": setup["setup_s"],
-            "first_pass_cpu_s": self.cpu[0],
-            "pass_cpu_s": pass_cpu_s,
-            "rows_per_cpu_s": rows / pass_cpu_s,
+            "setup_s": setup["setup_s"] * run_speed,
+            "first_pass_ref_s": self.cpu[0] * run_speed,
+            "pass_ref_s": pass_ref_s,
+            "rows_per_ref_s": rows / pass_ref_s,
             "ok_frac": (self.attempted - self.failed) / self.attempted,
         }, setup
+
+    def steady_passes(self) -> int:
+        return max(MIN_STEADY_PASSES, round(self.seconds / SECONDS_PER_PASS))
 
     def _run_traced(self, setup: dict) -> tuple[dict, dict]:
         from collections import defaultdict
@@ -303,16 +333,15 @@ class Runner:
 
         untraced, traced, windows, pass_ids = [], [], [], set()
         with tr.RssSampler() as rss:
-            first = self.run_pass(0, traced=False)
-            check = self.run_pass(1, traced=False, check=True)
+            first = self.run_pass(0, traced=False, check=True)
             t_end = time.perf_counter() + self.seconds
-            k = 2
+            k = 1
             while min(len(untraced), len(traced)) < MIN_TRACE_PASSES or (
                 time.perf_counter() < t_end
             ):
                 # untraced, traced, traced, untraced, ...: a warm-up trend
                 # across passes weighs on both kinds alike
-                if k % 4 in (1, 2):
+                if k % 4 in (0, 1):
                     untraced.append(self.run_pass(k, traced=False))
                 else:
                     n_before = len(self.tracer.spans)
@@ -321,8 +350,8 @@ class Runner:
                     windows.append((w0, w1))
                     pass_ids.add(n_before)  # the pass span is the first recorded
                 k += 1
-        self.passes = {"first_s": first, "check_s": check, "untraced_s": untraced,
-                       "traced_s": traced, "cpu_s": self.cpu}
+        self.passes = {"first_s": first, "untraced_s": untraced,
+                       "traced_s": traced, "cpu_s": self.cpu, "cal_cpu_s": self.cal}
         n = len(traced)
         cores = self.spark.sparkContext.defaultParallelism
         self.stop()
@@ -409,30 +438,28 @@ class Runner:
         import pyspark
 
         rows, nbytes = self.input_rows()
-        java = [
-            line for line in subprocess.run(
-                ["java", "-version"], capture_output=True, text=True
-            ).stderr.splitlines()
-            if not line.startswith("Picked up")
-        ]
         return {
             "workload": self.workload, "seed": self.seed, "scale": self.scale,
             "trace": self.trace, "seconds": self.seconds,
             "nproc": _cores(), "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
             "default_parallelism": self.default_parallelism,
             "pyspark": pyspark.__version__, "duckdb": duckdb.__version__,
-            "java": java[0] if java else None,
+            "java": self.java,
             "python": platform.python_version(),
             "input_rows": rows, "input_bytes": nbytes, "inputs": self.sizes,
             "jobs": self.jobs,
             "protocol": (
                 f"closed loop, 1 client; {SETUP_REPS} cold set-ups, each launching "
-                "a JVM; 1 cold pass; 1 untimed warm-up pass that checks every "
-                "job's output; timed passes for --seconds "
-                f"(at least {MIN_STEADY_PASSES}), noop sink, force_release_all after "
-                "each job; pass cost in CPU seconds of the driver process tree"
-                + ("; traced run alternates untraced and traced passes, per-layer "
-                   "metrics are per traced pass" if self.trace else "")
+                "a JVM; 1 cold pass that collects every job's rows, checked "
+                "against its DuckDB oracle after the pass; "
+                f"{self.steady_passes()} timed passes (--seconds / "
+                f"{SECONDS_PER_PASS:g}, at least {MIN_STEADY_PASSES}), noop sink, "
+                "force_release_all after each job; pass cost in CPU seconds of the "
+                "driver process tree; times scaled to the reference host by a "
+                f"calibration kernel ({CAL_REF_S:g} CPU-s there) run before every "
+                "pass and after the last"
+                + ("; traced run alternates untraced and traced passes for "
+                   "--seconds, per-layer metrics are per traced pass" if self.trace else "")
             ),
             "passes": self.passes, "setup_runs_s": setup["setup_runs_s"],
             "setup_cpu_s": setup["setup_cpu_s"],

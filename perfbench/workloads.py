@@ -220,15 +220,14 @@ def oracle_connection(workload: str, in_dir: str):
     return con
 
 
-def check(con, name: str, df) -> str | None:
-    """Compare ``df`` with the registry oracle of ``name``; None when equal."""
+def check(con, name: str, spark_cols: list[str], spark_rows: list[tuple]) -> str | None:
+    """Compare a job's collected result with the registry oracle of ``name``;
+    None when equal."""
     from hadoop_3_0_0_beta1_gaia_spark.plans.registry import all_entries
 
     sql = all_entries()[name].oracle
     if sql is None:
         return f"{name}: no oracle"
-    spark_cols = df.columns
-    spark_rows = [tuple(r) for r in df.collect()]
     res = con.execute(sql)
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
