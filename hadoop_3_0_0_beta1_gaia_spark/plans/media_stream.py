@@ -30,6 +30,7 @@ from ..streaming.events import (
     dedup_exactly_once,
     read_events_stream,
     run_to_memory,
+    running_user_totals,
     sessionize,
     windowed_counts,
 )
@@ -350,19 +351,12 @@ def stream_late_data_drop(spark, sf_dir):
     "drained updates ARE the final per-user totals — oracle = batch groupBy",
 )
 def stream_user_running_totals(spark, sf_dir):
-    from ..streaming.events import running_user_totals
-
-    stream = read_events_stream(spark, sf_dir)
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("stream_user_totals_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(
+        running_user_totals(read_events_stream(spark, sf_dir)),
+        "stream_user_totals_sink",
+        spark,
+        output_mode="update",
     )
-    q.awaitTermination()
-    return spark.table("stream_user_totals_sink")
 
 
 @register(

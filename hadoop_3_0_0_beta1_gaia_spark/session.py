@@ -11,7 +11,13 @@ hdfs-default.xml dfs.blocksize=128MB).
 - AQE on: runtime coalescing of post-shuffle partitions + skew-join splitting
   replaces hand-tuned reducer counts.
 - shuffle.partitions default kept moderate locally; on a real cluster set it
-  ~2-3x total cores or rely on AQE's initialPartitionNum.
+  ~2-3x total cores or rely on AQE's initialPartitionNum. Batch queries let
+  AQE coalesce it down to the data size. Streaming is the path AQE cannot
+  coalesce: a stateful query fixes its state-partition count when it starts
+  and pays one state-store task per partition on every micro-batch, so
+  ``streaming.events.run_to_memory`` starts each drain with
+  min(shuffle.partitions, defaultParallelism) partitions and leaves the
+  session value as it was.
 - maxPartitionBytes=128m mirrors the reference's HDFS block-sized splits
   (FileInputFormat.getSplits, LIB/input/FileInputFormat.java:386-444).
 - autoBroadcastJoinThreshold raised: every dimension table of the star schema

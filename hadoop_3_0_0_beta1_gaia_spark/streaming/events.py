@@ -263,17 +263,37 @@ def run_to_memory(
     aggregated streams, 'append' otherwise (Spark rejects 'complete' on a
     non-aggregated query, so draining e.g. an exactly-once dedup stream needs
     'append'). Pass explicitly to override — e.g. 'update' for watermarked
-    aggregations where late partials should surface."""
+    aggregations where late partials should surface.
+
+    State is sized to the cores. Streaming is the one path AQE cannot
+    coalesce: a stateful query fixes its state-partition count from
+    ``spark.sql.shuffle.partitions`` when it starts (and records it in the
+    checkpoint), and every micro-batch then runs one state-store task per
+    partition whatever the batch size. The drain therefore starts with
+    ``min(spark.sql.shuffle.partitions, defaultParallelism)`` partitions — one
+    wave of tasks per batch — and restores the session value once ``start()``
+    returns or raises. ``StreamExecution`` clones the session in its
+    constructor, so the running query keeps the smaller count while batch
+    queries keep the session's value. Premise: one query at a time on this
+    session, as for the ``StateStore.stop()`` unload below."""
     if output_mode is None:
         plan = stream_df._jdf.queryExecution().analyzed().toString()
         output_mode = "complete" if "Aggregate" in plan else "append"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    key = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(key)
+    spark.conf.set(
+        key, str(min(int(session_parts), spark.sparkContext.defaultParallelism))
     )
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(table_name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, session_parts)
     q.awaitTermination()
     # r12 (guide §5): unload the terminated query's state-store providers.
     # Stateful availableNow drains (dropDuplicates, stream-stream joins,

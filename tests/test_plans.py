@@ -724,17 +724,20 @@ def test_capped_lsh_filters_buckets_before_expansion(spark, sf_dir):
     """The 100 TB LSH configuration must apply the bucket-size cap BEFORE
     pair expansion (dropping a mega-bucket after expanding it would defeat
     the point). In formatted explain, node ids are leaf-first — lower id
-    executes earlier — so the cap filter's id must be below the
-    pair-expansion Generate's, with the observation counter in between."""
+    executes earlier — so the cap filter's id must be below that of the
+    pair-expansion kernel (the MapInArrow emitting id_a/id_b), with the
+    observation counter in between."""
     import re
 
     p = _plan(spark, sf_dir, "dedup_minhash_lsh_capped")
     cap = re.search(
         r"\((\d+)\) Filter\nInput[^\n]*\nCondition : \(size\(ids#\d+, false\) <= 2\)", p
     )
-    gen = re.search(r"\((\d+)\) Generate\nInput[^\n]*\nArguments: explode\(flatten", p)
-    assert cap and gen, p[:2000]
-    assert int(cap.group(1)) < int(gen.group(1)), "cap applied after expansion"
+    expand = re.search(
+        r"\((\d+)\) MapInArrow\nInput[^\n]*\nArguments: [^\n]*\[id_a#\d+L, id_b#\d+L\]", p
+    )
+    assert cap and expand, p[:2000]
+    assert int(cap.group(1)) < int(expand.group(1)), "cap applied after expansion"
     assert "lsh_dropped_buckets" in p  # the drop counter rides the frame
 
 

@@ -236,6 +236,71 @@ def test_stream_equals_batch_sliding_topk(spark, sf_dir):
     assert max(r["rank"] for r in batch_out.collect()) <= 3
 
 
+def test_run_to_memory_sizes_state_to_cores(spark, sf_dir):
+    """A drained stateful query runs min(shuffle.partitions,
+    defaultParallelism) state partitions — streaming is the path AQE cannot
+    coalesce — while the session keeps its own value afterwards, also when
+    start() raises."""
+    import threading
+
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from hadoop_3_0_0_beta1_gaia_spark.streaming.events import (
+        read_events_stream,
+        run_to_memory,
+        sliding_counts,
+    )
+
+    class Listener(StreamingQueryListener):
+        def __init__(self):
+            self.parts = []
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):  # noqa: N802
+            pass
+
+        def onQueryProgress(self, event):  # noqa: N802
+            self.parts += [s.numShufflePartitions for s in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):  # noqa: N802
+            pass
+
+        def onQueryTerminated(self, event):  # noqa: N802
+            self.done.set()
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    before = spark.conf.get(key)
+    # more partitions than cores, so the drain must size down
+    spark.conf.set(key, str(cores + 3))
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        run_to_memory(
+            sliding_counts(read_events_stream(spark, sf_dir)),
+            "state_sizing_sink",
+            spark,
+        )
+        assert listener.done.wait(60)
+        assert spark.conf.get(key) == str(cores + 3)
+        assert listener.parts and set(listener.parts) == {cores}
+
+        # complete mode on a non-aggregated stream fails inside start()
+        with pytest.raises(AnalysisException):
+            run_to_memory(
+                read_events_stream(spark, sf_dir),
+                "state_sizing_bad_sink",
+                spark,
+                output_mode="complete",
+            )
+        assert spark.conf.get(key) == str(cores + 3)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, before)
+
+
 def test_checkpoint_restart_resumes_incrementally(spark, tmp_path):
     """Exactly-once across restarts: a checkpointed file-source stream stopped
     and restarted with MORE files must process only the new files (offset
