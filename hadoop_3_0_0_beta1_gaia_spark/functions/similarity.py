@@ -5,6 +5,12 @@ the scale path. Dot products stay inside Catalyst (`zip_with` + `aggregate`
 fold — element-order summation, which DuckDB's list functions share, so
 results are oracle-comparable after rounding).
 
+Every numpy kernel of the vector family (here and in ``plans/index_sketch``)
+folds through the one :func:`fold_dots` / :func:`fold_norms` pair below:
+per element ``0.0 + a0*b0 + a1*b1 + ...`` in dimension order, the IEEE op
+sequence of the :func:`dot` ``F.aggregate`` left fold and of DuckDB's
+``list_dot_product``, so kernel results are bit-identical to both.
+
 Scale notes: brute-force is O(Q·N·d) — fine for a re-rank stage or small Q;
 the IVF path shrinks N per query to one bucket (centroid assignment is a
 broadcast join: centroids are tiny by construction). At 100 TB the pattern is
@@ -29,6 +35,48 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
+
+
+def fold_dots(A, B):
+    """(n, d) x (m, d) -> (n, m) dot products with :func:`dot`'s exact IEEE
+    op sequence: per element 0.0 + a0·b0, then + a1·b1, ... in dimension
+    order (no BLAS — its blocked summation differs at the last ulp).
+
+    Both sides are transposed to contiguous (d, ·) so every inner multiply
+    streams contiguous memory (column slices of the (n, d) layout are
+    512-byte-strided — measured 13 core-s per tile, ~100 MFLOP/s). The
+    accumulator is chunked so the (rows × m) slab stays cache-resident
+    across the d-loop: folding the FULL matrix once per dimension reads and
+    writes an O(n·m) array d times (~25 GB of memory traffic per 3.5k-row
+    tile — measured bandwidth-bound at 205 s for the sf10 semantic pass)."""
+    import numpy as np
+
+    At = np.ascontiguousarray(A.T)
+    Bt = np.ascontiguousarray(B.T)
+    n, m = A.shape[0], B.shape[0]
+    acc = np.empty((n, m), dtype=np.float64)
+    # ~256 KB accumulator slab (L2-resident; swept 16K-1M, 32K best)
+    bi = max(1, 32768 // max(m, 1))
+    tmp = np.empty((min(bi, n), m), dtype=np.float64)
+    for i0 in range(0, n, bi):
+        i1 = min(i0 + bi, n)
+        a = acc[i0:i1]
+        t = tmp[: i1 - i0]
+        a.fill(0.0)
+        for d in range(At.shape[0]):
+            np.multiply(At[d, i0:i1, None], Bt[d, None, :], out=t)
+            a += t
+    return acc
+
+
+def fold_norms(V):
+    """(n, d) -> (n,) squared norms by the same dimension-order fold."""
+    import numpy as np
+
+    acc = np.zeros(V.shape[0], dtype=np.float64)
+    for col in V.T:
+        acc += col * col
+    return acc
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -140,82 +188,6 @@ def cosine_near_dup(
     )
 
 
-def cosine_near_dup_vectorized(
-    df: DataFrame,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Bit-identical fast path for :func:`cosine_near_dup` (same contract,
-    same IEEE op order — see :func:`cosine_topk_vectorized`).
-
-    The full (small) vector matrix is closed over and each partition streams
-    its block of the pair matrix — an O(n²) BASELINE VERIFIER by design: it
-    exists to anchor the bucketed paths (:func:`cosine_near_dup_lsh`, IVF),
-    which are the 100 TB route. The closure is n·d doubles; past ~1e6 vectors
-    use the bucketed paths, full stop."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    from ..session import ensure_parallelism
-
-    base = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec"))
-    )
-    rows = base.collect()
-    all_ids = np.array([r["id"] for r in rows], dtype=np.int64)
-    M = np.array([r["__vec"] for r in rows], dtype=np.float64)
-    scale = float(10**round_digits)
-
-    def _fold_dots(V, Q):
-        acc = np.zeros((V.shape[0], Q.shape[0]), dtype=np.float64)
-        for d in range(V.shape[1]):
-            acc += np.outer(V[:, d], Q[:, d])
-        return acc
-
-    def _fold_norms(V):
-        acc = np.zeros(V.shape[0], dtype=np.float64)
-        for d in range(V.shape[1]):
-            acc += V[:, d] * V[:, d]
-        return acc
-
-    all_n2 = _fold_norms(M)
-
-    schema = StructType(
-        [
-            StructField("a_id", LongType(), False),
-            StructField("b_id", LongType(), False),
-            StructField("cos", DoubleType(), False),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(list(pdf["__vec"]), dtype=np.float64)
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            nn = _fold_norms(V)
-            # norm floored at 1e-300 (same contract as cosine_topk_numpy and
-            # the DuckDB oracle): a zero-norm vector yields cos=0 — excluded —
-            # on BOTH engines, instead of numpy NaN (excluded) vs SQL NaN
-            # (sorts greater-than-everything: included)
-            cos = _fold_dots(V, M) / np.sqrt(
-                np.maximum(np.outer(nn, all_n2), 1e-300)
-            )
-            cos = np.floor(cos * scale + 0.5) / scale
-            # emit each unordered pair once: partition row id < global id
-            keep = (ids[:, None] < all_ids[None, :]) & (cos >= threshold)
-            ai, bj = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"a_id": ids[ai], "b_id": all_ids[bj], "cos": cos[ai, bj]}
-            )
-
-    return base.mapInPandas(kernel, schema=schema)
-
-
 def cosine_near_dup_blocked(
     df: DataFrame,
     threshold: float = 0.35,
@@ -227,86 +199,26 @@ def cosine_near_dup_blocked(
     """Distributed exact O(n²) near-dup: block-partitioned pair matrix.
 
     Same contract and IEEE op order as :func:`cosine_near_dup` (asserted in
-    tests), but the pair space is tiled: vectors group into ``num_blocks``
-    blocks (``id % num_blocks`` — deterministic), the K(K+1)/2 block PAIRS
-    join as single rows carrying two vector blocks, and an Arrow kernel
-    computes each tile with the bit-identical per-dimension fold. Versus the
-    per-pair expression fold this moves ~n²·d interpreted ops into ~K²
-    vectorized tiles; versus the closure kernel
-    (:func:`cosine_near_dup_vectorized`) nothing is collected to the driver.
+    tests), but the pair space is tiled: the whole corpus is ONE bucket of
+    :func:`_tile_cos_pairs`, so vectors group into ``num_blocks`` blocks
+    (``id % num_blocks`` — deterministic), the K(K+1)/2 block PAIRS join as
+    single rows carrying two vector blocks, and an Arrow kernel computes
+    each tile with the shared fold (:func:`fold_dots`). Versus the per-pair
+    expression fold this moves ~n²·d interpreted ops into ~K² vectorized
+    tiles, and nothing is collected to the driver. The norm product is
+    floored at 1e-300, as in the expression and the DuckDB oracle.
 
     Still quadratic by design — the correctness anchor for the bucketed
     paths (:func:`cosine_near_dup_lsh`, IVF), which are the 100 TB route.
     On a cluster pick num_blocks ≈ n / (vectors that fit one task's memory);
     tile rows are two blocks ≈ 2·(n/K)·d doubles each.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     base = df.select(
-        (F.col(id_col) % num_blocks).alias("blk"),
-        F.struct(
-            F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
-        ).alias("row"),
+        F.col(id_col).alias("id"),
+        as_double(F.col(vec_col)).alias("v"),
+        F.lit(0).alias("bucket"),
     )
-    blocks = base.groupBy("blk").agg(F.collect_list("row").alias("rows"))
-    a = blocks.select(F.col("blk").alias("a_blk"), F.col("rows").alias("a_rows"))
-    b = blocks.select(F.col("blk").alias("b_blk"), F.col("rows").alias("b_rows"))
-    tiles = a.join(b, F.col("a_blk") <= F.col("b_blk"))
-
-    scale = float(10**round_digits)
-    schema = StructType(
-        [
-            StructField("a_id", LongType(), False),
-            StructField("b_id", LongType(), False),
-            StructField("cos", DoubleType(), False),
-        ]
-    )
-
-    def _fold_dots(V, Q):
-        acc = np.zeros((V.shape[0], Q.shape[0]), dtype=np.float64)
-        for d in range(V.shape[1]):
-            acc += np.outer(V[:, d], Q[:, d])
-        return acc
-
-    def _fold_norms(V):
-        acc = np.zeros(V.shape[0], dtype=np.float64)
-        for d in range(V.shape[1]):
-            acc += V[:, d] * V[:, d]
-        return acc
-
-    def _unpack(cell):
-        ids = np.fromiter((r["id"] for r in cell), dtype=np.int64, count=len(cell))
-        M = np.array([r["v"] for r in cell], dtype=np.float64)
-        return ids, M
-
-    def kernel(batches):
-        for pdf in batches:
-            for a_blk, a_rows, b_blk, b_rows in zip(
-                pdf["a_blk"], pdf["a_rows"], pdf["b_blk"], pdf["b_rows"]
-            ):
-                ia, A = _unpack(a_rows)
-                ib, B = _unpack(b_rows)
-                # norm floored at 1e-300 — zero-norm rows give cos=0 (excluded)
-                # on both engines; see the note in cosine_near_dup_vectorized
-                cos = _fold_dots(A, B) / np.sqrt(
-                    np.maximum(np.outer(_fold_norms(A), _fold_norms(B)), 1e-300)
-                )
-                cos = np.floor(cos * scale + 0.5) / scale
-                keep = cos >= threshold
-                if a_blk == b_blk:
-                    keep &= ia[:, None] < ib[None, :]
-                ai, bj = np.nonzero(keep)
-                if not len(ai):
-                    continue
-                # each unordered pair appears in exactly one tile (a_blk <=
-                # b_blk); normalize output ordering to a_id < b_id
-                lo = np.minimum(ia[ai], ib[bj])
-                hi = np.maximum(ia[ai], ib[bj])
-                yield pd.DataFrame({"a_id": lo, "b_id": hi, "cos": cos[ai, bj]})
-
-    return tiles.mapInPandas(kernel, schema=schema)
+    return _tile_cos_pairs(base, num_blocks, threshold, round_digits, 1e-300)
 
 
 def duckdb_cosine_near_dup(
@@ -330,87 +242,6 @@ def duckdb_cosine_near_dup(
     """
 
 
-def cosine_topk_numpy(
-    df: DataFrame,
-    k: int = 5,
-    query_filter: Column | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Vectorized brute-force top-k: the throughput variant of
-    :func:`cosine_topk` for when the query batch is small.
-
-    Query vectors are collected to the driver (the re-rank batch — small by
-    construction) and closed over into an Arrow-batched mapInPandas kernel
-    that computes the cosine block with one BLAS matmul per batch, keeping a
-    per-partition top-k before a tiny global window. ~5-10× faster than the
-    expression fold. Output cosines are floor-rounded to ``round_digits``
-    BEFORE ranking (the same rounding contract as :func:`cosine_topk`), and
-    zero-norm vectors on either side are floored to avoid NaN columns — but
-    the BLAS matmul's summation order differs from the JVM fold at the last
-    ulp, so ranking can still flip on exact rounding boundaries: the
-    ORACLE-CHECKED path stays :func:`cosine_topk` / the bit-identical
-    :func:`cosine_topk_vectorized`. Use this one inside IVF buckets /
-    re-rank stages where throughput beats bit-reproducibility.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    q_df = df.filter(query_filter) if query_filter is not None else df
-    q_rows = q_df.select(id_col, vec_col).collect()  # small re-rank batch
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    Q = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    qn = np.maximum(np.linalg.norm(Q, axis=1), 1e-300)
-    scale = float(10**round_digits)
-
-    schema = StructType(
-        [
-            StructField("q_id", LongType(), False),
-            StructField("n_id", LongType(), False),
-            StructField("cos", DoubleType(), False),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vn = np.linalg.norm(V, axis=1)
-            cos = (V @ Q.T) / np.outer(np.maximum(vn, 1e-300), qn)  # b×q
-            cos = np.floor(cos * scale + 0.5) / scale  # rank on rounded cos
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(q_ids)):
-                col = cos[:, j]
-                mask = ids != q_ids[j]
-                cand = np.where(mask)[0]
-                if not len(cand):
-                    continue
-                # prune under the FINAL total order (cos desc, n_id asc) so
-                # the partition-local top-k can never drop a global winner
-                top = cand[np.lexsort((ids[cand], -col[cand]))[:k]]
-                out_q.extend([q_ids[j]] * len(top))
-                out_n.extend(ids[top])
-                out_c.extend(col[top])
-            yield pd.DataFrame({"q_id": out_q, "n_id": out_n, "cos": out_c})
-
-    partial = df.select(id_col, vec_col).mapInPandas(kernel, schema=schema)
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cos", "rank")
-    )
-
-
 def cosine_topk_vectorized(
     df: DataFrame,
     k: int = 5,
@@ -424,12 +255,12 @@ def cosine_topk_vectorized(
 
     The expression fold evaluates one interpreted add/mul pair per dimension
     per candidate pair — the hot cost of brute-force kNN. This kernel keeps
-    the EXACT same IEEE operation sequence (accumulate dimension 0..d-1 in a
-    left fold: ``acc += v[d] * q[d]``, norms likewise, then
-    ``dot / sqrt(qn * nn)`` and the floor-rounding trick), but vectorizes
-    each step across the whole Arrow batch with numpy — so results are
-    bit-for-bit equal to :func:`cosine_topk` (asserted in tests) while the
-    per-pair interpreter overhead disappears (~5-10×).
+    the EXACT same IEEE operation sequence (the shared :func:`fold_dots` /
+    :func:`fold_norms` left fold, then ``dot / sqrt(qn * nn)`` and the
+    floor-rounding trick), but vectorizes each step across the whole Arrow
+    batch with numpy — so results are bit-for-bit equal to
+    :func:`cosine_topk` (asserted in tests) while the per-pair interpreter
+    overhead disappears (~5-10×).
 
     Query vectors (the small filtered batch) are collected and closed over;
     neighbors stream through ``mapInPandas`` with a per-partition top-k under
@@ -457,26 +288,8 @@ def cosine_topk_vectorized(
     q_df = base.filter(query_filter) if query_filter is not None else base
     q_rows = q_df.collect()  # small query batch
     q_ids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["__vec"] for r in q_rows], dtype=np.float64)
-    if vec_transform is not None:
-        Q = vec_transform(Q)
+    q_vecs = np.array([r["__vec"] for r in q_rows], dtype=np.float64)
     scale = float(10**round_digits)
-
-    def _fold_dots(V: "np.ndarray", Q: "np.ndarray") -> "np.ndarray":
-        # acc[i, j] = ((v[i,0]*q[j,0]) + v[i,1]*q[j,1]) + ... — same
-        # association order as F.aggregate's left fold.
-        acc = np.zeros((V.shape[0], Q.shape[0]), dtype=np.float64)
-        for d in range(V.shape[1]):
-            acc += np.outer(V[:, d], Q[:, d])
-        return acc
-
-    def _fold_norms(V: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(V.shape[0], dtype=np.float64)
-        for d in range(V.shape[1]):
-            acc += V[:, d] * V[:, d]
-        return acc
-
-    qn = _fold_norms(Q)
 
     schema = StructType(
         [
@@ -491,11 +304,14 @@ def cosine_topk_vectorized(
             if not len(pdf):
                 continue
             V = np.array(list(pdf["__vec"]), dtype=np.float64)
+            # shaped where d is known: an empty query set is (0, d), so the
+            # fold and vec_transform run on it unchanged and emit no rows
+            Q = q_vecs.reshape(len(q_ids), V.shape[1])
             if vec_transform is not None:
-                V = vec_transform(V)
+                V, Q = vec_transform(V), vec_transform(Q)
             ids = pdf["id"].to_numpy(dtype=np.int64)
-            nn = _fold_norms(V)
-            cos = _fold_dots(V, Q) / np.sqrt(np.outer(nn, qn))  # b×q
+            denom = np.outer(fold_norms(V), fold_norms(Q))
+            cos = fold_dots(V, Q) / np.sqrt(denom)  # b×q
             cos = np.floor(cos * scale + 0.5) / scale  # fround, same IEEE ops
             out_q, out_n, out_c = [], [], []
             for j in range(len(q_ids)):
@@ -589,12 +405,11 @@ def _tile_cos_pairs(
 
     ``base`` must carry (id, v, bucket). Vectors group into cells
     (collect_list), the K(K+1)/2 same-bucket block pairs join as single tile
-    rows, and the kernel computes each tile with the bit-identical
-    per-dimension fold of the expression path: left-fold dot in element
-    order (:func:`dot`), norms re-derived with the same d-order fold
-    ``with_norm`` uses, fround's floor(x·scale+0.5)/scale. ``norm_floor``
+    rows, and the kernel computes each tile with the shared fold
+    (:func:`fold_dots`, :func:`fold_norms` — the :func:`dot` / ``with_norm``
+    op order) and fround's floor(x·scale+0.5)/scale. ``norm_floor``
     mirrors the caller's expression: 1e-300 where the oracle floors the norm
-    product (the LSH path), None for the plain ``dot/sqrt(ni*nj)``
+    product (the LSH and blocked paths), None for the plain ``dot/sqrt(ni*nj)``
     expression — a 0/0 NaN is excluded by both paths (Spark's floor→BIGINT
     turns NaN into 0, numpy keeps NaN; both fail ``>= threshold``), and no
     fixture has zero-norm vectors anyway.
@@ -645,43 +460,9 @@ def _tile_cos_pairs(
         ]
     )
 
-    def _fold_dots(At, Bt):
-        # Inputs are TRANSPOSED (d, n) contiguous so every inner multiply
-        # streams contiguous memory (column slices of the (n, d) layout are
-        # 512-byte-strided — measured 13 core-s per tile, ~100 MFLOP/s).
-        # The accumulator is chunked so the (rows × m) slab stays
-        # cache-resident across the d-loop: folding the FULL tile once per
-        # dimension reads and writes an O(cell²) array d times (~25 GB of
-        # memory traffic per 3.5k-row tile — measured bandwidth-bound at
-        # 205 s for the sf10 semantic pass). Per element the op sequence is
-        # unchanged: 0.0 + a0·b0, then + a1·b1, ... — the exact
-        # expression-fold order.
-        n, m = At.shape[1], Bt.shape[1]
-        acc = np.empty((n, m), dtype=np.float64)
-        bi = max(1, 32768 // max(m, 1))  # ~256 KB accumulator slab (L2-resident; swept 16K-1M, 32K best)
-        tmp = np.empty((min(bi, n), m), dtype=np.float64)
-        for i0 in range(0, n, bi):
-            i1 = min(i0 + bi, n)
-            a = acc[i0:i1]
-            t = tmp[: i1 - i0]
-            a.fill(0.0)
-            for d in range(At.shape[0]):
-                np.multiply(At[d, i0:i1, None], Bt[d, None, :], out=t)
-                a += t
-        return acc
-
-    def _fold_norms(Vt):
-        acc = np.zeros(Vt.shape[1], dtype=np.float64)
-        for d in range(Vt.shape[0]):
-            acc += Vt[d] * Vt[d]
-        return acc
-
     def _unpack(cell):
         ids = np.fromiter((r["id"] for r in cell), dtype=np.int64, count=len(cell))
-        Mt = np.ascontiguousarray(
-            np.array([r["v"] for r in cell], dtype=np.float64).T
-        )
-        return ids, Mt
+        return ids, np.array([r["v"] for r in cell], dtype=np.float64)
 
     def kernel(batches):
         for pdf in batches:
@@ -690,13 +471,13 @@ def _tile_cos_pairs(
             ):
                 ia, A = _unpack(a_rows)
                 ib, B = _unpack(b_rows)
-                denom = np.outer(_fold_norms(A), _fold_norms(B))
+                denom = np.outer(fold_norms(A), fold_norms(B))
                 if norm_floor is not None:
                     # zero-norm rows give cos=0 (excluded) on both engines,
-                    # matching the old kernel and the DuckDB oracle
+                    # matching the floored expression and the DuckDB oracle
                     denom = np.maximum(denom, norm_floor)
                 with np.errstate(invalid="ignore", divide="ignore"):
-                    cos = _fold_dots(A, B) / np.sqrt(denom)
+                    cos = fold_dots(A, B) / np.sqrt(denom)
                 cos = np.floor(cos * scale + 0.5) / scale
                 keep = cos >= threshold
                 if a_blk == b_blk:

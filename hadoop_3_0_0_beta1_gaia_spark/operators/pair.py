@@ -7,8 +7,8 @@ home for that model: a thin veneer over DataFrame ops so "a MapReduce job"
 is expressible while Catalyst still owns planning.
 
 Design notes:
-- map/flat_map take *expressions* first (JVM path); arbitrary-Python variants
-  route through mapInPandas (Arrow batches), never row-at-a-time RDD lambdas.
+- map/flat_map take *expressions* (JVM path); arbitrary-Python mappers are a
+  plain ``df.mapInPandas`` (Arrow batches), never row-at-a-time RDD lambdas.
 - reduce_by_key / combine_by_key are groupBy.agg — partial aggregation (the
   Combiner) is automatic in Catalyst's HashAggregate.
 - counters use DataFrame.observe (exact, unlike accumulators under retries —
@@ -19,7 +19,7 @@ Design notes:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -41,14 +41,6 @@ def flat_map_values(df: DataFrame, values_expr: Column) -> DataFrame:
     """Mapper with 1→N emit over an array expression (explode — the
     TokenCounterMapper shape)."""
     return df.select(F.col("key"), F.explode(values_expr).alias("value"))
-
-
-def map_kv_pandas(
-    df: DataFrame, fn: Callable[..., "Iterator"], schema: str
-) -> DataFrame:
-    """Arbitrary-Python mapper — the Mapper.map escape hatch. Arrow-batched
-    (mapInPandas), never per-row Python."""
-    return df.mapInPandas(fn, schema=schema)
 
 
 def reduce_by_key(df: DataFrame, agg: Column, out: str = "value") -> DataFrame:

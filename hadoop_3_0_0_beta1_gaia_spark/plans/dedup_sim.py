@@ -393,9 +393,10 @@ def dedup_cluster_canonical_capped(spark, sf_dir):
     "dedup_embedding_cosine",
     oracle=duckdb_cosine_near_dup("embeddings", **_NEARDUP),
     ref="embedding-cosine near-dup pairs — exact O(n²) baseline, fully distributed: "
-    "block-partitioned pair tiles + Arrow kernel with the bit-identical per-dim fold "
-    "(no driver collect, no per-pair interpreted expressions — 30x over the "
-    "expression cross join at sf0.1; cosine_near_dup stays the expression anchor, "
+    "the corpus is one bucket of the LSH entry's tile kernel (id % K block-pair "
+    "tiles, Arrow kernel over the shared similarity.fold_dots fold; no driver "
+    "collect, no per-pair interpreted expressions — 30x over the expression "
+    "cross join at sf0.1; cosine_near_dup stays the expression anchor, "
     "equality asserted in tests; LSH/IVF entries are the 100 TB scale path)",
 )
 def dedup_embedding_cosine(spark, sf_dir):

@@ -1116,11 +1116,14 @@ def maxsim_multivector_topk(spark, sf_dir):
     from ..functions.similarity import as_double
 
     emb = T(spark, sf_dir, "embeddings")
-    qvec = (
+    q_rows = (
         emb.filter(F.col("vec_id") == _MS_QID)
         .select(as_double(F.col("embedding")).alias("qv"))
-        .collect()[0]["qv"]
+        .collect()
     )
+    if not q_rows:  # no query vector: the oracle's cross join is empty too
+        return spark.createDataFrame([], "n_id long, maxsim double, rank long")
+    qvec = q_rows[0]["qv"]
     d = emb.filter(F.col("vec_id") != _MS_QID).select(
         F.col("vec_id").alias("n_id"), as_double(F.col("embedding")).alias("dv")
     )
@@ -1181,19 +1184,13 @@ def maxsim_scored_vectorized(d, qvec):
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+    from ..functions.similarity import fold_dots, fold_norms
+
     scale = float(10**6)
-    q = [
-        [float(v) for v in qvec[i * _MS_SUBDIM : (i + 1) * _MS_SUBDIM]]
-        for i in range(_MS_SUB)
-    ]
-    # query-side norms: scalar left fold, the same IEEE sequence as the
-    # engine's dot(qsub, qsub) over the literal array
-    qn = []
-    for i in range(_MS_SUB):
-        acc = 0.0
-        for t in range(_MS_SUBDIM):
-            acc += q[i][t] * q[i][t]
-        qn.append(acc)
+    # query sub-vectors as rows: the fold's per-element op sequence is that
+    # of the engine's dot(qsub, dsub) over the literal array
+    Qs = np.array(qvec[:_MS_DIM], dtype=np.float64).reshape(_MS_SUB, _MS_SUBDIM)
+    qn = fold_norms(Qs)
 
     schema = StructType(
         [
@@ -1208,24 +1205,17 @@ def maxsim_scored_vectorized(d, qvec):
                 continue
             V = np.array(list(pdf["dv"]), dtype=np.float64)
             ids = pdf["n_id"].to_numpy(dtype=np.int64)
-            nn = []
+            # best[:, i]: max over document sub-vectors j (in order) of the
+            # rounded cosine against query sub-vector i
+            best = None
             for j in range(_MS_SUB):
-                acc = np.zeros(len(V), dtype=np.float64)
-                for t in range(_MS_SUBDIM):
-                    col = V[:, j * _MS_SUBDIM + t]
-                    acc += col * col
-                nn.append(acc)
-            total = None
-            for i in range(_MS_SUB):
-                m_i = None
-                for j in range(_MS_SUB):
-                    acc = np.zeros(len(V), dtype=np.float64)
-                    for t in range(_MS_SUBDIM):
-                        acc += q[i][t] * V[:, j * _MS_SUBDIM + t]
-                    c = acc / np.sqrt(qn[i] * nn[j])
-                    c = np.floor(c * scale + 0.5) / scale  # fround
-                    m_i = c if m_i is None else np.maximum(m_i, c)
-                total = m_i if total is None else total + m_i
+                Vj = V[:, j * _MS_SUBDIM : (j + 1) * _MS_SUBDIM]
+                c = fold_dots(Vj, Qs) / np.sqrt(np.outer(fold_norms(Vj), qn))
+                c = np.floor(c * scale + 0.5) / scale  # fround
+                best = c if best is None else np.maximum(best, c)
+            total = best[:, 0]
+            for i in range(1, _MS_SUB):
+                total = total + best[:, i]
             total = np.floor(total * scale + 0.5) / scale
             yield pd.DataFrame({"n_id": ids, "maxsim": total})
 
@@ -1390,28 +1380,6 @@ def _bitext_pairs_expr(spark, sf_dir):
     )
 
 
-def _bt_fold_dots(V, Q):
-    """|V|x|Q| dot-product matrix with the expression fold's exact IEEE op
-    sequence: one accumulation per dimension, in dimension order (matches
-    DuckDB's list_dot_product and the F.aggregate left fold bit-for-bit)."""
-    import numpy as np
-
-    acc = np.zeros((V.shape[0], Q.shape[0]), dtype=np.float64)
-    for dim in range(V.shape[1]):
-        acc += np.outer(V[:, dim], Q[:, dim])
-    return acc
-
-
-def _bt_fold_norms(V):
-    """Per-row squared norms via the same per-dimension left fold."""
-    import numpy as np
-
-    acc = np.zeros(V.shape[0], dtype=np.float64)
-    for dim in range(V.shape[1]):
-        acc += V[:, dim] * V[:, dim]
-    return acc
-
-
 def bitext_pairs_vectorized(spark, sf_dir):
     """(a_id, b_id, cos_e6) for every cross-side pair — the µ-unit-frozen
     cosine computed by a numpy mapInPandas kernel with the EXACT IEEE op
@@ -1423,7 +1391,7 @@ def bitext_pairs_vectorized(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from ..functions.similarity import as_double
+    from ..functions.similarity import as_double, fold_dots, fold_norms
 
     emb = T(spark, sf_dir, "embeddings")
     a_rows = (
@@ -1432,10 +1400,7 @@ def bitext_pairs_vectorized(spark, sf_dir):
         .collect()
     )
     a_ids = np.array([r["vec_id"] for r in a_rows], dtype=np.int64)
-    A = np.array([r["v"] for r in a_rows], dtype=np.float64)
-    _fold_dots, _fold_norms = _bt_fold_dots, _bt_fold_norms
-
-    an = _fold_norms(A)
+    a_vecs = np.array([r["v"] for r in a_rows], dtype=np.float64)
     schema = StructType(
         [
             StructField("a_id", LongType(), False),
@@ -1450,8 +1415,10 @@ def bitext_pairs_vectorized(spark, sf_dir):
                 continue
             V = np.array(list(pdf["v"]), dtype=np.float64)
             b_ids = pdf["b_id"].to_numpy(dtype=np.int64)
-            nn = _fold_norms(V)
-            cos = _fold_dots(V, A) / np.sqrt(np.outer(nn, an))  # |B|x|A|
+            # shaped where d is known: an empty side A is (0, d)
+            A = a_vecs.reshape(len(a_ids), V.shape[1])
+            denom = np.outer(fold_norms(V), fold_norms(A))
+            cos = fold_dots(V, A) / np.sqrt(denom)  # |B|x|A|
             c6 = np.floor(cos * 1_000_000 + 0.5).astype(np.int64)
             na, nb = len(a_ids), len(b_ids)
             yield pd.DataFrame(
@@ -1562,8 +1529,9 @@ def _bitext_capped_oracle() -> str:
     "sides shuffle ONCE keyed by bucket (corpus-sized, never pair-sized) "
     "and each bucket's |A_b| x |B_b| cosine block is one vectorized matrix "
     "product with the expression fold's exact IEEE op sequence "
-    "(_bt_fold_dots — bit-equal to DuckDB's list_dot_product, pinned by "
-    "the uncapped kernel's equality test), frozen to µ-unit BIGINTs "
+    "(the shared similarity.fold_dots — bit-equal to DuckDB's "
+    "list_dot_product, pinned by the uncapped kernel's equality test), "
+    "frozen to µ-unit BIGINTs "
     "before the margin windows",
 )
 def bitext_margin_mining_capped(spark, sf_dir):
@@ -1577,7 +1545,7 @@ def bitext_pairs_ivf_capped(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from ..functions.similarity import as_double, ivf_probes
+    from ..functions.similarity import as_double, fold_dots, fold_norms, ivf_probes
 
     emb = T(spark, sf_dir, "embeddings").filter(
         F.col("label").isin(_BT_A, _BT_B)
@@ -1624,9 +1592,8 @@ def bitext_pairs_ivf_capped(spark, sf_dir):
         b_ids = bdf["b_id"].to_numpy(dtype=np.int64)
         A = np.array(list(adf["v"]), dtype=np.float64)
         B = np.array(list(bdf["bv"]), dtype=np.float64)
-        an = _bt_fold_norms(A)
-        bn = _bt_fold_norms(B)
-        cos = _bt_fold_dots(B, A) / np.sqrt(np.outer(bn, an))  # |B|x|A|
+        denom = np.outer(fold_norms(B), fold_norms(A))
+        cos = fold_dots(B, A) / np.sqrt(denom)  # |B|x|A|
         c6 = np.floor(cos * 1_000_000 + 0.5).astype(np.int64)
         na, nb = len(a_ids), len(b_ids)
         return pd.DataFrame(

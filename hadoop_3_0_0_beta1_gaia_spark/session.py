@@ -133,16 +133,6 @@ def stage_dir(prefix: str, sf_dir: str, name: str) -> str:
     return os.path.join(prefix, sf_dir.strip("/").replace("/", "_"), name)
 
 
-def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; return the frames."""
-    out = {}
-    for name in TABLES:
-        df = table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Spread a narrow scan across the cluster before CPU-heavy map work.
 

@@ -404,34 +404,45 @@ def test_binary_partition_colocates_key_slices(spark):
     assert all(r["n_pids"] == 1 for r in per_group.collect())
 
 
-# ----------------------------------------------------------------- similarity
-
-
-def test_cosine_topk_numpy_matches_exact(spark, sf_dir):
-    """The BLAS fast path must agree with the oracle-checked expression fold
-    (identical neighbor sets; cosines equal to 1e-9)."""
-    from pyspark.sql import functions as F
-
-    from hadoop_3_0_0_beta1_gaia_spark.functions.similarity import (
-        cosine_topk,
-        cosine_topk_numpy,
+@pytest.mark.parametrize(
+    "how",
+    ["map_kv+partition_by", "partition_by_expr", "keyfield_field", "keyfield_slice"],
+)
+def test_key_partitioners_colocate_equal_keys(spark, how):
+    """Mapper emit + HashPartitioner and KeyFieldBasedPartitioner contracts:
+    rows with equal keys land in one partition, and the keys spread over
+    more than one."""
+    from hadoop_3_0_0_beta1_gaia_spark.operators.keyfield import (
+        keyfield_partition_columns,
     )
-    from hadoop_3_0_0_beta1_gaia_spark.session import table as T
+    from hadoop_3_0_0_beta1_gaia_spark.operators.pair import map_kv, partition_by
 
-    emb = T(spark, sf_dir, "embeddings")
-    exact = {
-        (r["q_id"], r["rank"]): (r["n_id"], r["cos"])
-        for r in cosine_topk(emb, k=5, query_filter=F.col("vec_id") < 20).collect()
-    }
-    fast = {
-        (r["q_id"], r["rank"]): (r["n_id"], r["cos"])
-        for r in cosine_topk_numpy(emb, k=5, query_filter=F.col("vec_id") < 20).collect()
-    }
-    assert set(exact) == set(fast)
-    for key, (n_id, cos) in exact.items():
-        fn_id, fcos = fast[key]
-        assert fn_id == n_id
-        assert abs(fcos - cos) < 1e-6  # exact path rounds to 6 digits
+    df = spark.createDataFrame(
+        [(f"{p}{i % 2}\t{i % 5}\tz{i}",) for p in "abcdefgh" for i in range(12)],
+        ["line"],
+    )
+    fields = F.split(F.col("line"), "\t")
+    if how == "map_kv+partition_by":
+        kv = map_kv(df, F.substring("line", 1, 1), F.col("line"))
+        assert kv.columns == ["key", "value"] and kv.count() == 96
+        out, group = partition_by(kv, 8), F.col("key")
+    elif how == "partition_by_expr":
+        out, group = partition_by(df, 8, fields[1]), fields[1]
+    elif how == "keyfield_field":  # -k2,2: the whole second field
+        out = df.repartition(8, *keyfield_partition_columns("-k2,2", fields))
+        group = fields[1]
+    else:  # -k1.1,1.1: a char slice, the first char of the first field
+        out = df.repartition(8, *keyfield_partition_columns("-k1.1,1.1", fields))
+        group = F.substring("line", 1, 1)
+    pid = out.withColumn("pid", F.spark_partition_id())
+    per_group = pid.groupBy(group.alias("g")).agg(
+        F.countDistinct("pid").alias("n_pids")
+    )
+    assert all(r["n_pids"] == 1 for r in per_group.collect())
+    assert pid.select("pid").distinct().count() > 1
+
+
+# ----------------------------------------------------------------- similarity
 
 
 def test_lsh_near_dup_subset_of_bruteforce(spark, sf_dir):
@@ -636,6 +647,38 @@ def test_kmv_estimate_tracks_true_distinct(spark):
     assert abs(got["big"]["kmv_estimate"] - 2000) / 2000 < 0.5
 
 
+def test_fold_matches_python_left_fold():
+    """The shared numpy fold equals a plain Python 0.0-seeded left fold bit
+    for bit — across accumulator chunks (n·m > 32768), signed zeros, and an
+    empty side on either end."""
+    import numpy as np
+
+    from hadoop_3_0_0_beta1_gaia_spark.functions.similarity import (
+        fold_dots,
+        fold_norms,
+    )
+
+    def left_fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    rng = np.random.default_rng(7)
+    for n, m, d in [(700, 60, 5), (3, 4, 6), (0, 4, 3), (4, 0, 3)]:
+        A = rng.standard_normal((n, d)).astype(np.float32).astype(np.float64)
+        B = rng.standard_normal((m, d)).astype(np.float32).astype(np.float64)
+        if n and m:
+            A[0] = -0.0
+            B[0, 0] = -0.0
+        got = fold_dots(A, B)
+        want = np.array([[left_fold(a, b) for b in B] for a in A], dtype=np.float64)
+        assert got.shape == (n, m) and got.tobytes() == want.tobytes()
+        assert fold_norms(A).tobytes() == np.array(
+            [left_fold(a, a) for a in A], dtype=np.float64
+        ).tobytes()
+
+
 def test_cosine_topk_vectorized_bit_identical(spark, sf_dir):
     """The numpy kernel must reproduce the expression fold EXACTLY (same IEEE
     op order) — this is what licenses using it on the oracle-checked path."""
@@ -643,6 +686,7 @@ def test_cosine_topk_vectorized_bit_identical(spark, sf_dir):
         cosine_topk,
         cosine_topk_vectorized,
     )
+    from hadoop_3_0_0_beta1_gaia_spark.plans.dedup_sim import _jl_np_project
     from hadoop_3_0_0_beta1_gaia_spark.session import table as T
 
     df = T(spark, sf_dir, "embeddings")
@@ -654,6 +698,15 @@ def test_cosine_topk_vectorized_bit_identical(spark, sf_dir):
         )
     )
     assert a == b
+    # a filter that matches no query: zero rows, the reference's columns and
+    # no exception, with and without a per-batch vector transform
+    ref = cosine_topk(df, k=5, query_filter=F.col("id") < -1)
+    assert ref.collect() == []
+    for vt in (None, _jl_np_project):
+        got = cosine_topk_vectorized(
+            df, k=5, query_filter=F.col("id") < -1, vec_transform=vt
+        )
+        assert got.columns == ref.columns and got.collect() == []
 
 
 def test_salted_join_drops_null_keys_like_plain_join(spark):
@@ -673,19 +726,6 @@ def test_salted_join_drops_null_keys_like_plain_join(spark):
         ).collect()
     )
     assert out == [(1, "x"), (3, "y")]
-
-
-def test_cosine_near_dup_vectorized_bit_identical(spark, sf_dir):
-    from hadoop_3_0_0_beta1_gaia_spark.functions.similarity import (
-        cosine_near_dup,
-        cosine_near_dup_vectorized,
-    )
-    from hadoop_3_0_0_beta1_gaia_spark.session import table as T
-
-    df = T(spark, sf_dir, "embeddings")
-    a = sorted(map(tuple, cosine_near_dup(df, threshold=0.3).collect()))
-    b = sorted(map(tuple, cosine_near_dup_vectorized(df, threshold=0.3).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_cosine_near_dup_blocked_bit_identical(spark, sf_dir):

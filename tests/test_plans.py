@@ -1197,6 +1197,68 @@ def test_bitext_capped_recall_floor(spark, sf_dir):
     assert len(t_full & t_cap) >= 3
 
 
+@pytest.mark.parametrize(
+    "name, shift",
+    [
+        ("knn_cosine_topk", "ids"),
+        ("ann_recall_at_k", "ids"),
+        ("jl_projection_recall", "ids"),
+        ("hybrid_rrf_search", "ids"),
+        ("maxsim_multivector_topk", "ids"),
+        ("bitext_margin_mining", "labels"),
+        ("bitext_margin_mining_capped", "labels"),
+    ],
+)
+def test_vector_entries_total_over_empty_query_set(
+    spark, sf_dir, tmp_path, name, shift
+):
+    """The vector entries collect a query set by id (``vec_id < 100``, one
+    query id) or by label (bitext side A). On an embeddings table where that
+    set is empty — ids starting at 1000, or no label-0 rows — each entry
+    answers what its DuckDB oracle answers, with no exception."""
+    import math
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_3_0_0_beta1_gaia_spark import TABLES
+    from hadoop_3_0_0_beta1_gaia_spark.plans.registry import all_entries
+
+    for t in TABLES:
+        if t != "embeddings":
+            os.symlink(
+                os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet"
+            )
+    emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    col = "vec_id" if shift == "ids" else "label"
+    i = emb.schema.get_field_index(col)
+    moved = pc.add(emb[col], 1000 if shift == "ids" else 7)
+    field = emb.schema.field(i)
+    emb = emb.set_column(i, field, moved.cast(field.type))
+    pq.write_table(emb, tmp_path / "embeddings.parquet")
+
+    def cell(v):
+        if isinstance(v, float):
+            return "NaN" if math.isnan(v) else str(round(v, 9))
+        return str(v)
+
+    def norm(rows, cols):
+        order = sorted(range(len(cols)), key=lambda j: cols[j])
+        return sorted(tuple(cell(r[j]) for j in order) for r in rows)
+
+    e = all_entries()[name]
+    df = e.build(spark, str(tmp_path))
+    got = norm([tuple(r) for r in df.collect()], df.columns)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path / t}.parquet'")
+    res = con.execute(e.oracle)
+    want = norm(res.fetchall(), [d[0] for d in res.description])
+    con.close()
+    assert got == want
+
+
 def test_k_anonymity_release_invariants(spark, sf_dir):
     """Every released non-remainder cell is >= k; the remainder row, when
     present, merges >= 2 suppressed cells and is itself >= k; released
