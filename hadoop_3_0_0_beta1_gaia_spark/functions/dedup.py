@@ -25,8 +25,9 @@ from pyspark.sql import functions as F
 
 from ..operators.pair import with_counter
 from ..session import owned_persist
+from .md5np import Md5Intern, md5_60, md5_64
 from .rounding import duck_fround, fround
-from .text_metrics import duck_tokens, tokens
+from .text_metrics import duck_tokens, py_ngrams, py_tokens, tokens
 
 # ---------------------------------------------------------------------------
 # shared md5-based hashing (portable Spark <-> DuckDB)
@@ -139,28 +140,14 @@ def shingle_arrays(
     higher-order-function evaluator per gram — slice + array_join + md5 +
     hex→long conv each allocate per element, measured ~8 µs/shingle at the
     sf10 fixture (stage-isolated: 7.5 s of the capped family's wall vs a
-    0.87 s tokenize floor). The kernel hashes each gram once in C
-    (hashlib.md5 on the identical UTF-8 bytes; first 15 hex digits ==
-    ``digest[:8] >> 4``) behind a bounded cross-doc gram cache (the
-    simhash64_kernel vocabulary-cache pattern — boilerplate grams repeat
-    across documents), and dedups with an order-preserving
-    ``dict.fromkeys`` — exactly ``array_distinct`` over the hashed values.
-    Tokenization matches :func:`tokens` via ``re.ASCII`` (Java default
-    ``\\s``), the simhash64_kernel precedent; entirely map-side, zero
-    exchanges, embarrassingly parallel.
-
-    Locale note (ADVICE r11): every text kernel in this module lower-cases
-    with Python ``str.lower()`` while the expression twins use Spark
-    ``lower()``, whose non-ASCII path is JVM ``String.toLowerCase()`` under
-    the JVM DEFAULT locale. On a tr_TR/az JVM the two diverge on ASCII 'I'
-    (→ 'ı'). :func:`session.get_session` therefore pins the JVM locale to
-    the root-equivalent en_US (``-Duser.language/-Duser.country`` on driver
-    and executors); embedding these helpers in a session built elsewhere
-    requires the same pin (or an ASCII-only corpus, which every fixture
-    satisfies)."""
-    import hashlib
-    import re as _re
-
+    0.87 s tokenize floor). The kernel tokenizes with
+    :func:`text_metrics.py_tokens` (its notes cover the Java ``\\s`` and
+    JVM-locale agreement), hashes each gram once in C through the shared
+    :class:`md5np.Md5Intern` (``md5_60`` == ``md5_long`` on identical UTF-8
+    bytes; boilerplate grams repeat across documents), and dedups with an
+    order-preserving ``dict.fromkeys`` — exactly ``array_distinct`` over
+    the hashed values. Entirely map-side, zero exchanges, embarrassingly
+    parallel."""
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
@@ -176,15 +163,9 @@ def shingle_arrays(
     base = ensure_parallelism(df).select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
     )
-    ws = _re.compile(r"\s+", _re.ASCII)
-    _md5 = hashlib.md5
 
     def kernel(batches):
-        # gram→hash cache bounded on BOTH axes (chars and entries), the
-        # simhash64_kernel rule: Zipf boilerplate re-enters immediately
-        # after a clear, a pathological vocabulary cannot OOM the worker.
-        cache: dict[str, int] = {}
-        cache_chars = 0
+        intern = Md5Intern()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -195,28 +176,13 @@ def shingle_arrays(
                 text = texts.iloc[pos]
                 if text is None:
                     continue
-                toks = [t for t in ws.split(text.lower()) if t]
+                toks = py_tokens(text)
                 if len(toks) < n:
                     continue
-                hs: list[int] = []
-                ap = hs.append
-                for gram in map(" ".join, zip(*(toks[k:] for k in range(n)))):
-                    v = cache.get(gram)
-                    if v is None:
-                        v = (
-                            int.from_bytes(
-                                _md5(gram.encode()).digest()[:8], "big"
-                            )
-                            >> 4
-                        )
-                        if cache_chars >= 8_000_000 or len(cache) >= 500_000:
-                            cache.clear()
-                            cache_chars = 0
-                        cache[gram] = v
-                        cache_chars += len(gram)
-                    ap(v)
                 kept.append(pos)
-                arrs.append(list(dict.fromkeys(hs)))
+                arrs.append(
+                    list(dict.fromkeys(intern.hash_all(py_ngrams(toks, n))))
+                )
             yield pd.DataFrame(
                 {
                     "id": pdf["id"].iloc[kept].reset_index(drop=True),
@@ -255,7 +221,6 @@ def _df_capped_shingles(
     max_df: int,
     generator: str = "ngram_jaccard",
     diag: dict | None = None,
-    eager: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Document-frequency cap for shingle-join candidate generation: drop
     shingles appearing in > ``max_df`` documents BEFORE the self-join.
@@ -294,8 +259,7 @@ def _df_capped_shingles(
     # eager populate cuts the capped family ~20-30%). Rows are (id, shingle)
     # longs — ~16 B/row, MEMORY_AND_DISK spills at scale.
     capped = owned_persist(sh.join(rare, "shingle"))
-    if eager:
-        capped.count()
+    capped.count()
     sizes = capped.groupBy("id").agg(F.count("*").alias("sz"))
     return capped, sizes
 
@@ -349,7 +313,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_df: int | None = None,
-    eager: bool = True,
     diag: dict | None = None,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard similarity ≥ threshold (id_a < id_b).
@@ -358,9 +321,6 @@ def ngram_jaccard_pairs(
     ``max_df`` drops ubiquitous shingles before pairing (document-frequency
     cap) — essential at corpus scale, off by default for oracle parity;
     with ``diag`` given, drop metrics land there (:func:`cap_counter`).
-    ``eager=False`` skips the cache-populating count() for plan-only callers
-    (explain/schema inspection) — running the returned plan then risks the
-    AQE concurrent-branch recompute, so keep the default when executing.
     """
 
     # a-side, b-side, and sizes all read the shingle frame; no exchange
@@ -370,11 +330,10 @@ def ngram_jaccard_pairs(
     # recompute the full shingle pass (sf10: 3x a ~200 s stage; losers'
     # blocks are discarded). One count() populates the cache first.
     sh_arr = owned_persist(shingle_arrays(df, n, id_col, text_col))
-    if eager:
-        sh_arr.count()
+    sh_arr.count()
     sh = sh_arr.select("id", F.explode("shingles").alias("shingle"))
     if max_df is not None:
-        sh, sizes = _df_capped_shingles(sh, max_df, diag=diag, eager=eager)
+        sh, sizes = _df_capped_shingles(sh, max_df, diag=diag)
     else:
         # set size is the per-row array length — no aggregation shuffle
         sizes = sh_arr.select("id", F.size("shingles").cast("long").alias("sz"))
@@ -453,14 +412,10 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic affine-permutation coefficients (a_i, b_i) for
     h_i(x) = (a_i·h(x) + b_i) mod P — derived from md5 in Python so the Spark
     plan and the DuckDB oracle embed the SAME literals."""
-    import hashlib
-
-    out = []
-    for i in range(num_hashes):
-        a = int(hashlib.md5(f"a:{i}".encode()).hexdigest()[:15], 16) % (_MINHASH_P - 1) + 1
-        b = int(hashlib.md5(f"b:{i}".encode()).hexdigest()[:15], 16) % _MINHASH_P
-        out.append((a, b))
-    return out
+    return [
+        (md5_60(f"a:{i}") % (_MINHASH_P - 1) + 1, md5_60(f"b:{i}") % _MINHASH_P)
+        for i in range(num_hashes)
+    ]
 
 
 def minhash_signatures(
@@ -600,8 +555,9 @@ def expand_bucket_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
     ~10^8 pair expansions per pass. The kernel flattens each Arrow list
     batch zero-copy, groups buckets by length, and emits every
     (i < j) combination as two numpy gathers per length group — the same
-    pair multiset, no per-pair interpreter work. Non-integer id arrays
-    (no caller today) fall back to the expression path."""
+    pair multiset, no per-pair interpreter work. ``ids_col`` must be
+    ``array<bigint>`` (every caller's id type); any other type raises
+    ``TypeError``."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -610,8 +566,11 @@ def expand_bucket_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
     elem = buckets.schema[ids_col].dataType
     if not (
         isinstance(elem, ArrayType) and isinstance(elem.elementType, LongType)
-    ):  # pragma: no cover - guard for future non-long callers
-        return expand_bucket_pairs_expr(buckets, ids_col)
+    ):
+        raise TypeError(
+            f"expand_bucket_pairs needs {ids_col!r} as array<bigint>, "
+            f"got {elem.simpleString()}"
+        )
 
     # project to the single needed column BEFORE the opaque map node
     # (guide §4.1: Spark cannot prune through mapInArrow)
@@ -679,11 +638,9 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket_size: int | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → signature → banded
     candidates → exact-Jaccard verify on candidates only.
-    (``eager=False``: skip the cache-populating count for plan-only callers.)
 
     The verify intersection starts FROM the candidate pairs, never from the
     all-pairs shingle join — candidate count is linear in corpus size, so the
@@ -716,8 +673,7 @@ def minhash_lsh_pairs(
     # independent plan branches that AQE starts concurrently — racing an
     # unpopulated cache recomputes the shingle scan once per branch (found
     # by the sf10 sweep: ~3x a ~200 s stage)
-    if eager:
-        sh_arr.count()
+    sh_arr.count()
     cands = lsh_candidate_pairs(
         minhash_signatures(sh_arr, num_hashes),
         rows_per_band,
@@ -841,17 +797,14 @@ def positional_grams(
 ) -> DataFrame:
     """Positional k-gram stream (id, pos, gh) — Arrow-kernel path,
     bit-identical to :func:`positional_grams_expr` (test-pinned). ``pos`` is
-    1-based, ``gh`` the 60-bit md5 intern (``md5_long`` == ``digest[:8] >>
-    4`` on identical UTF-8 bytes). Same rationale and structure as
+    1-based, ``gh`` the 60-bit md5 intern (``md5np.md5_60`` == ``md5_long``
+    on identical UTF-8 bytes). Same rationale and structure as
     :func:`shingle_arrays`: the interpreted slice/array_join/md5/conv chain
     per gram was the dominant cost of the exact-substring family's wall
-    (stage-isolated at sf10), the kernel hashes each gram once in C behind
-    the bounded cross-doc gram cache and EXPLODES IN PYTHON (one output row
-    per gram), removing the JVM struct-array explode as well. Map-side,
+    (stage-isolated at sf10), the kernel hashes each gram once in C through
+    the shared :class:`md5np.Md5Intern` and EXPLODES IN PYTHON (one output
+    row per gram), removing the JVM struct-array explode as well. Map-side,
     zero exchanges."""
-    import hashlib
-    import re as _re
-
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -868,12 +821,9 @@ def positional_grams(
     base = ensure_parallelism(df).select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
     )
-    ws = _re.compile(r"\s+", _re.ASCII)
-    _md5 = hashlib.md5
 
     def kernel(batches):
-        cache: dict[str, int] = {}
-        cache_chars = 0
+        intern = Md5Intern()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -886,29 +836,13 @@ def positional_grams(
                 text = texts.iloc[row]
                 if text is None:
                     continue
-                toks = [t for t in ws.split(text.lower()) if t]
+                toks = py_tokens(text)
                 if len(toks) < k:
                     continue
-                rid = id_vals.iloc[row]
-                for i, gram in enumerate(
-                    map(" ".join, zip(*(toks[j:] for j in range(k)))), 1
-                ):
-                    v = cache.get(gram)
-                    if v is None:
-                        v = (
-                            int.from_bytes(
-                                _md5(gram.encode()).digest()[:8], "big"
-                            )
-                            >> 4
-                        )
-                        if cache_chars >= 8_000_000 or len(cache) >= 500_000:
-                            cache.clear()
-                            cache_chars = 0
-                        cache[gram] = v
-                        cache_chars += len(gram)
-                    ids.append(rid)
-                    poss.append(i)
-                    ghs.append(v)
+                hs = intern.hash_all(py_ngrams(toks, k))
+                ids.extend([id_vals.iloc[row]] * len(hs))
+                poss.extend(range(1, len(hs) + 1))
+                ghs.extend(hs)
             yield pd.DataFrame(
                 {
                     "id": pd.Series(ids, dtype=id_vals.dtype),
@@ -1463,7 +1397,6 @@ def simhash_hamming_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket_size: int | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """SimHash near-dup PAIRS within a Hamming radius — the search half of
     :func:`simhash32` (which only fingerprints).
@@ -1509,8 +1442,7 @@ def simhash_hamming_pairs(
     # Eagerly populate before AQE's concurrent consumer branches (banding +
     # both verify sides) race the cache and each recompute the fold (the
     # round-5 shingle lesson, measured 12-30x there; same no-exchange shape).
-    if eager:
-        sims.count()
+    sims.count()
     bands = F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda j: F.struct(
@@ -1680,20 +1612,15 @@ def simhash64_kernel(
     rewrite, rebuilds a 64-long array per token in the interpreted
     higher-order-function evaluator — 425 s for the fingerprint stage at the
     sf10 fixture (500k docs). The kernel moves the same computation into
-    numpy: tokens md5-hash once per DISTINCT token per partition (an LRU-less
-    vocabulary cache — documents share vocabulary, so the md5 count collapses
-    from the token stream to roughly the partition vocabulary, the
-    cms_token_freq lesson), then a vectorized per-doc bit-vote
-    ``((vals[:,None] >> shifts) & 1).sum(axis=0)``.
-
-    Tokenization matches :func:`tokens` (lower → split ``\\s+`` → drop
-    empties) via the same regex the pure-Python reference test uses; the
-    fixture corpora are ASCII so Java/Python ``\\s`` agree. Entirely
-    map-side, zero exchanges, embarrassingly parallel.
+    numpy: tokens (:func:`text_metrics.py_tokens`) md5-hash once per
+    DISTINCT token per task through the shared :class:`md5np.Md5Intern`
+    over :func:`md5np.md5_64` (the hi/lo md5 words the expression fold
+    votes on) — documents share vocabulary, so the md5 count collapses from
+    the token stream to roughly the task vocabulary, the cms_token_freq
+    lesson — then a vectorized per-doc bit-vote
+    ``((vals[:,None] >> shifts) & 1).sum(axis=0)``. Entirely map-side, zero
+    exchanges, embarrassingly parallel.
     """
-    import hashlib
-    import re as _re
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
@@ -1707,20 +1634,9 @@ def simhash64_kernel(
     )
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     shifts = np.arange(63, dtype=np.uint64)
-    # re.ASCII makes Python \s exactly Java's default \s ([ \t\n\x0B\f\r]) —
-    # without it a U+00A0 (or any unicode space) would split here but not in
-    # the expression fold (pinned by the nbsp fixture in the equality test)
-    ws = _re.compile(r"\s+", _re.ASCII)
 
     def kernel(batches):
-        # Vocabulary cache bounded by ACCUMULATED KEY CHARACTERS, not entry
-        # count: with realistic token lengths a multi-million-entry dict is
-        # several GB per concurrently running task. ~8M chars (~100 MB of
-        # dict+str objects worst case, a few hundred thousand entries on
-        # real text) keeps md5 dedup effective — Zipf vocabulary means the
-        # hot tokens re-enter the cache immediately after a clear.
-        cache: dict[str, int] = {}
-        cache_chars = 0
+        intern = Md5Intern(md5_64)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1731,27 +1647,12 @@ def simhash64_kernel(
                 text = texts.iloc[pos]
                 if text is None:
                     continue
-                toks = {t for t in ws.split(text.lower()) if t}
+                toks = set(py_tokens(text))
                 if not toks:
                     continue
-                vals = np.empty(len(toks), dtype=np.uint64)
-                for i, t in enumerate(toks):
-                    v = cache.get(t)
-                    if v is None:
-                        h = hashlib.md5(t.encode()).hexdigest()
-                        # bits 0..31 from the lo word, 32..62 from the hi word
-                        # — same layout as the expression fold's step lambda
-                        v = (int(h[:8], 16) << 32) | int(h[8:16], 16)
-                        # Bound BOTH axes (ADVICE r7): the char budget alone
-                        # lets a short-token vocabulary (2-4 char tokens)
-                        # accumulate millions of dict entries whose dict+str
-                        # object overhead dwarfs the char estimate.
-                        if cache_chars >= 8_000_000 or len(cache) >= 500_000:
-                            cache.clear()
-                            cache_chars = 0
-                        cache[t] = v
-                        cache_chars += len(t)
-                    vals[i] = v
+                # bits 0..31 from the lo word, 32..62 from the hi word — same
+                # layout as the expression fold's step lambda
+                vals = np.array(intern.hash_all(toks), dtype=np.uint64)
                 ones = ((vals[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
                 fp = int(
                     ((2 * ones > len(toks)).astype(np.uint64) << shifts).sum(
@@ -1803,7 +1704,6 @@ def simhash64_hamming_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket_size: int | None = None,
-    eager: bool = True,
     use_kernel: bool = True,
 ) -> DataFrame:
     """Hamming-radius pair search over the 63-bit fingerprint — the scale
@@ -1832,7 +1732,6 @@ def simhash64_hamming_pairs(
         sims,
         radius=radius,
         max_bucket_size=max_bucket_size,
-        eager=eager,
         fp_col="simhash",
     )
 
@@ -1841,7 +1740,6 @@ def hamming63_pairs(
     sims: DataFrame,
     radius: int = 3,
     max_bucket_size: int | None = None,
-    eager: bool = True,
     fp_col: str = "simhash",
 ) -> DataFrame:
     """Banded Hamming-radius pair search over ANY 63-bit fingerprint column
@@ -1865,8 +1763,7 @@ def hamming63_pairs(
     # Eager count: x/y self-join sides PLUS the optional cap branch are three
     # concurrent consumers of this cache; unpopulated, AQE recomputes the
     # fingerprint computation once per branch (round-5 shingle lesson).
-    if eager:
-        sims.count()
+    sims.count()
     bands = F.array(
         *[
             F.struct(
@@ -1968,7 +1865,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_df: int | None = None,
-    eager: bool = True,
     diag: dict | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup: containment C(A in B) = |A∩B| / |A| over shingle
@@ -1993,12 +1889,11 @@ def containment_pairs(
     # and materialize eagerly (concurrent AQE branches race an unpopulated
     # cache into per-branch recompute; see ngram_jaccard_pairs)
     sh_arr = owned_persist(shingle_arrays(df, n, id_col, text_col))
-    if eager:
-        sh_arr.count()
+    sh_arr.count()
     sh = sh_arr.select("id", F.explode("shingles").alias("shingle"))
     if max_df is not None:
         sh, sizes = _df_capped_shingles(sh, max_df, generator="containment",
-                                        diag=diag, eager=eager)
+                                        diag=diag)
     else:
         sizes = sh_arr.select("id", F.size("shingles").cast("long").alias("sz"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")

@@ -15,13 +15,96 @@ MD5 (RFC 1321) is exact integer math, so :func:`md5_60bit_fixed_len` is
 bit-identical to ``int(hashlib.md5(m).hexdigest()[:15], 16)`` by
 construction; equality is test-pinned against hashlib over random bytes of
 every supported length (tests/test_operators.py).
+
+The scalar side lives here too, once, for every text kernel: :func:`md5_60`
+is the same intern for one string (the value of the Spark expression
+``dedup.md5_long`` on the same text), and :class:`Md5Intern` is the one
+bounded cross-document cache the kernels put in front of it (Zipf
+vocabularies and boilerplate grams repeat across documents, so md5 runs
+roughly once per distinct key per task).
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import numpy as np
+
+
+def md5_64(s: str) -> int:
+    """First 16 hex digits of md5 over the UTF-8 bytes of ``s`` as an
+    unsigned 64-bit int — the two 32-bit words (hi << 32 | lo) the 63-bit
+    simhash votes on."""
+    return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big")
+
+
+def md5_60(s: str) -> int:
+    """60-bit md5 intern of ``s`` — ``int(md5(s).hexdigest()[:15], 16)``,
+    i.e. :func:`md5_64` without its low nibble, and the value Spark's
+    ``md5_long`` and DuckDB's ``('0x' || substr(md5(s), 1, 15))::BIGINT``
+    compute on the same text."""
+    return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 4
+
+
+def md5_hex(s: str) -> str:
+    """md5 hex digest of the UTF-8 bytes of ``s`` — Spark/DuckDB ``md5``."""
+    return hashlib.md5(s.encode()).hexdigest()
+
+
+# Bounds of :class:`Md5Intern`, on BOTH axes: the character budget caps the
+# key bytes held (~100 MB of dict+str objects worst case per running task),
+# the entry budget caps a short-key vocabulary (2-4 char tokens), whose
+# per-entry dict+str overhead dwarfs the character estimate.
+INTERN_MAX_CHARS = 8_000_000
+INTERN_MAX_ENTRIES = 500_000
+
+
+class Md5Intern:
+    """Bounded key -> ``fn(key)`` cache shared by the text kernels
+    (``fn`` is :func:`md5_60` unless a kernel needs :func:`md5_64` or
+    :func:`md5_hex`). When the next key would push the cache past
+    ``INTERN_MAX_ENTRIES`` entries or ``INTERN_MAX_CHARS`` key characters it
+    is cleared, not evicted key by key: Zipf-hot keys re-enter at once, and a
+    pathological vocabulary cannot grow a worker's memory. A key longer than
+    the character budget is hashed but not kept. The cache is transparent:
+    :meth:`hash_all` returns ``fn(k)`` for every key whatever it holds.
+
+    Make one per kernel invocation (one task) and call :meth:`hash_all`
+    once per document: the lookup loop runs inline there, so a kernel pays
+    one Python call per document, not one per gram."""
+
+    __slots__ = ("fn", "cache", "chars")
+
+    def __init__(self, fn=md5_60):
+        self.fn = fn
+        self.cache: dict = {}
+        self.chars = 0
+
+    def hash_all(self, keys) -> list:
+        """``[fn(k) for k in keys]``, through the cache."""
+        cache = self.cache
+        get = cache.get
+        fn = self.fn
+        chars = self.chars
+        max_chars, max_entries = INTERN_MAX_CHARS, INTERN_MAX_ENTRIES
+        out = []
+        ap = out.append
+        for k in keys:
+            v = get(k)
+            if v is None:
+                v = fn(k)
+                n = len(k)
+                if chars + n > max_chars or len(cache) >= max_entries:
+                    cache.clear()
+                    chars = 0
+                if n <= max_chars:
+                    cache[k] = v
+                    chars += n
+            ap(v)
+        self.chars = chars
+        return out
+
 
 # per-round left-rotate amounts (RFC 1321)
 _S = (

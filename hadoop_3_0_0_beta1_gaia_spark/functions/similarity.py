@@ -341,10 +341,9 @@ def _hyperplane_coeff(p: int, j: int) -> float:
     DuckDB oracle computes with SQL md5, here evaluated ONCE in Python and
     embedded as a literal (the coefficients are row-independent; computing
     them inside the row expression cost |rows|·planes·dims redundant md5s)."""
-    import hashlib
+    from .md5np import md5_60
 
-    h = int(hashlib.md5(f"{p}:{j}".encode()).hexdigest()[:15], 16)
-    return h / float(2**60) - 0.5
+    return md5_60(f"{p}:{j}") / float(2**60) - 0.5
 
 
 def _simhash_bucket_expr(v: Column, num_planes: int, dims: int) -> Column:

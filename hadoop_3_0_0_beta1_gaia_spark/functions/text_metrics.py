@@ -13,6 +13,8 @@ each operator has an exact DuckDB oracle.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -35,6 +37,34 @@ LANG_MARKERS = {"en": " the ", "fr": " le ", "de": " der ", "es": " el "}
 def tokens(text: Column) -> Column:
     """lower → split on whitespace → drop empties."""
     return F.filter(F.split(F.lower(text), WS), lambda t: t != "")
+
+
+# Python image of :func:`tokens`, for the Arrow/pandas text kernels.
+# re.ASCII makes Python ``\s`` exactly Java's default ``\s``
+# ([ \t\n\x0B\f\r]); without it U+00A0, \x1c-\x1f and the other characters
+# ``str.split()`` treats as whitespace would split here but not in Spark
+# (pinned in tests/test_operators.py).
+#
+# Locale note: the kernels lower-case with Python ``str.lower()`` while
+# :func:`tokens` uses Spark ``lower()``, whose non-ASCII path is JVM
+# ``String.toLowerCase()`` under the JVM DEFAULT locale; on a tr_TR/az JVM the
+# two diverge on ASCII 'I' (→ 'ı'). :func:`session.get_session` therefore
+# pins the JVM locale to the root-equivalent en_US (``-Duser.language`` /
+# ``-Duser.country`` on driver and executors); a session built elsewhere
+# needs the same pin (or an ASCII-only corpus, which every fixture is).
+_WS_RE = re.compile(WS, re.ASCII)
+
+
+def py_tokens(text: str) -> list[str]:
+    """:func:`tokens` on one non-NULL string, in Python."""
+    return [t for t in _WS_RE.split(text.lower()) if t]
+
+
+def py_ngrams(toks: list[str], n: int):
+    """Space-joined n-grams of ``toks`` in order (lazy; none when
+    ``len(toks) < n``) — the Python image of
+    ``array_join(slice(toks, i, n), ' ')`` for i = 1 .. size - n + 1."""
+    return map(" ".join, zip(*(toks[k:] for k in range(n))))
 
 
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -1139,9 +1139,8 @@ def _fuzzy_wildcard_keys(names):
     the shuffle as an 8-byte md5 intern on BOTH engines (the shingle-intern
     pattern: identical hash function on identical bytes, so even a 2^-60
     collision is engine-consistent). Non-ASCII or >55-byte names take a
-    per-name hashlib fallback (wildcard positions are CHARACTER offsets)."""
-    import hashlib
-
+    per-name ``md5_60`` fallback (wildcard positions are CHARACTER
+    offsets)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -1151,7 +1150,7 @@ def _fuzzy_wildcard_keys(names):
         StructType,
     )
 
-    from ..functions.md5np import md5_60bit_fixed_len
+    from ..functions.md5np import md5_60, md5_60bit_fixed_len
     from ..session import ensure_parallelism
 
     schema = StructType(
@@ -1162,8 +1161,6 @@ def _fuzzy_wildcard_keys(names):
             StructField("bkh", LongType(), False),
         ]
     )
-    _md5 = hashlib.md5
-
     def kernel(batches):
         for pdf in batches:
             ids_out: list[np.ndarray] = []
@@ -1184,17 +1181,11 @@ def _fuzzy_wildcard_keys(names):
                     g[1].append(nm)
                     g[2].append(b)
                 else:
-                    # fallback: character-offset wildcards, hashlib per key
+                    # fallback: character-offset wildcards, md5_60 per key
                     rid = ids.iloc[row]
                     hs = np.fromiter(
                         (
-                            int.from_bytes(
-                                _md5(
-                                    (nm[: i - 1] + "\x01" + nm[i:]).encode()
-                                ).digest()[:8],
-                                "big",
-                            )
-                            >> 4
+                            md5_60(nm[: i - 1] + "\x01" + nm[i:])
                             for i in range(1, len(nm) + 1)
                         ),
                         dtype=np.int64,

@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 from ..functions.dedup import duck_md5_int32, md5_int32
 from ..functions.rounding import duck_fround, fround
 from ..functions.sketch import duckdb_hll_distinct
-from ..functions.text_metrics import duck_tokens, tokens
+from ..functions.md5np import Md5Intern, md5_hex
+from ..functions.text_metrics import duck_tokens, py_ngrams, py_tokens, tokens
 from ..session import table as T
 from .registry import register
 
@@ -273,13 +274,10 @@ def _span_hash_stream(df, w: int = _SPAN_W, id_col: str = "doc_id"):
     ``tokens(text)`` (md5 hex on identical UTF-8 bytes; docs with < w
     tokens emit nothing). Same rationale as functions/dedup.py's
     shingle/positional-gram kernels (guide §4.2): the interpreted
-    slice/concat_ws/md5 chain paid ~8 µs per window; the kernel hashes each
-    window once in C behind the bounded cross-doc cache and explodes in
-    Python. Tokenization matches :func:`tokens` via ``re.ASCII`` (the
-    simhash64_kernel precedent). Map-side, zero exchanges."""
-    import hashlib
-    import re as _re
-
+    slice/concat_ws/md5 chain paid ~8 µs per window; the kernel tokenizes
+    with :func:`text_metrics.py_tokens`, hashes each window once in C
+    through the shared :class:`md5np.Md5Intern` (over ``md5_hex``) and
+    explodes in Python. Map-side, zero exchanges."""
     import pandas as pd
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -290,12 +288,9 @@ def _span_hash_stream(df, w: int = _SPAN_W, id_col: str = "doc_id"):
         ]
     )
     base = df.select(F.col(id_col).alias("doc_id"), "text")
-    ws = _re.compile(r"\s+", _re.ASCII)
-    _md5 = hashlib.md5
 
     def kernel(batches):
-        cache: dict[str, str] = {}
-        cache_chars = 0
+        intern = Md5Intern(md5_hex)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -307,21 +302,12 @@ def _span_hash_stream(df, w: int = _SPAN_W, id_col: str = "doc_id"):
                 text = texts.iloc[row]
                 if text is None:
                     continue
-                toks = [t for t in ws.split(text.lower()) if t]
+                toks = py_tokens(text)
                 if len(toks) < w:
                     continue
-                rid = id_vals.iloc[row]
-                for gram in map(" ".join, zip(*(toks[j:] for j in range(w)))):
-                    v = cache.get(gram)
-                    if v is None:
-                        v = _md5(gram.encode()).hexdigest()
-                        if cache_chars >= 8_000_000 or len(cache) >= 500_000:
-                            cache.clear()
-                            cache_chars = 0
-                        cache[gram] = v
-                        cache_chars += len(gram)
-                    ids.append(rid)
-                    shs.append(v)
+                hs = intern.hash_all(py_ngrams(toks, w))
+                ids.extend([id_vals.iloc[row]] * len(hs))
+                shs.extend(hs)
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(ids, dtype="int64"),
@@ -407,7 +393,7 @@ _BM25_QUERY = ("table", "spark", "filter")
 _BM25_TOPK = 10
 
 
-def bm25_doc_toks(spark, sf_dir, *, eager: bool = True):
+def bm25_doc_toks(spark, sf_dir):
     """(doc_id, toks) token arrays for the BM25 retrieval family — ONE
     tokenize of the corpus, persisted (ledger-owned), so every consumer
     across the family (document lengths, corpus stats, pass-1 term tf,
@@ -415,8 +401,7 @@ def bm25_doc_toks(spark, sf_dir, *, eager: bool = True):
     2-column array frame instead of re-running the regex tokenizer per
     branch. This is the ccnet_lm_buckets token-array pattern
     (llm_quality.py) applied to retrieval: the tokenize is the dominant
-    scan cost at sf10 and the arrays are narrow. ``eager=False`` skips the
-    materializing count for explain/schema-only callers."""
+    scan cost at sf10 and the arrays are narrow."""
     from ..session import owned_persist
 
     d = owned_persist(
@@ -424,8 +409,7 @@ def bm25_doc_toks(spark, sf_dir, *, eager: bool = True):
             "doc_id", tokens(F.col("text")).alias("toks")
         )
     )
-    if eager:
-        d.count()
+    d.count()
     return d
 
 

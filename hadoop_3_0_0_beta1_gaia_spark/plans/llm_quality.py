@@ -20,7 +20,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.rounding import duck_fround, fround
-from ..functions.text_metrics import ALNUM_LOWER, WS_CHARS, duck_tokens, tokens
+from ..functions.md5np import Md5Intern, md5_hex
+from ..functions.text_metrics import (
+    ALNUM_LOWER,
+    WS_CHARS,
+    duck_tokens,
+    py_tokens,
+    tokens,
+)
 from ..session import table as T
 from .registry import register
 
@@ -200,16 +207,15 @@ def repetition_metrics(docs):
     of a bigram equals the max run over the sorted bigram array by
     definition — and mirrors the two fround divisions op-for-op (Python
     doubles are the same IEEE ops Catalyst runs: divide, ×10⁴, +0.5,
-    floor). Tokenization matches :func:`tokens` via ``re.ASCII``; a
-    NULL-text row emits NULL n_tokens / NULL distinct_ratio — the expression
-    path's degenerate outputs under Spark 4 defaults, where ``size(NULL)``
-    is NULL (the −1 value only exists under spark.sql.legacy.sizeOfNull;
-    the twin-equality pin test runs under the session default and would
-    catch a flip). The kernel spreads its input
+    floor). Tokenization is :func:`text_metrics.py_tokens`; a NULL-text
+    row emits NULL n_tokens / NULL distinct_ratio — the expression path's
+    degenerate outputs under Spark 4 defaults, where ``size(NULL)`` is NULL
+    (the −1 value only exists under spark.sql.legacy.sizeOfNull; the
+    twin-equality pin test runs under the session default and would catch
+    a flip). The kernel spreads its input
     (ensure_parallelism — the ONE deliberate round-robin exchange the
     plan-pin test allows, a no-op on real multi-file input)."""
     import math
-    import re as _re
     from collections import Counter
 
     import pandas as pd
@@ -232,7 +238,6 @@ def repetition_metrics(docs):
             StructField("top_bigram_frac", DoubleType(), False),
         ]
     )
-    ws = _re.compile(r"\s+", _re.ASCII)
     floor = math.floor
 
     def fr4(x: float) -> float:
@@ -252,7 +257,7 @@ def repetition_metrics(docs):
                     out_tc.append(0)
                     out_tf.append(0.0)
                     continue
-                toks = [t for t in ws.split(text.lower()) if t]
+                toks = py_tokens(text)
                 n = len(toks)
                 nn = max(n, 1)
                 if n >= 2:
@@ -888,9 +893,9 @@ def gopher_repetition_kernel(docs):
     document cost 49.3 s at sf1 where this Counter-based kernel does the
     same work in a few seconds (the simhash64_kernel precedent). Argmax
     ties break on the JOINED-STRING order among max-count candidates only —
-    identical to the sorted-array fold's order for any token alphabet."""
+    identical to the sorted-array fold's order for any token alphabet.
+    Tokenization is :func:`text_metrics.py_tokens`."""
     import math
-    import re as _re
     from collections import Counter
 
     import pandas as pd
@@ -917,7 +922,6 @@ def gopher_repetition_kernel(docs):
     )
     from ..session import ensure_parallelism
 
-    ws = _re.compile(r"\s+", _re.ASCII)  # Java's default \s, exactly
     # single-file scans arrive as ONE partition — spread before the
     # CPU-heavy kernel (the winnow lesson); a no-op on real multi-file input
     base = ensure_parallelism(docs.select("doc_id", "text"))
@@ -929,11 +933,7 @@ def gopher_repetition_kernel(docs):
             ids = pdf["doc_id"]
             for pos in range(len(pdf)):
                 text = texts.iloc[pos]
-                toks = (
-                    [t for t in ws.split(text.lower()) if t]
-                    if text is not None
-                    else []
-                )
+                toks = py_tokens(text) if text is not None else []
                 nt = len(toks)
                 total = sum(map(len, toks)) + max(nt - 1, 0)
                 denom = max(total, 1)
@@ -1135,8 +1135,6 @@ def c4_rules_kernel(pages):
     expression chain as the oracle-verified structural twin. Entirely
     map-side; the only exchange is the deliberate round-robin spread of a
     single-file scan."""
-    import hashlib
-
     import pandas as pd
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -1184,9 +1182,7 @@ def c4_rules_kernel(pages):
                 cols["n_lines"].append(len(lines))
                 cols["n_kept_lines"].append(len(kept))
                 cols["reason"].append(reason)
-                cols["kept_md5"].append(
-                    hashlib.md5("\n".join(kept).encode()).hexdigest()
-                )
+                cols["kept_md5"].append(md5_hex("\n".join(kept)))
             yield pd.DataFrame(cols)
 
     return base.mapInPandas(kernel, schema=schema)
@@ -1277,7 +1273,7 @@ def c4_rules(pages):
     "(sorted left-fold — identical IEEE op order), never an unordered SUM, so the "
     "order-dependent accumulation cannot diverge",
 )
-def doc_bigram_logprob(spark, sf_dir, *, eager: bool = True):
+def doc_bigram_logprob(spark, sf_dir):
     from ..session import owned_persist
 
     # Persist the TOKEN ARRAYS, not the exploded bigram stream (round-10
@@ -1286,14 +1282,12 @@ def doc_bigram_logprob(spark, sf_dir, *, eager: bool = True):
     # per-doc array frame — the r9 exploded-row persist paid a 26.6M-row
     # string cache write plus a separate full tokenize scan for unigrams
     # (sf10 A/B 14.0 -> 8.9 s min, artifacts/ccnet_toks_ab_r10.json).
-    # eager=False skips the materializing count for plan-only callers.
     base = owned_persist(
         T(spark, sf_dir, "documents").select(
             "doc_id", tokens(F.col("text")).alias("toks")
         )
     )
-    if eager:
-        base.count()
+    base.count()
     d = base.filter(F.size("toks") >= 2)
     n = F.size("toks")
     pairs = F.arrays_zip(
@@ -1816,29 +1810,6 @@ def url_normalize_dedup(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _dsir_bucket_of(dict_vals, cache):
-    """md5-derived 512-bucket per UNIQUE token string — exactly
-    ``md5_long(tok) % 512`` (first 15 hex digits == digest[:8] >> 4, the
-    test-pinned shingle-kernel identity). Bounded cross-batch cache, the
-    simhash64_kernel rule (Zipf vocabularies re-enter immediately)."""
-    import hashlib
-
-    import numpy as np
-
-    out = np.empty(len(dict_vals), dtype=np.int64)
-    for i, t in enumerate(dict_vals):
-        v = cache.get(t)
-        if v is None:
-            v = (
-                int.from_bytes(hashlib.md5(t.encode()).digest()[:8], "big") >> 4
-            ) % 512
-            if len(cache) >= 500_000:
-                cache.clear()
-            cache[t] = v
-        out[i] = v
-    return out
-
-
 @register(
     "dsir_importance_select",
     oracle=f"""
@@ -1924,10 +1895,11 @@ def dsir_importance_select(spark, sf_dir):
     # exploded the ~27M-token stream and ran one interpreted md5+conv per
     # token (fit) plus a collect_list/sort_array/interpreted-HOF fold per
     # document (apply). Each pass is now ONE Arrow kernel over the per-doc
-    # token arrays: tokens dictionary-encode per batch (Zipf — md5 runs once
-    # per unique string behind a bounded cache), buckets come from a numpy
-    # gather, and per-batch bincounts reduce the fit pass to ≤512 partial
-    # rows. The apply pass gathers each token's log-ratio, lexsorts within
+    # token arrays: tokens dictionary-encode per batch, each unique string
+    # gets its bucket md5_long(tok) % 512 through the shared md5np.Md5Intern
+    # (Zipf — md5 runs about once per vocabulary word), tokens take it by a
+    # numpy gather, and per-batch bincounts reduce the fit pass to ≤512
+    # partial rows. The apply pass gathers each token's log-ratio, lexsorts within
     # the batch by (doc, lr), and folds per document with one vectorized add
     # per token position — acc starts at 0.0 and adds ascending-sorted
     # values sequentially, the bit-exact image of the expression path's
@@ -1944,8 +1916,11 @@ def dsir_importance_select(spark, sf_dir):
         idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
         return lens, enc.dictionary.to_pylist(), idx
 
+    def _buckets(intern, dict_vals):
+        return np.array(intern.hash_all(dict_vals), dtype=np.int64) % 512
+
     def fit_kernel(batches):
-        cache: dict[str, int] = {}
+        intern = Md5Intern()
         for rb in batches:
             tgt = pc.fill_null(rb.column(0), False).to_numpy(
                 zero_copy_only=False
@@ -1953,7 +1928,7 @@ def dsir_importance_select(spark, sf_dir):
             lens, dict_vals, idx = _flat(rb, 1)
             if not len(idx):
                 continue
-            b = _dsir_bucket_of(dict_vals, cache)[idx]
+            b = _buckets(intern, dict_vals)[idx]
             cs = np.bincount(b, minlength=512)
             ct = np.bincount(b[np.repeat(tgt, lens)], minlength=512)
             nz = np.nonzero(cs)[0]
@@ -1993,7 +1968,7 @@ def dsir_importance_select(spark, sf_dir):
         lr_arr[row["b"]] = row["lr"]
 
     def apply_kernel(batches):
-        cache: dict[str, int] = {}
+        intern = Md5Intern()
         for rb in batches:
             ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             lens, dict_vals, idx = _flat(rb, 1)
@@ -2004,7 +1979,7 @@ def dsir_importance_select(spark, sf_dir):
             if not keep.any():
                 continue
             vals = (
-                lr_arr[_dsir_bucket_of(dict_vals, cache)[idx]]
+                lr_arr[_buckets(intern, dict_vals)[idx]]
                 if len(idx)
                 else np.empty(0, dtype=np.float64)
             )
@@ -2245,7 +2220,7 @@ def ccnet_bucket(docs):
     "base/total broadcast back. Docs with < 2 tokens have no bigram score "
     "and are excluded (same contract as doc_bigram_logprob)",
 )
-def ccnet_lm_buckets(spark, sf_dir, *, eager: bool = True):
+def ccnet_lm_buckets(spark, sf_dir):
     from ..session import owned_persist
 
     # Persist the TOKEN ARRAYS, not the exploded bigram stream (round-10
@@ -2256,15 +2231,13 @@ def ccnet_lm_buckets(spark, sf_dir, *, eager: bool = True):
     # Interleaved A/B at sf10: 14.0 -> 8.9 s min (artifacts/
     # ccnet_toks_ab_r10.json); the explode re-runs per consumer but is
     # map-side over cached arrays — cache write/read of the exploded rows
-    # was the bigger cost. eager=False skips the materializing count for
-    # explain/schema-only callers; keep the default to execute.
+    # was the bigger cost.
     d = owned_persist(
         T(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars", tokens(F.col("text")).alias("toks")
         )
     )
-    if eager:
-        d.count()
+    d.count()
     scoreable = d.filter(F.size("toks") >= 2)
     n = F.size("toks")
     pairs = F.arrays_zip(

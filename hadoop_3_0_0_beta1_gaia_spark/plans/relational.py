@@ -1740,6 +1740,17 @@ def copurchase_triangles(spark, sf_dir):
     return tris.crossJoin(F.broadcast(n_edges)).crossJoin(F.broadcast(n_nodes))
 
 
+# Row gate of the co-purchase graph entries' vertex-sized broadcasts
+# (degrees, BFS frontier/visited): up to ~16M vertices (≈256 MB built) the
+# side broadcasts; above it the join stays a SortMergeJoin, the 100 TB
+# fallback. ``n`` is a row count the caller already has (a populate count).
+_GRAPH_BCAST_MAX_ROWS = 16_000_000
+
+
+def _bcast_if_small(f, n: int):
+    return F.broadcast(f) if n <= _GRAPH_BCAST_MAX_ROWS else f
+
+
 # DOULION edge-sampling probability 1/_TRI_PINV (Tsourakakis et al., KDD'09):
 # keep an edge iff its 60-bit md5 fraction < 2^60/_TRI_PINV — deterministic on
 # both engines, so the oracle reproduces the SAMPLE, not just the estimator.
@@ -1816,8 +1827,7 @@ def copurchase_triangles_sampled(spark, sf_dir):
     # shuffled se twice; broadcast both degree sides so the orientation pass
     # stays map-side over the cache. deg is persisted (it feeds BOTH join
     # sides) and its populate count gates the broadcast exactly as in
-    # copurchase_pagerank (≤16M vertices ≈ 256 MB built; above → SMJ, the
-    # honest 100 TB fallback).
+    # copurchase_pagerank (_bcast_if_small).
     deg = owned_persist(
         se.select(F.col("a").alias("v"))
         .unionByName(se.select(F.col("b").alias("v")))
@@ -1825,9 +1835,12 @@ def copurchase_triangles_sampled(spark, sf_dir):
         .agg(F.count("*").alias("d"))
     )
     n_v = deg.count()
-    bc = (lambda f: F.broadcast(f)) if n_v <= 16_000_000 else (lambda f: f)
-    da = bc(deg.select(F.col("v").alias("a"), F.col("d").alias("d_a")))
-    db = bc(deg.select(F.col("v").alias("b"), F.col("d").alias("d_b")))
+    da = _bcast_if_small(
+        deg.select(F.col("v").alias("a"), F.col("d").alias("d_a")), n_v
+    )
+    db = _bcast_if_small(
+        deg.select(F.col("v").alias("b"), F.col("d").alias("d_b")), n_v
+    )
     a_first = (F.col("d_a") < F.col("d_b")) | (
         (F.col("d_a") == F.col("d_b")) & (F.col("a") < F.col("b"))
     )
@@ -1943,8 +1956,8 @@ def copurchase_pagerank(spark, sf_dir):
     # the 240M-row sf10 edge list crossed a shuffle four times for the two
     # iterations). Now deg⋈r pre-joins vertex-to-vertex into one per-vertex
     # contribution frame (r DIV d), and the edge stream joins ONCE per
-    # iteration — broadcast when the vertex count allows it (≤ 16M vertices
-    # ≈ 256 MB built), so the edge list is never shuffled by src at all;
+    # iteration — broadcast when the vertex count allows it
+    # (_bcast_if_small), so the edge list is never shuffled by src at all;
     # above the cap the planner falls back to SMJ (a 100 TB part table
     # outgrows any broadcast) and still pays half the r11 join work.
     #
@@ -1971,7 +1984,6 @@ def copurchase_pagerank(spark, sf_dir):
         )
     )
     n_v = deg.count()
-    bcast = (lambda f: F.broadcast(f)) if n_v <= 16_000_000 else (lambda f: f)
     r = deg.select("v", F.lit(_PR_SCALE).cast("long").alias("r"))
     base = F.floor(F.lit(0.15 * _PR_SCALE)).cast("long")
     for _ in range(_PR_ITERS):
@@ -1980,7 +1992,7 @@ def copurchase_pagerank(spark, sf_dir):
             .select("v", F.expr("r DIV d").alias("c"))
         )
         contrib = (
-            edges.join(bcast(per_v), edges.src == per_v.v)
+            edges.join(_bcast_if_small(per_v, n_v), edges.src == per_v.v)
             .select("dst", "c")
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
@@ -2090,15 +2102,15 @@ def copurchase_bfs_depth(spark, sf_dir):
     # checkpointed small sides keeps the edge cache map-side for all
     # _BFS_DEPTH rounds. Gated per round on the actual frontier/visited row
     # count (free: the frames are checkpointed) — a graph whose reachable
-    # set outgrows ~16M vertices (≈256 MB built) falls back to SMJ.
+    # set outgrows the gate falls back to SMJ (_bcast_if_small).
     n_visited = 1
-    bc = lambda f, n: F.broadcast(f) if n <= 16_000_000 else f
     for d in range(1, _BFS_DEPTH + 1):
         nxt = (
-            bc(frontier, n_visited).join(edges, frontier.v == edges.src)
+            _bcast_if_small(frontier, n_visited)
+            .join(edges, frontier.v == edges.src)
             .select(F.col("dst").alias("v"))
             .distinct()
-            .join(bc(visited, n_visited), "v", "left_anti")
+            .join(_bcast_if_small(visited, n_visited), "v", "left_anti")
             .select("v", F.lit(d).cast("long").alias("depth"))
             .localCheckpoint(eager=True)
         )

@@ -285,13 +285,11 @@ def _winnow_frame(spark, sf_dir):
     construction (asserted in tests vs :func:`_winnow_frame_expr`); the
     expression version pays ~|doc| interpreted md5+conv calls per document.
     """
-    import hashlib
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from ..functions.md5np import md5_60bit_fixed_len
+    from ..functions.md5np import md5_60, md5_60bit_fixed_len
 
     schema = StructType(
         [StructField("doc_id", LongType(), False), StructField("fp", LongType(), False)]
@@ -343,10 +341,7 @@ def _winnow_frame(spark, sf_dir):
                 nt = texts.iloc[pos]
                 n = len(nt)
                 hs = np.fromiter(
-                    (
-                        int(hashlib.md5(nt[i : i + K].encode("utf-8")).hexdigest()[:15], 16)
-                        for i in range(n - K + 1)
-                    ),
+                    (md5_60(nt[i : i + K]) for i in range(n - K + 1)),
                     dtype=np.int64,
                     count=n - K + 1,
                 )

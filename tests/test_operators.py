@@ -922,6 +922,114 @@ def test_md5np_matches_hashlib_every_length():
         pass
 
 
+def test_md5_60_equals_both_spellings_and_spark_md5_long(spark):
+    """The one scalar md5 intern (functions/md5np.md5_60) equals both
+    spellings the kernels used to inline — ``digest()[:8] >> 4`` and
+    ``int(hexdigest()[:15], 16)`` — and Spark's ``md5_long`` on the same
+    text: ASCII, non-ASCII (multi-byte UTF-8) and the empty string."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import md5_long
+    from hadoop_3_0_0_beta1_gaia_spark.functions.md5np import (
+        md5_60,
+        md5_64,
+        md5_hex,
+    )
+
+    texts = ["", "a", "the quick brown fox", "café au lait", "ümläut tökens",
+             "日本語のテキスト", "\x01wild", "x" * 200]
+    for t in texts:
+        b = t.encode("utf-8")
+        assert md5_60(t) == int.from_bytes(hashlib.md5(b).digest()[:8], "big") >> 4
+        assert md5_60(t) == int(hashlib.md5(b).hexdigest()[:15], 16)
+        assert md5_60(t) == md5_64(t) >> 4
+        assert md5_hex(t) == hashlib.md5(b).hexdigest()
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = {r["i"]: r["h"] for r in df.select("i", md5_long(F.col("t")).alias("h")).collect()}
+    assert got == {i: md5_60(t) for i, t in enumerate(texts)}
+
+
+def test_md5_intern_is_transparent_and_bounded():
+    """Md5Intern returns fn(k) for every key across forced clears and never
+    holds more than INTERN_MAX_ENTRIES entries or INTERN_MAX_CHARS key
+    characters — driven past the entry bound with short keys and past the
+    character bound with long ones (pure Python, no Spark)."""
+    from hadoop_3_0_0_beta1_gaia_spark.functions.md5np import (
+        INTERN_MAX_CHARS,
+        INTERN_MAX_ENTRIES,
+        Md5Intern,
+        md5_60,
+        md5_hex,
+    )
+
+    def drive(intern, keys, chunk, fn=md5_60):
+        clears = 0
+        prev = 0
+        for lo in range(0, len(keys), chunk):
+            part = keys[lo : lo + chunk]
+            assert intern.hash_all(part) == [fn(k) for k in part]
+            held = len(intern.cache)
+            assert held <= INTERN_MAX_ENTRIES
+            assert intern.chars <= INTERN_MAX_CHARS
+            assert intern.chars == sum(map(len, intern.cache))
+            clears += held < prev
+            prev = held
+        return clears
+
+    short = [f"k{i}" for i in range(INTERN_MAX_ENTRIES + 100_000)]
+    intern = Md5Intern()
+    assert drive(intern, short, 20_000) >= 1
+    # hits after a clear still return the right values (repeats re-enter)
+    assert drive(intern, short[:10_000] * 2, 5_000) == 0
+
+    long_keys = [f"{i:08d}" * 500 for i in range(INTERN_MAX_CHARS // 4_000 + 200)]
+    intern = Md5Intern(md5_hex)
+    assert drive(intern, long_keys, 100, md5_hex) >= 1
+    # a single key longer than the character budget is hashed, not kept
+    huge = "y" * (INTERN_MAX_CHARS + 1)
+    assert intern.hash_all([huge, "z"]) == [md5_hex(huge), md5_hex("z")]
+    assert huge not in intern.cache and intern.chars <= INTERN_MAX_CHARS
+
+
+def test_py_tokens_equal_spark_tokens(spark):
+    """text_metrics.py_tokens (the kernels' tokenizer) equals the Spark
+    ``tokens`` expression on \\x0b/\\x0c (whitespace to Java ``\\s`` and to
+    Python alike), on U+00A0, \\x1c-\\x1f, U+0085 and U+3000 (whitespace
+    to ``str.split()`` but not to Java ``\\s``), on runs of spaces,
+    leading/trailing spaces and ``""``; py_ngrams equals the
+    ``array_join(slice(...))`` n-grams over those tokens."""
+    from pyspark.sql import functions as F
+
+    from hadoop_3_0_0_beta1_gaia_spark.functions.text_metrics import (
+        py_ngrams,
+        py_tokens,
+        tokens,
+    )
+
+    texts = ["a\x0bb", "a\x0cb", "a\u00a0b", "a\x1cb\x1dc\x1ed\x1fe",
+             "x\u0085y\u3000z", "one   two\t\tthree", "  lead and trail  ",
+             "", " ", "MiXeD Case\nLines\rCR", "ab cd ef gh"]
+    n = 3
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    toks = tokens(F.col("t"))
+    grams = F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    rows = df.select("i", toks.alias("toks"), grams.alias("grams")).collect()
+    for r in rows:
+        t = texts[r["i"]]
+        assert py_tokens(t) == list(r["toks"]), repr(t)
+        assert list(py_ngrams(py_tokens(t), n)) == list(r["grams"]), repr(t)
+    # the cases above really split differently under str.split()
+    assert "a\u00a0b".split() != py_tokens("a\u00a0b")
+
+
 def test_winnow_kernel_nonascii_fallback(spark, tmp_path):
     """Non-ASCII documents (multi-byte UTF-8, where char offsets != byte
     offsets) must take the per-doc hashlib fallback and still equal the
@@ -1743,6 +1851,12 @@ def test_expand_bucket_pairs_kernel_equals_expression(spark, sf_dir):
         [([],), ([7],), (None,)], "ids array<long>"
     )
     assert expand_bucket_pairs(degenerate).count() == 0
+    # no expression fallback: ids that are not array<bigint> raise, naming
+    # the column type
+    for ddl, shown in (("ids array<int>", "array<int>"),
+                       ("ids array<string>", "array<string>")):
+        with pytest.raises(TypeError, match=shown):
+            expand_bucket_pairs(spark.createDataFrame([], ddl))
 
 
 def test_substring_cut_fast_path_matches_reconstruction(spark):
@@ -2029,35 +2143,6 @@ def test_image_dhash_id_type_contract(spark):
     strdocs = spark.createDataFrame([("a", "t")], "doc_id string, text string")
     with _pytest.raises(TypeError, match="integral id column"):
         image_dhash63(strdocs)
-
-
-def test_bigram_plan_builders_support_lazy_inspection(spark, monkeypatch):
-    """doc_bigram_logprob / ccnet_lm_buckets accept eager=False for
-    plan-only callers (ADVICE r9): with the opt-out, the builders must not
-    run the materializing count() at plan-build time — pinned by making
-    DataFrame.count raise, so any eager execution fails the build itself.
-    The eager default still counts (the measured 2.1x persist win)."""
-    import pytest as _pytest
-
-    from hadoop_3_0_0_beta1_gaia_spark.plans.llm_quality import (
-        ccnet_lm_buckets,
-        doc_bigram_logprob,
-    )
-
-    src = "/root/testdata/sf0.001"
-
-    def _boom(self):
-        raise AssertionError("count() ran during plan-only build")
-
-    # patch the CONCRETE DataFrame class (pyspark 4 splits the abstract
-    # pyspark.sql.DataFrame from the classic implementation's own count)
-    monkeypatch.setattr(type(spark.range(1)), "count", _boom)
-    bl = doc_bigram_logprob(spark, src, eager=False)
-    assert bl.columns == ["doc_id", "n_bigrams", "avg_logprob"]
-    cc = ccnet_lm_buckets(spark, src, eager=False)
-    assert cc.columns == ["doc_id", "lang", "score_ppm", "bucket"]
-    with _pytest.raises(AssertionError, match="plan-only build"):
-        doc_bigram_logprob(spark, src)  # eager default still materializes
 
 
 def test_connected_components_pointer_jumping(spark):
