@@ -258,19 +258,18 @@ def _df_capped_shingles(
     # the re-derivation cost ~5 s per consumer on a 35 s entry — persist +
     # eager populate cuts the capped family ~20-30%). Rows are (id, shingle)
     # longs — ~16 B/row, MEMORY_AND_DISK spills at scale.
-    capped = owned_persist(sh.join(rare, "shingle"))
-    capped.count()
+    capped, _ = owned_persist(sh.join(rare, "shingle"))
     sizes = capped.groupBy("id").agg(F.count("*").alias("sz"))
     return capped, sizes
 
 
 def _record_cap_obs(diag: dict | None, name: str, obs) -> None:
     """File a cap Observation in the caller's diag dict under its own name
-    (``shingle_df_cap_<generator>`` / ``substring_occ_cap``) — never a fixed
-    key, so one diag dict shared across two capped generators cannot
-    last-write-wins-clobber a metric (the cross-wiring class the removed
-    module globals had). Reusing the SAME generator twice on one dict is
-    still a collision and raises."""
+    (``shingle_df_cap_<generator>`` / ``substring_occ_cap`` /
+    ``lsh_bucket_cap``) — one key per cap, so one diag dict shared across two
+    capped generators cannot last-write-wins-clobber a metric (the
+    cross-wiring class the removed module globals had). Reusing the SAME
+    generator twice on one dict is still a collision and raises."""
     if diag is None:
         return
     if name in diag:
@@ -285,7 +284,8 @@ def cap_counter(diag: dict, name: str | None = None) -> dict:
     """Metrics of a capped pair-generator action, read from the ``diag``
     dict the generator filled (df cap: {'df_dropped_shingles',
     'df_dropped_rows'}; occurrence cap: {'occ_dropped_grams',
-    'occ_dropped_rows'}). Entries are keyed by observation name; pass
+    'occ_dropped_rows'}; LSH bucket cap: {'lsh_dropped_buckets',
+    'lsh_dropped_ids'}). Entries are keyed by observation name; pass
     ``name`` when the dict holds more than one (one diag shared across
     several generators), omit it for the common single-generator case.
     Read AFTER an action on the generator's returned frame —
@@ -325,12 +325,7 @@ def ngram_jaccard_pairs(
 
     # a-side, b-side, and sizes all read the shingle frame; no exchange
     # reuse across them (measured 8 corpus scans unpersisted) — persist once
-    # and materialize EAGERLY: AQE submits the independent consumer branches
-    # concurrently, and parallel scans of a not-yet-populated cache each
-    # recompute the full shingle pass (sf10: 3x a ~200 s stage; losers'
-    # blocks are discarded). One count() populates the cache first.
-    sh_arr = owned_persist(shingle_arrays(df, n, id_col, text_col))
-    sh_arr.count()
+    sh_arr, _ = owned_persist(shingle_arrays(df, n, id_col, text_col))
     sh = sh_arr.select("id", F.explode("shingles").alias("shingle"))
     if max_df is not None:
         sh, sizes = _df_capped_shingles(sh, max_df, diag=diag)
@@ -478,6 +473,7 @@ def lsh_candidate_pairs(
     sig: DataFrame,
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
+    diag: dict | None = None,
 ) -> DataFrame:
     """Band the per-doc signature array and bucket on (band, banded signature
     string). Banding is a map-side array slice; buckets are formed by ONE
@@ -493,10 +489,11 @@ def lsh_candidate_pairs(
     caps that: buckets with more than that many co-bucketed ids are DROPPED
     (their members are boilerplate-identical; pair expansion over them is
     k² noise, and they still surface through the remaining bands or the
-    exact-dedup pass). Dropped buckets are counted via a named observation
-    (``lsh_dropped_buckets`` / ``lsh_dropped_ids``, read with
-    :func:`lsh_drop_counter` — the reference's defensive-scan-guard posture,
-    SequenceFileInputFilter-style). Input: (id, sig array<long>).
+    exact-dedup pass). Dropped buckets are counted via the ``lsh_bucket_cap``
+    observation filed in the caller's ``diag`` (``lsh_dropped_buckets`` /
+    ``lsh_dropped_ids``, read with :func:`cap_counter` — the reference's
+    defensive-scan-guard posture, SequenceFileInputFilter-style).
+    Input: (id, sig array<long>).
 
     The signature length must divide evenly into bands: the slice here keeps
     only floor(size/rows_per_band) full bands while the DuckDB twin's
@@ -512,7 +509,7 @@ def lsh_candidate_pairs(
     if max_bucket_size is not None:
         if max_bucket_size < 2:
             raise ValueError("max_bucket_size must be >= 2")
-        buckets, _LAST_DROP_OBS[0] = with_counter(
+        buckets, obs = with_counter(
             buckets,
             "lsh_bucket_cap",
             F.sum((F.size("ids") > max_bucket_size).cast("long")).alias(
@@ -522,20 +519,9 @@ def lsh_candidate_pairs(
                 F.when(F.size("ids") > max_bucket_size, F.size("ids")).otherwise(0)
             ).alias("lsh_dropped_ids"),
         )
+        _record_cap_obs(diag, "lsh_bucket_cap", obs)
         buckets = buckets.filter(F.size("ids") <= max_bucket_size)
     return expand_bucket_pairs(buckets).distinct()
-
-
-# Most-recent bucket-cap observation (set when lsh_candidate_pairs runs with
-# max_bucket_size); read AFTER an action on the returned frame.
-_LAST_DROP_OBS: list = [None]
-
-
-def lsh_drop_counter() -> dict:
-    """Metrics of the last capped lsh_candidate_pairs action:
-    {'lsh_dropped_buckets': n, 'lsh_dropped_ids': m}."""
-    obs = _LAST_DROP_OBS[0]
-    return dict(obs.get) if obs is not None else {}
 
 
 def expand_bucket_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
@@ -638,9 +624,12 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket_size: int | None = None,
+    diag: dict | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → signature → banded
-    candidates → exact-Jaccard verify on candidates only.
+    candidates → exact-Jaccard verify on candidates only. With
+    ``max_bucket_size`` and ``diag`` given, the bucket-cap drop metrics land
+    in ``diag`` (:func:`cap_counter`).
 
     The verify intersection starts FROM the candidate pairs, never from the
     all-pairs shingle join — candidate count is linear in corpus size, so the
@@ -668,16 +657,13 @@ def minhash_lsh_pairs(
             "on the Spark and DuckDB sides"
         )
 
-    sh_arr = owned_persist(shingle_arrays(df, n, id_col, text_col))
-    # eager materialization: the candidate chain and the verify a/b sides are
-    # independent plan branches that AQE starts concurrently — racing an
-    # unpopulated cache recomputes the shingle scan once per branch (found
-    # by the sf10 sweep: ~3x a ~200 s stage)
-    sh_arr.count()
+    # the candidate chain and the verify a/b sides all read the shingles
+    sh_arr, _ = owned_persist(shingle_arrays(df, n, id_col, text_col))
     cands = lsh_candidate_pairs(
         minhash_signatures(sh_arr, num_hashes),
         rows_per_band,
         max_bucket_size=max_bucket_size,
+        diag=diag,
     )
     a = sh_arr.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh_arr.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
@@ -906,10 +892,8 @@ def exact_substring_spans(
         raise ValueError("k must be >= 2")
     g = positional_grams(df, k, id_col=id_col, text_col=text_col)
     # both self-join sides (and, when capping, the frequency agg) read the
-    # gram stream; persist + eager count, the jaccard/containment-measured
-    # pattern (4x at sf0.1; AQE concurrent-branch recompute otherwise)
-    g = owned_persist(g)
-    g.count()
+    # gram stream (persisting measured 4x at sf0.1)
+    g, _ = owned_persist(g)
     if max_occ is not None:
         if max_occ < 1:
             raise ValueError("max_occ must be >= 1")
@@ -926,8 +910,7 @@ def exact_substring_spans(
         )
         _record_cap_obs(diag, "substring_occ_cap", obs)
         keep = freq.filter(F.col("occ") <= max_occ).select("gh")
-        g = owned_persist(g.join(keep, "gh").select("id", "pos", "gh"))
-        g.count()
+        g, _ = owned_persist(g.join(keep, "gh").select("id", "pos", "gh"))
     a = g.select(F.col("id").alias("doc_a"), F.col("pos").alias("pos_a"), "gh")
     b = g.select(F.col("id").alias("doc_b"), F.col("pos").alias("pos_b"), "gh")
     anchors = (
@@ -1438,11 +1421,7 @@ def simhash_hamming_pairs(
     # (measured ~15% at sf0.1: the verify join over ~1.5M candidate pairs
     # dominates on the synthetic word-soup corpus, so the shingle-persist
     # lesson applies but with a smaller constant than containment's 4x).
-    sims = owned_persist(simhash32(df, id_col=id_col, text_col=text_col))
-    # Eagerly populate before AQE's concurrent consumer branches (banding +
-    # both verify sides) race the cache and each recompute the fold (the
-    # round-5 shingle lesson, measured 12-30x there; same no-exchange shape).
-    sims.count()
+    sims, _ = owned_persist(simhash32(df, id_col=id_col, text_col=text_col))
     bands = F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda j: F.struct(
@@ -1759,11 +1738,8 @@ def hamming63_pairs(
     """
     if not 1 <= radius <= 7:
         raise ValueError("radius must be in 1..7 for a 63-bit fingerprint")
-    sims = owned_persist(sims)
-    # Eager count: x/y self-join sides PLUS the optional cap branch are three
-    # concurrent consumers of this cache; unpopulated, AQE recomputes the
-    # fingerprint computation once per branch (round-5 shingle lesson).
-    sims.count()
+    # x/y self-join sides plus the optional cap branch read the fingerprints
+    sims, _ = owned_persist(sims)
     bands = F.array(
         *[
             F.struct(
@@ -1886,10 +1862,7 @@ def containment_pairs(
 
     # three consumers (a-side, b-side, sizes) and no exchange reuse across
     # them — persist the shingle frame once (minhash_lsh_pairs precedent)
-    # and materialize eagerly (concurrent AQE branches race an unpopulated
-    # cache into per-branch recompute; see ngram_jaccard_pairs)
-    sh_arr = owned_persist(shingle_arrays(df, n, id_col, text_col))
-    sh_arr.count()
+    sh_arr, _ = owned_persist(shingle_arrays(df, n, id_col, text_col))
     sh = sh_arr.select("id", F.explode("shingles").alias("shingle"))
     if max_df is not None:
         sh, sizes = _df_capped_shingles(sh, max_df, generator="containment",

@@ -431,8 +431,7 @@ def _tile_cos_pairs(
     )
     # Both tile-join sides consume cells; without the persist each side
     # re-runs the scan + projection + groupBy (measured 2 scans in the plan).
-    cells = owned_persist(cells)
-    cells.count()  # eager populate before the a/b branches race the cache
+    cells, _ = owned_persist(cells)
     a = cells.select(
         "bucket", F.col("blk").alias("a_blk"), F.col("rows").alias("a_rows")
     )
@@ -542,10 +541,13 @@ def cosine_near_dup_lsh(
         # ONCE for the stats agg and the cells agg (unpersisted, the stats
         # pass re-paid the whole projection — measured +30% at sf10); the
         # ledger releases it after the query's terminal action.
-        base = owned_persist(base)
-        mx = base.groupBy("bucket").agg(F.count("*").alias("n")).agg(
-            F.max("n")
-        ).collect()[0][0]
+        base, mx = owned_persist(
+            base,
+            lambda f: f.groupBy("bucket")
+            .agg(F.count("*").alias("n"))
+            .agg(F.max("n"))
+            .collect()[0][0],
+        )
         num_blocks = max(1, min(256, -(-(mx or 0) // 2048)))
     return _tile_cos_pairs(base, num_blocks, threshold, round_digits, 1e-300)
 
@@ -669,15 +671,12 @@ def ivf_topk(
     base = with_norm(df, vec_col).select(F.col(id_col).alias("id"), "__v", "__n2")
     # keyed feeds BOTH sides of the bucket join; the probe chain (broadcast
     # cross + window) would otherwise recompute once per side.
-    keyed = owned_persist(
+    keyed, _ = owned_persist(
         base.join(
             probes.select(F.col("vec_id").alias("id"), "centroid_id", "probe"),
             "id",
         )
     )
-    # Eagerly populate before the q/n consumer branches race the cache
-    # (AQE concurrent-branch recompute — the round-5 shingle lesson).
-    keyed.count()
     q = keyed.filter(query_filter) if query_filter is not None else keyed
     q = q.select(
         F.col("id").alias("q_id"),
@@ -1766,7 +1765,8 @@ def semantic_dedup(
     Output: (vec_id, centroid_id, keep) for every input vector.
     """
 
-    assigned = owned_persist(
+    # the tile sides and the final join-back read it; the count sizes blocks
+    assigned, n_total = owned_persist(
         df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
         .join(
             ivf_assign(df, num_centroids, id_col, vec_col, round_digits).select(
@@ -1775,10 +1775,6 @@ def semantic_dedup(
             "id",
         )
     )
-    # Eagerly populate before the tile sides + final join-back race the
-    # cache (AQE concurrent-branch recompute — round-5 lesson); the count
-    # also sizes the tile blocks.
-    n_total = assigned.count()
     if num_blocks is None:
         # ~2k vectors per cell: kernel throughput is flat in cell size
         # (swept 1k-5k, ~1.6 GFLOP/s), so smaller tiles purely improve

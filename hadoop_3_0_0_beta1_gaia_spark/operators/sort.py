@@ -157,12 +157,10 @@ def global_rank(
     """
     spark = df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    part = owned_persist(
+    part, counts = owned_persist(
         df.repartitionByRange(n, *sort_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    counts = dict(
-        part.groupBy("__pid").count().collect()
+        .withColumn("__pid", F.spark_partition_id()),
+        lambda f: dict(f.groupBy("__pid").count().collect()),
     )  # ≤ n entries — scale-safe
     offsets, acc = {}, 0
     for pid in sorted(counts):
@@ -216,12 +214,10 @@ def global_running_total(
         )
     spark = df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    part = owned_persist(
+    part, sums = owned_persist(
         df.repartitionByRange(n, *sort_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    sums = dict(
-        part.groupBy("__pid").agg(F.sum(value_col).alias("s")).collect()
+        .withColumn("__pid", F.spark_partition_id()),
+        lambda f: dict(f.groupBy("__pid").agg(F.sum(value_col).alias("s")).collect()),
     )  # ≤ n entries — scale-safe
     offsets, acc = {}, 0
     for pid in sorted(sums):

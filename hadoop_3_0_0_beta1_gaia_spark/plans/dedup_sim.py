@@ -175,8 +175,9 @@ def dedup_minhash_lsh(spark, sf_dir):
     "lsh_candidate_pairs). The cap CHANGES the answer (pairs surfaced only "
     "through an oversized bucket disappear), so the DuckDB oracle reproduces "
     "the drop rule exactly; dropped buckets/ids are counted via the "
-    "lsh_drop_counter observation. Cap=2 is deliberately tight so the rule "
-    "demonstrably fires at gate SF (sf0.01 has size-3 buckets)",
+    "lsh_bucket_cap observation (cap_counter over the caller's diag). Cap=2 "
+    "is deliberately tight so the rule demonstrably fires at gate SF (sf0.01 "
+    "has size-3 buckets)",
 )
 def dedup_minhash_lsh_capped(spark, sf_dir):
     return minhash_lsh_pairs(
@@ -829,10 +830,7 @@ def decontaminate_near_dup(spark, sf_dir):
     from ..functions.rounding import fround
 
     d = T(spark, sf_dir, "documents")
-    sh = owned_persist(
-        shingle_arrays(d, _MINHASH["n"])
-    )
-    sh.count()  # eager materialization (persist-gate contract)
+    sh, _ = owned_persist(shingle_arrays(d, _MINHASH["n"]))
     banded = banded_signatures(
         minhash_signatures(sh, _MINHASH["num_hashes"]),
         _MINHASH["rows_per_band"],
@@ -865,13 +863,12 @@ def decontaminate_near_dup(spark, sf_dir):
     # agg); unpersisted, each re-derived the full verify chain — banding,
     # broadcast probe, array-intersect verify — doubling the entry's wall
     # (r11 stage isolation: ~6 s per derivation at sf10 on a warm shingle
-    # cache). The surviving pair set is audit-sized; persist + eager count.
-    pairs = owned_persist(
+    # cache). The surviving pair set is audit-sized.
+    pairs, _ = owned_persist(
         ver.withColumn("jaccard", jac)
         .filter((F.col("inter") > 0) & (F.col("jaccard") >= _MINHASH["threshold"]))
         .select("doc_id", "eval_id", "jaccard")
     )
-    pairs.count()  # eager materialization (persist-gate contract)
     w = Window.partitionBy("doc_id").orderBy(
         F.col("jaccard").desc(), F.col("eval_id")
     )
@@ -905,6 +902,24 @@ _decon_nd_finalize()
 _INCR_SPLIT = 400  # doc_id < split = existing corpus; >= split = new batch
 
 
+def admission_summary(batch, pairs):
+    """One-row summary of an incremental admission: ``batch_docs`` (rows of
+    ``batch``, a ``doc_id`` frame), ``dup_new_docs`` (distinct batch ids that
+    are ``id_b`` of a surviving existing-vs-batch pair) and ``admitted_docs``
+    (the rest). Checkpointed eagerly, so the rejected set is released before
+    returning."""
+    rejected = pairs.select(F.col("id_b").alias("doc_id")).distinct().persist()
+    admitted = batch.join(rejected, "doc_id", "left_anti")
+    out = (
+        batch.agg(F.count("*").cast("long").alias("batch_docs"))
+        .crossJoin(rejected.agg(F.count("*").cast("long").alias("dup_new_docs")))
+        .crossJoin(admitted.agg(F.count("*").cast("long").alias("admitted_docs")))
+    )
+    out = out.localCheckpoint(eager=True)
+    rejected.unpersist()
+    return out
+
+
 @register(
     "dedup_incremental_exact",
     oracle=f"""
@@ -932,8 +947,8 @@ _INCR_SPLIT = 400  # doc_id < split = existing corpus; >= split = new batch
     "normalized_fp — the same identity exact_dedup uses) is unseen in the existing "
     "corpus (left_anti join on fp — one shuffle keyed on the fingerprint, identical "
     "at 100 TB where 'existing' is the fingerprint store), then deduped within "
-    "itself. Reports batch/novel/admitted counts; the anti-joined frame is persisted "
-    "so the summary aggregates share one pass",
+    "itself. Reports batch/novel/admitted counts; novel and admitted are one "
+    "aggregate over the anti-joined frame, its only consumer, so it is not persisted",
 )
 def dedup_incremental_exact(spark, sf_dir):
     from ..functions.dedup import normalized_fp
@@ -942,7 +957,7 @@ def dedup_incremental_exact(spark, sf_dir):
     fp = d.select("doc_id", normalized_fp("text").alias("fp"))
     existing = fp.filter(F.col("doc_id") < _INCR_SPLIT).select("fp").distinct()
     batch = fp.filter(F.col("doc_id") >= _INCR_SPLIT)
-    fresh = owned_persist(batch.join(existing, "fp", "left_anti"))
+    fresh = batch.join(existing, "fp", "left_anti")
     return batch.agg(F.count("*").cast("long").alias("batch_docs")).crossJoin(
         fresh.agg(
             F.count("*").cast("long").alias("novel_docs"),
@@ -1266,8 +1281,7 @@ def fuzzy_match_customers(spark, sf_dir):
     # (no exchange Spark could reuse), so unpersisted each side re-ran the
     # full wildcard expansion + hash over the corpus (r11: 126 s warm at the
     # 1.5M-customer fixture; kernel + intern + persist -> see after plan).
-    keys = owned_persist(_fuzzy_wildcard_keys(names))
-    keys.count()  # eager materialization (persist-gate contract)
+    keys, _ = owned_persist(_fuzzy_wildcard_keys(names))
     a = keys.select(F.col("id").alias("id_a"), F.col("nm").alias("nm_a"), "i", "bkh")
     b = keys.select(F.col("id").alias("id_b"), F.col("nm").alias("nm_b"), "bkh")
     # No distinct() needed: two DIFFERENT names co-bucket at exactly ONE key
@@ -1331,16 +1345,7 @@ def dedup_incremental_minhash(spark, sf_dir):
         (F.col("id_a") < _INCR_SPLIT) & (F.col("id_b") >= _INCR_SPLIT)
     )
     batch = d.filter(F.col("doc_id") >= _INCR_SPLIT).select("doc_id")
-    rejected = pairs.select(F.col("id_b").alias("doc_id")).distinct().persist()
-    admitted = batch.join(rejected, "doc_id", "left_anti")
-    out = (
-        batch.agg(F.count("*").cast("long").alias("batch_docs"))
-        .crossJoin(rejected.agg(F.count("*").cast("long").alias("dup_new_docs")))
-        .crossJoin(admitted.agg(F.count("*").cast("long").alias("admitted_docs")))
-    )
-    out = out.localCheckpoint(eager=True)
-    rejected.unpersist()
-    return out
+    return admission_summary(batch, pairs)
 
 
 @register(

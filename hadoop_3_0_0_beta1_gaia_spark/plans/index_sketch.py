@@ -33,11 +33,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.dedup import duck_md5_int32, md5_int32
+from ..functions.dedup import duck_md5_int32, duck_md5_long, md5_int32, md5_long
 from ..functions.rounding import duck_fround, fround
 from ..functions.sketch import duckdb_hll_distinct
-from ..functions.md5np import Md5Intern, md5_hex
+from ..functions.md5np import Md5Intern
 from ..functions.text_metrics import duck_tokens, py_ngrams, py_tokens, tokens
+from ..session import owned_persist
 from ..session import table as T
 from .registry import register
 
@@ -187,6 +188,16 @@ def cms_token_freq(spark, sf_dir):
     )
 
 
+def _duck_span_hashes(toks_sql: str, w: int = _SPAN_W) -> str:
+    """DuckDB twin of :func:`_span_hashes_expr`: the 60-bit md5 key of every
+    w-token window of ``toks_sql``."""
+    window = f"array_to_string({toks_sql}[i : i + {w - 1}], ' ')"
+    return (
+        f"list_transform(generate_series(1, len({toks_sql}) - {w - 1}),"
+        f" i -> {duck_md5_long(window)})"
+    )
+
+
 @register(
     "dedup_substring_spans",
     oracle=f"""
@@ -195,12 +206,7 @@ def cms_token_freq(spark, sf_dir):
             WHERE len(toks) >= {_SPAN_W}
         ),
         spans AS (
-            SELECT doc_id,
-                   unnest(list_transform(
-                       generate_series(1, len(toks) - {_SPAN_W - 1}),
-                       i -> md5(array_to_string(toks[i : i + {_SPAN_W - 1}], ' '))
-                   )) AS sh
-            FROM d
+            SELECT doc_id, unnest({_duck_span_hashes('toks')}) AS sh FROM d
         ),
         shared AS (
             SELECT sh FROM spans GROUP BY sh HAVING count(DISTINCT doc_id) >= 2
@@ -224,16 +230,11 @@ def cms_token_freq(spark, sf_dir):
     "doc-level complement to doc_winnow_near_dup's pair search",
 )
 def dedup_substring_spans(spark, sf_dir):
-    from ..session import owned_persist
-
     # Kernel span stream, persisted: the frame feeds TWO consumers (the
     # shared-hash doc-frequency agg and the per-doc flag join) — unpersisted,
     # each re-ran the full span-hash fold over the corpus (r11 measured: the
     # fold was ~2x the entry's floor).
-    spans = owned_persist(
-        _span_hash_stream(T(spark, sf_dir, "documents"))
-    )
-    spans.count()  # eager materialization (persist-gate contract)
+    spans, _ = owned_persist(_span_hash_stream(T(spark, sf_dir, "documents")))
     shared = (
         spans.groupBy("sh")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -258,44 +259,47 @@ def dedup_substring_spans(spark, sf_dir):
     )
 
 
-def _span_hashes_expr(toks_col: str = "toks", w: int = _SPAN_W) -> str:
-    """Spark SQL expression: md5 of every w-token window of ``toks_col`` —
-    kept as the bit-equality reference twin for :func:`_span_hash_stream`
-    (tests pin kernel == expression on adversarial rows)."""
-    return (
-        f"transform(sequence(1, size({toks_col}) - {w - 1}),"
-        f" i -> md5(concat_ws(' ', slice({toks_col}, i, {w}))))"
+def _span_hashes_expr(toks_col: str = "toks", w: int = _SPAN_W):
+    """Spark column: the 60-bit ``md5_long`` key of every w-token window of
+    ``toks_col`` — kept as the bit-equality reference twin for
+    :func:`_span_hash_stream` (tests pin kernel == expression on
+    adversarial rows)."""
+    toks = F.col(toks_col)
+    return F.transform(
+        F.sequence(F.lit(1), F.size(toks) - (w - 1)),
+        lambda i: md5_long(F.concat_ws(" ", F.slice(toks, i, w))),
     )
 
 
 def _span_hash_stream(df, w: int = _SPAN_W, id_col: str = "doc_id"):
     """Exploded (doc_id, sh) span-hash stream — Arrow-kernel path,
     bit-identical to exploding :func:`_span_hashes_expr` over
-    ``tokens(text)`` (md5 hex on identical UTF-8 bytes; docs with < w
-    tokens emit nothing). Same rationale as functions/dedup.py's
-    shingle/positional-gram kernels (guide §4.2): the interpreted
-    slice/concat_ws/md5 chain paid ~8 µs per window; the kernel tokenizes
-    with :func:`text_metrics.py_tokens`, hashes each window once in C
-    through the shared :class:`md5np.Md5Intern` (over ``md5_hex``) and
-    explodes in Python. Map-side, zero exchanges."""
+    ``tokens(text)`` (the 8-byte ``md5_60`` key of identical UTF-8 bytes,
+    the key format of every gram kernel; docs with < w tokens emit
+    nothing). Same rationale as functions/dedup.py's shingle/positional-gram
+    kernels (guide §4.2): the interpreted slice/concat_ws/md5 chain paid
+    ~8 µs per window; the kernel tokenizes with
+    :func:`text_metrics.py_tokens`, hashes each window once in C through the
+    shared :class:`md5np.Md5Intern` and explodes in Python. Map-side, zero
+    exchanges."""
     import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType(
         [
             StructField("doc_id", LongType(), False),
-            StructField("sh", StringType(), False),
+            StructField("sh", LongType(), False),
         ]
     )
     base = df.select(F.col(id_col).alias("doc_id"), "text")
 
     def kernel(batches):
-        intern = Md5Intern(md5_hex)
+        intern = Md5Intern()
         for pdf in batches:
             if not len(pdf):
                 continue
             ids: list[int] = []
-            shs: list[str] = []
+            shs: list[int] = []
             texts = pdf["text"]
             id_vals = pdf["doc_id"]
             for row in range(len(pdf)):
@@ -311,20 +315,13 @@ def _span_hash_stream(df, w: int = _SPAN_W, id_col: str = "doc_id"):
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(ids, dtype="int64"),
-                    "sh": pd.Series(shs, dtype="object"),
+                    "sh": pd.Series(shs, dtype="int64"),
                 }
             )
 
     from ..session import ensure_parallelism
 
     return ensure_parallelism(base).mapInPandas(kernel, schema=schema)
-
-
-def _duck_span_hashes(toks_sql: str, w: int = _SPAN_W) -> str:
-    return (
-        f"list_transform(generate_series(1, len({toks_sql}) - {w - 1}),"
-        f" i -> md5(array_to_string({toks_sql}[i : i + {w - 1}], ' ')))"
-    )
 
 
 # deterministic pseudo eval set: ~1% of docs
@@ -402,14 +399,11 @@ def bm25_doc_toks(spark, sf_dir):
     branch. This is the ccnet_lm_buckets token-array pattern
     (llm_quality.py) applied to retrieval: the tokenize is the dominant
     scan cost at sf10 and the arrays are narrow."""
-    from ..session import owned_persist
-
-    d = owned_persist(
+    d, _ = owned_persist(
         T(spark, sf_dir, "documents").select(
             "doc_id", tokens(F.col("text")).alias("toks")
         )
     )
-    d.count()
     return d
 
 
@@ -645,8 +639,6 @@ _BLOOM_K = 3
 
 
 def _bloom_pos_duck(i_sql: str, key_sql: str) -> str:
-    from ..functions.dedup import duck_md5_long
-
     return f"({duck_md5_long(f'{i_sql}::VARCHAR || ' + chr(39) + ':' + chr(39) + f' || {key_sql}::VARCHAR')} % {_BLOOM_M})"
 
 
@@ -690,8 +682,6 @@ def _bloom_pos_duck(i_sql: str, key_sql: str) -> str:
     "fact side before the real shuffle join",
 )
 def bloom_filter_probe(spark, sf_dir):
-    from ..functions.dedup import md5_long
-
     probes = F.explode(
         F.array(*[F.lit(i) for i in range(_BLOOM_K)])
     ).alias("i")
@@ -1741,30 +1731,25 @@ def _cand_tf_kernel(d, cand_list):
     "broadcast frames as bm25_search_topk; final top-k is a TakeOrdered.",
 )
 def prf_rm3_search(spark, sf_dir):
-    from ..session import owned_persist
-
     d = bm25_doc_toks(spark, sf_dir)
     fb = bm25_search_topk(spark, sf_dir, toks=d).select("doc_id")
     dl = d.select("doc_id", F.size("toks").alias("dl"))
     stats = dl.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
     # feedback-term election input: explode ONLY the 10 feedback docs.
     # Persisted (r11, guide §5): fb_tf's lineage contains the whole BM25
-    # pass 1, and it has TWO consumers in separate actions — the
-    # candidate-term broadcast built during the cand_tf persist populate,
-    # and exp_terms in the final query — so without the persist pass 1's
-    # corpus explode ran twice per invocation (stage isolation at sf10:
-    # the cand_terms branch alone re-paid 4.2 s; interleaved A/B mean
-    # 18.9 -> 14.6 s). The frame is feedback-vocabulary-sized (tiny).
-    fb_tf = owned_persist(
+    # pass 1, and it has TWO consumers in separate actions — the candidate
+    # term collect below (which is also its populate job) and exp_terms in
+    # the final query — so without the persist pass 1's corpus explode ran
+    # twice per invocation (stage isolation at sf10: the cand_terms branch
+    # alone re-paid 4.2 s; interleaved A/B mean 18.9 -> 14.6 s). The frame
+    # is feedback-vocabulary-sized (tiny).
+    fb_tf, fb_terms = owned_persist(
         d.join(F.broadcast(fb), "doc_id")
         .select(F.explode("toks").alias("term"))
         .groupBy("term")
-        .agg(F.count("*").alias("fb_tf"))
+        .agg(F.count("*").alias("fb_tf")),
+        lambda f: f.select("term").collect(),
     )
-    fb_tf.count()  # eager materialization (persist-gate contract)
-    # candidate terms = feedback vocabulary + query terms (small frame);
-    # broadcast-filter the exploded corpus BEFORE the (doc, term) agg so
-    # the shuffle never carries the full vocabulary
     # candidate list = feedback vocabulary + query terms. r12 (VERDICT item
     # 4, guide §4.2): pass 2's (doc, term) aggregation no longer explodes
     # the corpus — the r11 shape exploded all ~27M sf10 tokens, probed each
@@ -1777,11 +1762,8 @@ def prf_rm3_search(spark, sf_dir):
     # candidate set → one np.unique over (doc position, term index). Each
     # document is one row of d, so per-batch counts are FINAL — no shuffle,
     # no explode, exact integer tf identical to the join+groupBy.
-    cand_list = sorted(
-        {r["term"] for r in fb_tf.select("term").collect()} | set(_BM25_QUERY)
-    )
-    cand_tf = owned_persist(_cand_tf_kernel(d, cand_list))
-    cand_tf.count()  # eager materialization (persist-gate contract)
+    cand_list = sorted({r["term"] for r in fb_terms} | set(_BM25_QUERY))
+    cand_tf, _ = owned_persist(_cand_tf_kernel(d, cand_list))
     dfreq = cand_tf.groupBy("term").agg(F.count("*").alias("df"))
     exp_terms = (
         fb_tf.filter(~F.col("term").isin(*_BM25_QUERY))

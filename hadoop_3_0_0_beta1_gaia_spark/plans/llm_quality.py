@@ -28,6 +28,7 @@ from ..functions.text_metrics import (
     py_tokens,
     tokens,
 )
+from ..session import owned_persist
 from ..session import table as T
 from .registry import register
 
@@ -1274,20 +1275,17 @@ def c4_rules(pages):
     "order-dependent accumulation cannot diverge",
 )
 def doc_bigram_logprob(spark, sf_dir):
-    from ..session import owned_persist
-
     # Persist the TOKEN ARRAYS, not the exploded bigram stream (round-10
     # rework, same shape as ccnet_lm_buckets): the bigram counts, the
     # scoring join, and the unigram model all explode from one cached
     # per-doc array frame — the r9 exploded-row persist paid a 26.6M-row
     # string cache write plus a separate full tokenize scan for unigrams
     # (sf10 A/B 14.0 -> 8.9 s min, artifacts/ccnet_toks_ab_r10.json).
-    base = owned_persist(
+    base, _ = owned_persist(
         T(spark, sf_dir, "documents").select(
             "doc_id", tokens(F.col("text")).alias("toks")
         )
     )
-    base.count()
     d = base.filter(F.size("toks") >= 2)
     n = F.size("toks")
     pairs = F.arrays_zip(
@@ -2221,8 +2219,6 @@ def ccnet_bucket(docs):
     "and are excluded (same contract as doc_bigram_logprob)",
 )
 def ccnet_lm_buckets(spark, sf_dir):
-    from ..session import owned_persist
-
     # Persist the TOKEN ARRAYS, not the exploded bigram stream (round-10
     # rework of the round-9 persist): the three consumers (bigram counts,
     # the scoring join, AND the unigram model — which the r9 shape paid a
@@ -2232,12 +2228,11 @@ def ccnet_lm_buckets(spark, sf_dir):
     # ccnet_toks_ab_r10.json); the explode re-runs per consumer but is
     # map-side over cached arrays — cache write/read of the exploded rows
     # was the bigger cost.
-    d = owned_persist(
+    d, _ = owned_persist(
         T(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars", tokens(F.col("text")).alias("toks")
         )
     )
-    d.count()
     scoreable = d.filter(F.size("toks") >= 2)
     n = F.size("toks")
     pairs = F.arrays_zip(
@@ -2489,7 +2484,7 @@ def curation_funnel_report(spark, sf_dir):
         ngram_jaccard_pairs,
         normalized_fp,
     )
-    from ..session import ensure_parallelism, owned_persist
+    from ..session import ensure_parallelism
 
     d = T(spark, sf_dir, "documents")
     # Spread the scan before the CPU-heavy rule fold: a one-row-group fixture
@@ -2507,10 +2502,7 @@ def curation_funnel_report(spark, sf_dir):
     # substitution, landing the whole bigram fold back on the unspread scan
     # tasks (measured: the fold re-ran at 2-task parallelism, 77 s at sf1;
     # with the persist barrier 4 s). The frame is 5 narrow columns, no text.
-    metrics = owned_persist(
-        repetition_metrics(spread.select("doc_id", "text"))
-    )
-    metrics.count()  # eager materialization (persist-gate contract)
+    metrics, _ = owned_persist(repetition_metrics(spread.select("doc_id", "text")))
     rules_keep = metrics.filter(
         (F.col("n_tokens") >= _MIN_TOKENS)
         & (F.col("n_tokens") <= _MAX_TOKENS)
@@ -2521,21 +2513,19 @@ def curation_funnel_report(spark, sf_dir):
     # stage's producer chain — unpersisted, the five stage aggregates
     # re-evaluate the whole lineage up to the components FIXPOINT once per
     # consumer (measured 244 s at sf1; persisted chain 11 s).
-    s1 = owned_persist(base.join(rules_keep, "doc_id"))
-    s1.count()  # eager materialization (persist-gate contract)
+    s1, _ = owned_persist(base.join(rules_keep, "doc_id"))
     keep_ids = (
         s1.select("doc_id", normalized_fp("text").alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    s2 = owned_persist(s1.join(keep_ids, "doc_id"))
-    s2.count()  # eager materialization (persist-gate contract)
+    s2, _ = owned_persist(s1.join(keep_ids, "doc_id"))
     pairs = ngram_jaccard_pairs(
         s2.select("doc_id", "text"), **_FUNNEL_NGRAM
     )
     comp = connected_components(pairs)
-    s3 = owned_persist(
+    s3, _ = owned_persist(
         s2.join(
             comp.select(F.col("doc_id").alias("c_doc"), "component"),
             F.col("doc_id") == F.col("c_doc"),
@@ -2547,7 +2537,6 @@ def curation_funnel_report(spark, sf_dir):
         )
         .select("doc_id", "text", "lang", "n_tok")
     )
-    s3.count()  # eager materialization (persist-gate contract)
     lang_counts = s3.groupBy("lang").agg(F.count("*").alias("n_l"))
     total = s3.agg(F.count("*").alias("n_total"))
     rates = lang_counts.crossJoin(F.broadcast(total)).select(

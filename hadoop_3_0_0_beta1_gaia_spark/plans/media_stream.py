@@ -34,6 +34,7 @@ from ..streaming.events import (
     sessionize,
     windowed_counts,
 )
+from .dedup_sim import admission_summary
 from .registry import register
 
 
@@ -664,16 +665,7 @@ def dedup_incremental_fingerprint(spark, sf_dir):
         sims, radius=4, max_bucket_size=16, fp_col="dhash"
     ).filter((F.col("id_a") < _INCR_SPLIT_FP) & (F.col("id_b") >= _INCR_SPLIT_FP))
     batch = d.filter(F.col("doc_id") >= _INCR_SPLIT_FP).select("doc_id")
-    rejected = pairs.select(F.col("id_b").alias("doc_id")).distinct().persist()
-    admitted = batch.join(rejected, "doc_id", "left_anti")
-    out = (
-        batch.agg(F.count("*").cast("long").alias("batch_docs"))
-        .crossJoin(rejected.agg(F.count("*").cast("long").alias("dup_new_docs")))
-        .crossJoin(admitted.agg(F.count("*").cast("long").alias("admitted_docs")))
-    )
-    out = out.localCheckpoint(eager=True)
-    rejected.unpersist()
-    return out
+    return admission_summary(batch, pairs)
 
 
 @register(

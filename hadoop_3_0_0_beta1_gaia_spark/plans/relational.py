@@ -16,9 +16,9 @@ from ..operators.aggregate import duckdb_value_histogram, value_aggregate, value
 from ..operators.fieldsel import duckdb_field_select, field_select
 from ..operators.join import broadcast_join, datajoin_theta, override_join
 from ..operators.keyfield import duckdb_order_by, keyfield_sort_columns
-from ..functions.dedup import duck_md5_long
+from ..functions.dedup import duck_md5_long, expand_bucket_pairs, md5_long
 from ..operators.sort import global_rank, record_stats, total_order_sort
-from ..session import stage_dir
+from ..session import owned_persist, stage_dir
 from ..session import table as T
 from .registry import register
 
@@ -1339,6 +1339,28 @@ def order_priority_transitions(spark, sf_dir):
     )
 
 
+def _copurchase_baskets(spark, sf_dir):
+    """Sorted distinct part set of every order with >= 2 parts (lazy): the
+    co-purchase graph entries' shared input."""
+    return (
+        T(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ids"))
+        .filter(F.size("ids") >= 2)
+    )
+
+
+def _copurchase_edges(spark, sf_dir):
+    """Distinct undirected co-purchase edges (a, b), a < b, from in-row basket
+    pair expansion (lazy); each entry picks its own sampling, persist and
+    symmetrization."""
+    return (
+        expand_bucket_pairs(_copurchase_baskets(spark, sf_dir))
+        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+        .distinct()
+    )
+
+
 @register(
     "copurchase_part_pairs",
     oracle="""
@@ -1375,16 +1397,8 @@ def order_priority_transitions(spark, sf_dir):
 def copurchase_part_pairs(spark, sf_dir):
     from pyspark.sql import Window
 
-    from ..functions.dedup import expand_bucket_pairs
-
-    baskets = (
-        T(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
     counted = (
-        expand_bucket_pairs(baskets)
+        expand_bucket_pairs(_copurchase_baskets(spark, sf_dir))
         .groupBy(
             F.col("id_a").alias("part_a"), F.col("id_b").alias("part_b")
         )
@@ -1687,21 +1701,7 @@ def scd2_order_history(spark, sf_dir):
     "are hash joins keyed on vertex ids",
 )
 def copurchase_triangles(spark, sf_dir):
-    from ..functions.dedup import expand_bucket_pairs
-    from ..session import owned_persist
-
-    baskets = (
-        T(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    und = owned_persist(
-        expand_bucket_pairs(baskets)
-        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .distinct()
-    )
-    und.count()  # populate cache before concurrent AQE consumer branches
+    und, _ = owned_persist(_copurchase_edges(spark, sf_dir))
     deg = (
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
@@ -1713,7 +1713,8 @@ def copurchase_triangles(spark, sf_dir):
     a_first = (F.col("d_a") < F.col("d_b")) | (
         (F.col("d_a") == F.col("d_b")) & (F.col("a") < F.col("b"))
     )
-    e = owned_persist(
+    # the wedge sides and the closure all read e
+    e, _ = owned_persist(
         und.join(da, "a")
         .join(db, "b")
         .select(
@@ -1722,7 +1723,6 @@ def copurchase_triangles(spark, sf_dir):
             F.when(a_first, F.col("d_b")).otherwise(F.col("d_a")).alias("d_dst"),
         )
     )
-    e.count()  # same: wedge sides + closure all read e concurrently
     w1 = e.select("src", F.col("dst").alias("v"), F.col("d_dst").alias("d_v"))
     w2 = e.select("src", F.col("dst").alias("w"), F.col("d_dst").alias("d_w"))
     wedges = (
@@ -1802,39 +1802,23 @@ _TRI_THRESH = (1 << 60) // _TRI_PINV
     "exact count at sf1 in the sweep artifact",
 )
 def copurchase_triangles_sampled(spark, sf_dir):
-    from ..functions.dedup import expand_bucket_pairs, md5_long
-    from ..session import owned_persist
-
-    baskets = (
-        T(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    und = (
-        expand_bucket_pairs(baskets)
-        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .distinct()
-    )
-    se = owned_persist(
-        und.filter(
+    se, _ = owned_persist(
+        _copurchase_edges(spark, sf_dir).filter(
             md5_long(F.concat_ws("_", F.col("a"), F.col("b"))) < F.lit(_TRI_THRESH)
         )
     )
-    se.count()  # populate cache before concurrent AQE consumer branches
     # r12 (guide §3.1, the pagerank precedent): deg is VERTEX-sized while se
     # is the sampled edge list — joining the degrees back as SortMergeJoins
     # shuffled se twice; broadcast both degree sides so the orientation pass
     # stays map-side over the cache. deg is persisted (it feeds BOTH join
     # sides) and its populate count gates the broadcast exactly as in
     # copurchase_pagerank (_bcast_if_small).
-    deg = owned_persist(
+    deg, n_v = owned_persist(
         se.select(F.col("a").alias("v"))
         .unionByName(se.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count("*").alias("d"))
     )
-    n_v = deg.count()
     da = _bcast_if_small(
         deg.select(F.col("v").alias("a"), F.col("d").alias("d_a")), n_v
     )
@@ -1844,7 +1828,8 @@ def copurchase_triangles_sampled(spark, sf_dir):
     a_first = (F.col("d_a") < F.col("d_b")) | (
         (F.col("d_a") == F.col("d_b")) & (F.col("a") < F.col("b"))
     )
-    e = owned_persist(
+    # the wedge sides and the closure all read e
+    e, _ = owned_persist(
         se.join(da, "a")
         .join(db, "b")
         .select(
@@ -1853,7 +1838,6 @@ def copurchase_triangles_sampled(spark, sf_dir):
             F.when(a_first, F.col("d_b")).otherwise(F.col("d_a")).alias("d_dst"),
         )
     )
-    e.count()  # wedge sides + closure all read e concurrently
     w1 = e.select("src", F.col("dst").alias("v"), F.col("d_dst").alias("d_v"))
     w2 = e.select("src", F.col("dst").alias("w"), F.col("d_dst").alias("d_w"))
     wedges = (
@@ -1936,20 +1920,6 @@ _PR_TOPK = 20
 def copurchase_pagerank(spark, sf_dir):
     from pyspark.sql import Window
 
-    from ..functions.dedup import expand_bucket_pairs
-    from ..session import owned_persist
-
-    li = T(spark, sf_dir, "lineitem")
-    baskets = (
-        li.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    und = (
-        expand_bucket_pairs(baskets)
-        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .distinct()
-    )
     # r12 (guide §3.1/§2.4): every per-iteration join probes the 2·|pairs|
     # edge stream against a VERTEX-sized frame. The r11 shape joined edges
     # twice per iteration as SortMergeJoins (plan: 12 SMJ / 78 Exchange —
@@ -1973,17 +1943,15 @@ def copurchase_pagerank(spark, sf_dir):
     # r11 gate existed for, so the fixture-calibrated byte proxy (ADVICE
     # r11) is gone rather than re-tuned. deg's populate count doubles as
     # the broadcast gate.
-    und = owned_persist(und)
-    und.count()
+    und, _ = owned_persist(_copurchase_edges(spark, sf_dir))
     edges = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    deg = owned_persist(
+    deg, n_v = owned_persist(
         edges.groupBy("src").agg(F.count("*").alias("d")).withColumnRenamed(
             "src", "v"
         )
     )
-    n_v = deg.count()
     r = deg.select("v", F.lit(_PR_SCALE).cast("long").alias("r"))
     base = F.floor(F.lit(0.15 * _PR_SCALE)).cast("long")
     for _ in range(_PR_ITERS):
@@ -2059,19 +2027,7 @@ _BFS_DEPTH = 3
     "the loop counter",
 )
 def copurchase_bfs_depth(spark, sf_dir):
-    from ..functions.dedup import expand_bucket_pairs
-
-    baskets = (
-        T(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    und = (
-        expand_bucket_pairs(baskets)
-        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .distinct()
-    )
+    und = _copurchase_edges(spark, sf_dir)
     # single-pass symmetrization (the r7 connected_components lesson): the
     # union-of-two-selects shape ran the basket pair expansion once per
     # branch even though the result is persisted — the explode reads it once
@@ -2480,8 +2436,6 @@ def schema_evolution_merge(spark, sf_dir):
 )
 def copurchase_lift_rules(spark, sf_dir):
     from pyspark.sql import Window
-
-    from ..functions.dedup import expand_bucket_pairs
 
     li = T(spark, sf_dir, "lineitem")
     baskets = (

@@ -22,6 +22,7 @@ from ..functions.text_metrics import (
     word_counts,
     word_length_stats,
 )
+from ..session import owned_persist
 from ..session import table as T
 from .registry import register
 
@@ -900,9 +901,8 @@ def bpe_merge_table(v, rounds, checkpoint_every=8, with_final_vocab=False):
         )
         if n == rounds:
             if with_final_vocab:
-                from ..session import owned_persist
-
-                final_v = owned_persist(
+                # populated by owned_persist before v unpersists below
+                final_v, _ = owned_persist(
                     v.crossJoin(F.broadcast(top1)).select(
                         "word",
                         "cnt",
@@ -911,7 +911,6 @@ def bpe_merge_table(v, rounds, checkpoint_every=8, with_final_vocab=False):
                         ).alias("rep"),
                     )
                 )
-                final_v.count()  # eager: populated before v unpersists below
             break  # the round-N vocabulary is only built when asked for
         nxt = v.crossJoin(F.broadcast(top1)).select(
             "word",
@@ -974,15 +973,11 @@ def bpe_merge_table(v, rounds, checkpoint_every=8, with_final_vocab=False):
     "Builds on doc_winnow_fingerprints' map-side kernel",
 )
 def source_overlap_matrix(spark, sf_dir):
-    from ..session import owned_persist
-
     fps = _winnow_frame(spark, sf_dir)
     src = T(spark, sf_dir, "documents").select("doc_id", "source")
     # sf feeds three consumer branches (sizes + both self-join sides); the
-    # winnow kernel chain behind it is the expensive part — persist and
-    # eagerly populate before AQE's concurrent branches race the cache.
-    sf = owned_persist(fps.join(src, "doc_id").select("source", "fp").distinct())
-    sf.count()
+    # winnow kernel chain behind it is the expensive part.
+    sf, _ = owned_persist(fps.join(src, "doc_id").select("source", "fp").distinct())
     sizes = sf.groupBy("source").agg(F.count("*").alias("sz"))
     a = sf.select(F.col("source").alias("source_a"), "fp")
     b = sf.select(F.col("source").alias("source_b"), "fp")

@@ -157,7 +157,8 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 # action still needs the cache — so without an owner the entry outlives the
 # query and, in a long-lived session running many queries back-to-back,
 # cached partitions accumulate until executor-storage eviction. The ledger
-# makes release deterministic: helpers register through owned_persist();
+# makes release deterministic: helpers register through owned_persist(),
+# which also fills the cache before returning (see its docstring for why);
 # callers (bench.py, soak.py, the oracle gate, any service embedding these
 # helpers) call release_owned() after each query's terminal action.
 # Unpersisting is always SAFE, never a correctness hazard: a live plan that
@@ -166,8 +167,20 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 _OWNED_PERSISTS: list[DataFrame] = []
 
 
-def owned_persist(df: DataFrame, level=None) -> DataFrame:
-    """Persist a helper intermediate and record it for deterministic release.
+def owned_persist(df: DataFrame, populate=DataFrame.count, level=None):
+    """Persist a helper intermediate, record it for deterministic release,
+    fill the cache with one job, and return ``(frame, populate(frame))``.
+
+    The fill is the rule every multi-consumer persist needs: AQE submits the
+    independent consumer branches of the returned plan concurrently, and
+    branches that scan a not-yet-populated cache each recompute the frame's
+    whole lineage (losers' blocks are discarded; measured 12-30x on the
+    shingle family, NOTES.md round 5). ``populate`` is that filling job —
+    ``count`` by default; a site that needs a statistic of the frame anyway
+    (per-partition counts or sums, a bucket maximum, a collect) passes that
+    query instead, so the stat and the fill stay one job. It must read every
+    partition (an aggregate or a full collect, never a ``take``). Its result
+    is the second element of the returned pair.
 
     Use for frames the RETURNED plan references (no in-function unpersist
     possible); keep plain persist+unpersist for frames fully consumed inside
@@ -177,7 +190,7 @@ def owned_persist(df: DataFrame, level=None) -> DataFrame:
 
     df = df.persist(level or StorageLevel.MEMORY_AND_DISK)
     _OWNED_PERSISTS.append(df)
-    return df
+    return df, populate(df)
 
 
 def release_owned() -> int:

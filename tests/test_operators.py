@@ -1152,10 +1152,12 @@ def test_lsh_bucket_cap_on_boilerplate_corpus(spark):
     one mega-bucket per band; without a cap the in-row pair expansion builds
     k^2 pairs from a single giant collect_set row. With max_bucket_size the
     mega-buckets are DROPPED (counted via the lsh_bucket_cap observation)
-    while distinct small clusters still pair up."""
+    while distinct small clusters still pair up. Each capped plan reports
+    its own drops through its diag: a cap-400 plan built after the cap-10
+    one (it keeps the mega-bucket) does not take over the cap-10 counts."""
     from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import (
+        cap_counter,
         lsh_candidate_pairs,
-        lsh_drop_counter,
         minhash_signatures,
         shingle_arrays,
     )
@@ -1177,33 +1179,48 @@ def test_lsh_bucket_cap_on_boilerplate_corpus(spark):
     uncapped = lsh_candidate_pairs(sig, rows_per_band=4)
     assert uncapped.count() >= 300 * 299 // 2  # quadratic blowup is real
 
-    capped = lsh_candidate_pairs(sig, rows_per_band=4, max_bucket_size=10)
+    diag: dict = {}
+    diag400: dict = {}
+    capped = lsh_candidate_pairs(sig, rows_per_band=4, max_bucket_size=10, diag=diag)
+    capped400 = lsh_candidate_pairs(
+        sig, rows_per_band=4, max_bucket_size=400, diag=diag400
+    )
     pairs = {(r["id_a"], r["id_b"]) for r in capped.collect()}
+    capped400.collect()
     assert (1000, 1001) in pairs  # small clusters survive the cap
     assert not any(a < 300 and b < 300 for a, b in pairs)  # mega-bucket gone
-    metrics = lsh_drop_counter()
+    metrics = cap_counter(diag)
     assert metrics["lsh_dropped_buckets"] >= 1
     assert metrics["lsh_dropped_ids"] >= 300
+    assert cap_counter(diag400) == {"lsh_dropped_buckets": 0, "lsh_dropped_ids": 0}
 
 
 def test_capped_lsh_entry_diverges_and_counts_drops(spark, sf_dir):
     """VERDICT r3 item 2: the registered dedup_minhash_lsh_capped entry is the
     100 TB configuration, and the cap must demonstrably FIRE at test SF — the
     capped pair set is a strict subset of the uncapped one, and the drop
-    counter reports the dropped buckets after the action."""
-    from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import lsh_drop_counter
+    counter reports the dropped buckets after the action. The capped set is
+    built as the entry builds it (its own _MINHASH, max_bucket_size=2) so
+    the counter is read from that plan's diag."""
+    from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import (
+        cap_counter,
+        minhash_lsh_pairs,
+    )
+    from hadoop_3_0_0_beta1_gaia_spark.plans.dedup_sim import _MINHASH
     from hadoop_3_0_0_beta1_gaia_spark.plans.registry import queries
+    from hadoop_3_0_0_beta1_gaia_spark.session import table as T
 
     qs = queries()
     uncapped = {
         (r.id_a, r.id_b) for r in qs["dedup_minhash_lsh"](spark, sf_dir).collect()
     }
-    capped = {
-        (r.id_a, r.id_b)
-        for r in qs["dedup_minhash_lsh_capped"](spark, sf_dir).collect()
-    }
+    diag: dict = {}
+    capped_df = minhash_lsh_pairs(
+        T(spark, sf_dir, "documents"), **_MINHASH, max_bucket_size=2, diag=diag
+    )
+    capped = {(r.id_a, r.id_b) for r in capped_df.collect()}
     assert capped <= uncapped
-    metrics = lsh_drop_counter()
+    metrics = cap_counter(diag)
     assert metrics["lsh_dropped_buckets"] >= 1  # cap=2 fires on size-3 buckets
     assert metrics["lsh_dropped_ids"] >= 3
 

@@ -370,7 +370,7 @@ def test_span_hash_kernel_equals_expression_fold(spark, sf_dir):
     decontaminate_eval_overlap must emit the IDENTICAL (doc_id, sh) row
     multiset as exploding the expression fold over tokens(text) — fixture
     corpus plus adversarial whitespace/short/NULL rows (the shingle-kernel
-    test posture; md5 hex on identical UTF-8 bytes, so equality is exact)."""
+    test posture; md5_60 of identical UTF-8 bytes, so equality is exact)."""
     from pyspark.sql import functions as F
 
     from hadoop_3_0_0_beta1_gaia_spark.functions.text_metrics import tokens
@@ -397,7 +397,7 @@ def test_span_hash_kernel_equals_expression_fold(spark, sf_dir):
             tuple,
             docs.select("doc_id", tokens(F.col("text")).alias("toks"))
             .filter(F.size("toks") >= _SPAN_W)
-            .select("doc_id", F.explode(F.expr(_span_hashes_expr())).alias("sh"))
+            .select("doc_id", F.explode(_span_hashes_expr()).alias("sh"))
             .collect(),
         )
     )
@@ -822,6 +822,42 @@ def test_owned_persist_ledger_releases_storage(spark):
     assert cached_entry_count(spark) == 0
     # unpersisting never breaks a live plan — it recomputes its lineage
     assert pairs.count() == n1
+
+
+def test_owned_persist_populates_before_return(spark):
+    """owned_persist fills the cache it creates: right after it returns, and
+    before any caller action, every partition of the frame is cached, for
+    the default count populate and for a one-column collect populate; the
+    populate result comes back, and release_owned() returns storage to
+    zero."""
+    from pyspark.sql import functions as F
+
+    from hadoop_3_0_0_beta1_gaia_spark.session import (
+        cached_entry_count,
+        force_release_all,
+        owned_persist,
+        release_owned,
+    )
+
+    def cached_partitions():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return [(i.numCachedPartitions(), i.numPartitions()) for i in infos]
+
+    force_release_all(spark)
+    src = spark.range(0, 1000, 1, 4).select("id", (F.col("id") % 7).alias("k"))
+
+    frame, n = owned_persist(src)
+    assert n == 1000
+    assert cached_partitions() == [(4, 4)]
+    assert release_owned() == 1
+    assert cached_entry_count(spark) == 0
+
+    frame, rows = owned_persist(src, lambda f: f.select("k").collect())
+    assert sorted(r.k for r in rows) == sorted(i % 7 for i in range(1000))
+    assert cached_partitions() == [(4, 4)]
+    assert frame.count() == 1000
+    assert release_owned() == 1
+    assert cached_entry_count(spark) == 0
 
 
 def test_pps_sample_invariants(spark, sf_dir):
