@@ -1808,6 +1808,36 @@ def url_normalize_dedup(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _dsir_log_ratios(spark, cnt):
+    """DSIR's 512-entry log-ratio gather table from the collected fit rows.
+
+    ``cnt`` holds the ≤512 (b, cs, ct) bucket counts, so the fit is that one
+    collect: the totals are exact Python int sums of it, and the log-ratios
+    are Spark's own ``log`` over an inline VALUES relation (a local relation,
+    which runs no job). Buckets no token hashed to stay NaN.
+    """
+    import numpy as np
+
+    lr_arr = np.full(512, np.nan, dtype=np.float64)
+    if not cnt:
+        return lr_arr
+    ns = sum(r["cs"] for r in cnt)
+    nt = sum(r["ct"] for r in cnt)
+    rows = ", ".join(f"({r['b']}L, {r['cs']}L, {r['ct']}L)" for r in cnt)
+    lr = spark.sql(
+        f"SELECT *, {ns}L AS ns, {nt}L AS nt FROM VALUES {rows} AS cnt(b, cs, ct)"
+    ).select(
+        "b",
+        (
+            F.log((F.col("ct") + 1) * 1.0 / (F.col("nt") + 512))
+            - F.log((F.col("cs") + 1) * 1.0 / (F.col("ns") + 512))
+        ).alias("lr"),
+    )
+    for row in lr.collect():
+        lr_arr[row["b"]] = row["lr"]
+    return lr_arr
+
+
 @register(
     "dsir_importance_select",
     oracle=f"""
@@ -1862,8 +1892,10 @@ def url_normalize_dedup(spark, sf_dir):
     "src0-src2) vs the RAW corpus, per-token importance log-ratio "
     "ln p_T(b) - ln p_S(b), per-doc average weight, top-100 selection. "
     "Plan shape for 100 TB: the FIT pass is one Arrow kernel emitting "
-    "<=512 partial-count rows per batch into a bounded 512-row groupBy; "
-    "totals are a 1-row agg; the 512-row log-ratio table rides into the "
+    "<=512 partial-count rows per batch into a bounded 512-row groupBy, "
+    "collected; totals are exact int sums of those rows and the log-ratios "
+    "Spark's ln over an inline VALUES relation (no job); the 512-row "
+    "log-ratio table rides into the "
     "APPLY kernel as a collected gather table (nothing token-sized ever "
     "shuffles — the per-doc weights come out of the kernel final); top-k "
     "is TakeOrdered, then row_number on the 100-row result only. "
@@ -1944,26 +1976,12 @@ def dsir_importance_select(spark, sf_dir):
         .mapInArrow(fit_kernel, "b long, cs long, ct long")
         .groupBy("b")
         .agg(F.sum("cs").alias("cs"), F.sum("ct").alias("ct"))
-    )
-    # totals derive from the bounded 512-row bucket frame — aggregating the
-    # token stream directly would re-run the whole tokenize corpus scan
-    tot = cnt.agg(
-        F.sum("cs").alias("ns"),
-        F.sum("ct").alias("nt"),
-    )
-    lr = cnt.crossJoin(F.broadcast(tot)).select(
-        "b",
-        (
-            F.log((F.col("ct") + 1) * 1.0 / (F.col("nt") + 512))
-            - F.log((F.col("cs") + 1) * 1.0 / (F.col("ns") + 512))
-        ).alias("lr"),
+        .collect()
     )
     # the 512-row log-ratio table rides into the apply kernel as a plain
     # numpy gather table (same doubles Spark computed — collected, not
-    # re-derived); buckets no token hashed to stay NaN and are never read
-    lr_arr = np.full(512, np.nan, dtype=np.float64)
-    for row in lr.collect():
-        lr_arr[row["b"]] = row["lr"]
+    # re-derived)
+    lr_arr = _dsir_log_ratios(spark, cnt)
 
     def apply_kernel(batches):
         intern = Md5Intern()
