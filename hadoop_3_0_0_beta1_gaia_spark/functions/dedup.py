@@ -11,10 +11,10 @@ Scale notes (100 TB posture):
 - n-gram Jaccard: the pairwise verify joins on shingle; frequency-capped
   shingles (drop shingles appearing in > max_df docs) bound the quadratic
   blowup, the standard trick at corpus scale.
-- MinHash/LSH: signature is a groupBy-min (map-side combinable); candidate
-  generation joins on (band, band_signature) buckets — linear in corpus size,
-  never all-pairs. This is the scale path; Jaccard verify runs only on
-  candidates.
+- MinHash/LSH: signatures are folded map-side in the shingle kernel;
+  candidates are (band, band key) buckets formed by one groupBy shuffle —
+  linear in corpus size, never all-pairs. This is the scale path; the
+  Jaccard verify runs inside each bucket row, on candidates only.
 - SimHash: two hash-aggregations, linear.
 """
 
@@ -119,6 +119,90 @@ def shingle_arrays_expr(
     return df.select("id", F.array_distinct(sh).alias("shingles"))
 
 
+def _doc_gram_hashes(texts, n: int, intern: Md5Intern):
+    """``(row, gram hashes in text order)`` for every document of ``texts``
+    with at least ``n`` tokens (NULL and shorter texts yield nothing) — the
+    per-document loop of every token-gram kernel: :func:`text_metrics.py_tokens`
+    (its notes cover the Java ``\\s`` and JVM-locale agreement), then each
+    gram hashed once in C through the task's :class:`md5np.Md5Intern`."""
+    for row, text in enumerate(texts):
+        if text is None:
+            continue
+        toks = py_tokens(text)
+        if len(toks) >= n:
+            yield row, intern.hash_all(py_ngrams(toks, n))
+
+
+def _shingle_scan(
+    df: DataFrame,
+    n: int,
+    id_col: str,
+    text_col: str,
+    coeffs: list[tuple[int, int]] | None = None,
+) -> DataFrame:
+    """(id, shingles[, sig]) — the one shingle kernel behind
+    :func:`shingle_arrays` and :func:`minhash_shingles`. With ``coeffs`` it
+    also folds the MinHash signature over each document's distinct
+    shingles in numpy int64: ``sig[i] = min over h of (a_i·(h mod P) + b_i)
+    mod P``. a_i < P and h mod P < P keep every product below 2^62, so the
+    values are exact — the same longs the DuckDB oracle computes."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    from ..session import ensure_parallelism
+
+    fields = [
+        StructField("id", df.schema[id_col].dataType, False),
+        StructField("shingles", ArrayType(LongType(), False), False),
+    ]
+    if coeffs is not None:
+        fields.append(StructField("sig", ArrayType(LongType(), False), False))
+        a = np.array([c[0] for c in coeffs], dtype=np.int64)
+        b = np.array([c[1] for c in coeffs], dtype=np.int64)
+    base = ensure_parallelism(df).select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("text")
+    )
+
+    def kernel(batches):
+        intern = Md5Intern()
+        for rb in batches:
+            kept: list[int] = []
+            lens: list[int] = []
+            flat: list[int] = []
+            for row, hs in _doc_gram_hashes(rb.column(1).to_pylist(), n, intern):
+                d = dict.fromkeys(hs)
+                kept.append(row)
+                lens.append(len(d))
+                flat.extend(d)
+            if not kept:
+                continue
+            offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+            np.cumsum(lens, out=offsets[1:])
+            h = np.array(flat, dtype=np.int64)
+            cols = [
+                rb.column(0).take(pa.array(kept, type=pa.int64())),
+                pa.ListArray.from_arrays(offsets, h),
+            ]
+            if coeffs is not None:
+                # not in place: the shingle column above shares h's buffer
+                hp = h % _MINHASH_P
+                sig = np.empty((len(kept), len(a)), dtype=np.int64)
+                for i in range(len(a)):
+                    sig[:, i] = np.minimum.reduceat(
+                        (a[i] * hp + b[i]) % _MINHASH_P, offsets[:-1]
+                    )
+                cols.append(
+                    pa.ListArray.from_arrays(
+                        np.arange(0, sig.size + 1, len(a), dtype=np.int32),
+                        sig.ravel(),
+                    )
+                )
+            yield pa.RecordBatch.from_arrays(cols, names=[f.name for f in fields])
+
+    return base.mapInArrow(kernel, schema=StructType(fields))
+
+
 def shingle_arrays(
     df: DataFrame, n: int, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -129,7 +213,7 @@ def shingle_arrays(
 
     Shingles are INTERNED as md5-derived 60-bit longs (``md5_long``) at
     creation, on both engines identically: every downstream consumer (the
-    shingle self-join, the array-carrying LSH verify, minhash signatures)
+    shingle self-join, the array-carrying LSH buckets, minhash signatures)
     joins/intersects/shuffles 8-byte keys instead of raw n-gram text —
     measured ~5x less verify-shuffle volume at sf10, and the signature hash
     reuses this value instead of re-hashing. Intersection/size counts are
@@ -140,57 +224,13 @@ def shingle_arrays(
     higher-order-function evaluator per gram — slice + array_join + md5 +
     hex→long conv each allocate per element, measured ~8 µs/shingle at the
     sf10 fixture (stage-isolated: 7.5 s of the capped family's wall vs a
-    0.87 s tokenize floor). The kernel tokenizes with
-    :func:`text_metrics.py_tokens` (its notes cover the Java ``\\s`` and
-    JVM-locale agreement), hashes each gram once in C through the shared
-    :class:`md5np.Md5Intern` (``md5_60`` == ``md5_long`` on identical UTF-8
-    bytes; boilerplate grams repeat across documents), and dedups with an
-    order-preserving ``dict.fromkeys`` — exactly ``array_distinct`` over
-    the hashed values. Entirely map-side, zero exchanges, embarrassingly
-    parallel."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    from ..session import ensure_parallelism
-
-    id_type = df.schema[id_col].dataType
-    schema = StructType(
-        [
-            StructField("id", id_type, False),
-            StructField("shingles", ArrayType(LongType(), False), False),
-        ]
-    )
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-
-    def kernel(batches):
-        intern = Md5Intern()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            kept: list[int] = []
-            arrs: list[list[int]] = []
-            texts = pdf["text"]
-            for pos in range(len(pdf)):
-                text = texts.iloc[pos]
-                if text is None:
-                    continue
-                toks = py_tokens(text)
-                if len(toks) < n:
-                    continue
-                kept.append(pos)
-                arrs.append(
-                    list(dict.fromkeys(intern.hash_all(py_ngrams(toks, n))))
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].iloc[kept].reset_index(drop=True),
-                    "shingles": pd.Series(arrs, dtype="object"),
-                }
-            )
-
-    return base.mapInPandas(kernel, schema=schema)
+    0.87 s tokenize floor). The kernel (:func:`_doc_gram_hashes`) hashes
+    each gram once in C through the shared :class:`md5np.Md5Intern`
+    (``md5_60`` == ``md5_long`` on identical UTF-8 bytes; boilerplate grams
+    repeat across documents), and dedups with an order-preserving
+    ``dict.fromkeys`` — exactly ``array_distinct`` over the hashed values.
+    Entirely map-side, zero exchanges, embarrassingly parallel."""
+    return _shingle_scan(df, n, id_col, text_col)
 
 
 def shingles(df: DataFrame, n: int, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -413,115 +453,124 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    sh_arr: DataFrame, num_hashes: int = 16
+def minhash_shingles(
+    df: DataFrame,
+    n: int,
+    num_hashes: int = 16,
+    id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
-    """MinHash signature per doc, computed ENTIRELY map-side over the
-    per-document shingle array (no shuffle — the correct shape at 100 TB:
-    signatures are embarrassingly parallel).
+    """(id, shingles, sig) per document: :func:`shingle_arrays`' kernel
+    with the MinHash signature folded in the same pass, entirely map-side
+    (signatures are embarrassingly parallel — no shuffle).
 
     The base hash is the interned 60-bit shingle value itself (md5 applied
-    ONCE at shingle creation in :func:`shingle_arrays`), reduced mod P, then
-    ``num_hashes`` affine permutations (a_i·h + b_i) mod P folded with
-    array_min. a_i < P and h < P keep every product < 2^62 (no 64-bit
-    overflow). Input: (id, shingles array<long>); output: (id, sig
-    array<long>) with sig[i] = min over shingles of permutation i.
-    """
-    coeffs = _minhash_coeffs(num_hashes)
-    hs = F.transform(
-        F.col("shingles"), lambda h: h % _MINHASH_P
-    )
-    base = sh_arr.select("id", hs.alias("hs"))
-    sig = F.array(
+    ONCE at shingle creation), reduced mod P, then ``num_hashes`` affine
+    permutations (a_i·h + b_i) mod P with :func:`_minhash_coeffs`' literals;
+    sig[i] = min over the document's shingles of permutation i. The
+    signature rides next to the shingle array it came from, so one row
+    carries everything the LSH buckets and their verify need."""
+    return _shingle_scan(df, n, id_col, text_col, _minhash_coeffs(num_hashes))
+
+
+def _check_banding(num_hashes: int, rows_per_band: int) -> None:
+    if num_hashes % rows_per_band != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be a multiple of rows_per_band "
+            f"({rows_per_band}): a partial final band would band differently "
+            "on the Spark and DuckDB sides"
+        )
+
+
+def banded_signatures(
+    sig: DataFrame, num_hashes: int = 16, rows_per_band: int = 4
+) -> DataFrame:
+    """One row per (document, band) of a signature frame: every column but
+    ``sig``, plus ``band`` (int) and ``bkey`` (array<long>, the band's
+    ``rows_per_band`` signature values in order). Built by plain array
+    element access ``sig[b·r + i]`` — no higher-order lambdas and no string
+    key. Shared by the symmetric bucket generator (:func:`minhash_lsh_pairs`)
+    and the cross-side broadcast probe (plans.dedup_sim.decontaminate_near_dup,
+    where one side is tiny and the bucket groupBy would be the wrong shape).
+    ``num_hashes`` must be a multiple of ``rows_per_band`` (a partial final
+    band would band differently in the DuckDB twin)."""
+    _check_banding(num_hashes, rows_per_band)
+    bands = F.array(
         *[
-            F.array_min(
-                F.transform(F.col("hs"), lambda h: (F.lit(a) * h + F.lit(b)) % _MINHASH_P)
+            F.struct(
+                F.lit(b).alias("band"),
+                F.array(
+                    *[F.col("sig")[b * rows_per_band + i] for i in range(rows_per_band)]
+                ).alias("bkey"),
             )
-            for a, b in coeffs
+            for b in range(num_hashes // rows_per_band)
         ]
     )
-    return base.select("id", sig.alias("sig"))
+    keep = [c for c in sig.columns if c != "sig"]
+    return sig.select(*keep, F.inline(bands))
 
 
-def banded_signatures(sig: DataFrame, rows_per_band: int = 4) -> DataFrame:
-    """(id, band, bsig) band rows of a signature frame — the map-side array
-    slice shared by the symmetric bucket generator
-    (:func:`lsh_candidate_pairs`) and the cross-side broadcast probe
-    (plans.dedup_sim.decontaminate_near_dup, where one side is tiny and the
-    bucket groupBy would be the wrong shape)."""
-    bands = F.transform(
-        F.sequence(
-            F.lit(0), (F.size("sig") / rows_per_band).cast("int") - 1
-        ),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.array_join(
-                F.transform(
-                    F.slice("sig", b.cast("int") * rows_per_band + 1, rows_per_band),
-                    lambda m: m.cast("string"),
-                ),
-                "_",
-            ).alias("bsig"),
-        ),
+def _verify_bucket_pairs(buckets: DataFrame) -> DataFrame:
+    """(id_a, id_b, inter, sz_a, sz_b) for every pair id_a < id_b of each
+    bucket's ``docs`` (array<struct<id long, shingles array<long>>>) that
+    shares at least one shingle; ``inter = |A ∩ B|`` — the shingle arrays
+    are distinct already, so this is ``size(array_intersect(A, B))`` — and
+    ``sz`` is each array's length. A pair that shares several buckets is
+    emitted once per bucket; the caller dedupes.
+
+    Per bucket of k members the kernel builds the k × U 0/1 incidence
+    matrix over the bucket's U distinct shingles and reads every pair's
+    intersection off one matmul M·Mᵀ (exact: float64 sums of ones). Near-dup
+    buckets share most shingles, so U stays near one document's size; a
+    Python set intersection per pair costs ~12× more at k = 40."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    src = buckets.select("docs")
+
+    def kernel(batches):
+        tri: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        for rb in batches:
+            col = rb.column(0)
+            lens = pc.list_value_length(col).to_numpy().astype(np.int64)
+            ids_arr, sh_arr = pc.list_flatten(col).flatten()
+            ids = ids_arr.to_numpy().astype(np.int64, copy=False)
+            sz = pc.list_value_length(sh_arr).to_numpy().astype(np.int64)
+            flat = pc.list_flatten(sh_arr).to_numpy()
+            m_off = np.zeros(len(lens) + 1, dtype=np.int64)
+            np.cumsum(lens, out=m_off[1:])
+            v_off = np.zeros(len(sz) + 1, dtype=np.int64)
+            np.cumsum(sz, out=v_off[1:])
+            left, right, counts = [], [], []
+            for m0, m1 in zip(m_off[:-1].tolist(), m_off[1:].tolist()):
+                k = m1 - m0
+                ab = tri.get(k)
+                if ab is None:
+                    ab = tri[k] = np.triu_indices(k, 1)
+                u, inv = np.unique(flat[v_off[m0] : v_off[m1]], return_inverse=True)
+                M = np.zeros((k, len(u)))
+                M[np.repeat(np.arange(k), sz[m0:m1]), inv] = 1.0
+                counts.append((M @ M.T)[ab])
+                left.append(ab[0] + m0)
+                right.append(ab[1] + m0)
+            if not counts:
+                continue
+            a, b = np.concatenate(left), np.concatenate(right)
+            inter = np.concatenate(counts).astype(np.int64)
+            swap = ids[a] > ids[b]
+            a, b = np.where(swap, b, a), np.where(swap, a, b)
+            keep = (inter > 0) & (ids[a] < ids[b])
+            a, b = a[keep], b[keep]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids[a]), pa.array(ids[b]), pa.array(inter[keep]),
+                 pa.array(sz[a]), pa.array(sz[b])],
+                names=["id_a", "id_b", "inter", "sz_a", "sz_b"],
+            )
+
+    return src.mapInArrow(
+        kernel, schema="id_a long, id_b long, inter long, sz_a long, sz_b long"
     )
-    return sig.select("id", F.explode(bands).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig")
-    )
-
-
-def lsh_candidate_pairs(
-    sig: DataFrame,
-    rows_per_band: int = 4,
-    max_bucket_size: int | None = None,
-    diag: dict | None = None,
-) -> DataFrame:
-    """Band the per-doc signature array and bucket on (band, banded signature
-    string). Banding is a map-side array slice; buckets are formed by ONE
-    groupBy shuffle with the co-bucketed ids collected per bucket, and pairs
-    expand IN-ROW from the sorted id set (id_a < id_b by construction).
-
-    A self-join formulation would recompute the whole shingle→signature→band
-    chain once per join side (map-side frames leave no exchange for Spark to
-    reuse) — the groupBy shape computes it once and shuffles only (bucket
-    key, id). Bucket sizes are near-duplicate cluster sizes (small by
-    construction); a degenerate hot bucket (e.g. boilerplate-heavy corpora)
-    would blow up ANY LSH formulation quadratically — ``max_bucket_size``
-    caps that: buckets with more than that many co-bucketed ids are DROPPED
-    (their members are boilerplate-identical; pair expansion over them is
-    k² noise, and they still surface through the remaining bands or the
-    exact-dedup pass). Dropped buckets are counted via the ``lsh_bucket_cap``
-    observation filed in the caller's ``diag`` (``lsh_dropped_buckets`` /
-    ``lsh_dropped_ids``, read with :func:`cap_counter` — the reference's
-    defensive-scan-guard posture, SequenceFileInputFilter-style).
-    Input: (id, sig array<long>).
-
-    The signature length must divide evenly into bands: the slice here keeps
-    only floor(size/rows_per_band) full bands while the DuckDB twin's
-    ``seed // rows_per_band`` would keep a partial final band — callers
-    (``minhash_lsh_pairs``/``duckdb_minhash_lsh``) enforce divisibility so
-    the twins cannot diverge."""
-    banded = banded_signatures(sig, rows_per_band)
-    buckets = (
-        banded.groupBy("band", "bsig")
-        .agg(F.sort_array(F.collect_set("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    if max_bucket_size is not None:
-        if max_bucket_size < 2:
-            raise ValueError("max_bucket_size must be >= 2")
-        buckets, obs = with_counter(
-            buckets,
-            "lsh_bucket_cap",
-            F.sum((F.size("ids") > max_bucket_size).cast("long")).alias(
-                "lsh_dropped_buckets"
-            ),
-            F.sum(
-                F.when(F.size("ids") > max_bucket_size, F.size("ids")).otherwise(0)
-            ).alias("lsh_dropped_ids"),
-        )
-        _record_cap_obs(diag, "lsh_bucket_cap", obs)
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    return expand_bucket_pairs(buckets).distinct()
 
 
 def expand_bucket_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
@@ -626,66 +675,109 @@ def minhash_lsh_pairs(
     max_bucket_size: int | None = None,
     diag: dict | None = None,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: shingle → signature → banded
-    candidates → exact-Jaccard verify on candidates only. With
-    ``max_bucket_size`` and ``diag`` given, the bucket-cap drop metrics land
-    in ``diag`` (:func:`cap_counter`).
+    """Full MinHash-LSH near-dup pipeline: one scan, one bucket shuffle, one
+    dedupe shuffle. Output (id_a, id_b, jaccard) with id_a < id_b, the pairs
+    that share a band bucket and whose exact shingle Jaccard is ≥
+    ``threshold``.
 
-    The verify intersection starts FROM the candidate pairs, never from the
-    all-pairs shingle join — candidate count is linear in corpus size, so the
-    verify stays linear too. The intersection itself is IN-ROW: candidates
-    join the compact per-doc shingle-ARRAY frame (once per side, shuffled by
-    id) and ``array_intersect`` computes |A ∩ B| inside the row. The
-    alternative — exploding (id, shingle) and re-joining on the shingle —
-    shuffles the entire exploded corpus regardless of how few candidates
-    exist; the array join moves each doc's array only once per candidate
-    partner (small by construction), and set sizes fall out as ``size()``
-    with no extra join. Zero-overlap candidates are dropped explicitly
-    (``inter > 0``) to match the oracle's inner shingle join. The shingle
-    frame feeds two consumers (signatures, verify); it is map-side only (no
-    exchange Spark could reuse), so the frame is persisted — measured 2-3×
-    faster than recomputing the tokenize+shingle scan per consumer. Cache
-    volume ≈ tokenized corpus; MEMORY_AND_DISK spills at scale (at 100 TB,
-    checkpoint to a staging table instead). ``num_hashes`` must be a multiple
+    - Scan: :func:`minhash_shingles` emits (id, shingles, sig) per document
+      in one map-side kernel; :func:`banded_signatures` turns it into one
+      (band, bkey) row per band, each still carrying the shingle array.
+    - Bucket shuffle: ``groupBy(band, bkey)`` collects (id, shingles) per
+      bucket; buckets of one document drop out.
+    - Verify: :func:`_verify_bucket_pairs` intersects the shingle sets of
+      every pair inside its bucket row, so a candidate never needs a join
+      back to the shingle frame (no persist, no verify joins). Zero-overlap
+      pairs are dropped to match the oracle's inner shingle join.
+    - Dedupe shuffle: a pair that shares several bands is verified once per
+      band; ``distinct()`` after the threshold filter keeps it once.
+
+    The trade-off: the bucket shuffle carries each document's shingle array
+    once per band (``num_hashes / rows_per_band`` copies) instead of 16-byte
+    (band key, id) rows plus two id-keyed verify joins. With no cache reused
+    between runs it measured faster at every size tried (500 to 500k
+    documents); SCALE.md has the rows.
+
+    ``max_bucket_size`` caps degenerate hot buckets (boilerplate-heavy
+    corpora co-bucket thousands of near-identical docs, and pair expansion
+    over them is k² noise): buckets with more members than the cap are
+    DROPPED before verification — their members still surface through the
+    remaining bands or the exact-dedup pass. Dropped buckets are counted by
+    the ``lsh_bucket_cap`` observation filed in the caller's ``diag``
+    (``lsh_dropped_buckets`` / ``lsh_dropped_ids``, read with
+    :func:`cap_counter` after an action). ``num_hashes`` must be a multiple
     of ``rows_per_band`` (partial-band semantics differ between the Spark
     slice and the DuckDB oracle, so uneven banding is rejected outright).
     """
-    if num_hashes % rows_per_band != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a multiple of rows_per_band "
-            f"({rows_per_band}): a partial final band would band differently "
-            "on the Spark and DuckDB sides"
-        )
-
-    # the candidate chain and the verify a/b sides all read the shingles
-    sh_arr, _ = owned_persist(shingle_arrays(df, n, id_col, text_col))
-    cands = lsh_candidate_pairs(
-        minhash_signatures(sh_arr, num_hashes),
+    _check_banding(num_hashes, rows_per_band)
+    if max_bucket_size is not None and max_bucket_size < 2:
+        raise ValueError("max_bucket_size must be >= 2")
+    banded = banded_signatures(
+        minhash_shingles(df, n, num_hashes, id_col, text_col),
+        num_hashes,
         rows_per_band,
-        max_bucket_size=max_bucket_size,
-        diag=diag,
     )
-    a = sh_arr.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh_arr.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("inter"),
-            F.size("sh_a").cast("long").alias("sz_a"),
-            F.size("sh_b").cast("long").alias("sz_b"),
+    buckets = (
+        banded.groupBy("band", "bkey")
+        .agg(F.collect_list(F.struct("id", "shingles")).alias("docs"))
+        .filter(F.size("docs") >= 2)
+    )
+    if max_bucket_size is not None:
+        buckets, obs = with_counter(
+            buckets,
+            "lsh_bucket_cap",
+            F.sum((F.size("docs") > max_bucket_size).cast("long")).alias(
+                "lsh_dropped_buckets"
+            ),
+            F.sum(
+                F.when(F.size("docs") > max_bucket_size, F.size("docs")).otherwise(0)
+            ).alias("lsh_dropped_ids"),
         )
+        _record_cap_obs(diag, "lsh_bucket_cap", obs)
+        buckets = buckets.filter(F.size("docs") <= max_bucket_size)
+    return (
+        _verify_bucket_pairs(buckets)
         .withColumn(
             "jaccard",
             fround(
                 F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4
             ),
         )
-        .filter((F.col("inter") > 0) & (F.col("jaccard") >= threshold))
+        .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
+        .distinct()
     )
+
+
+def duck_minhash_bands(
+    table: str,
+    n: int = 3,
+    num_hashes: int = 16,
+    rows_per_band: int = 4,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> str:
+    """DuckDB twin of :func:`minhash_shingles` + :func:`banded_signatures`
+    as a CTE prelude: ``sh`` (id, shingle) rows and ``banded`` (id, band,
+    bkey) with ``bkey`` the band's signature values as a list in seed
+    order."""
+    _check_banding(num_hashes, rows_per_band)
+    coeffs = _minhash_coeffs(num_hashes)
+    perm_rows = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(coeffs))
+    return f"""
+        sh AS ({duck_shingles(table, n, id_col, text_col)}),
+        perms(seed, a, b) AS (VALUES {perm_rows}),
+        sig AS (
+            SELECT id, seed,
+                   min((a * (shingle % {_MINHASH_P}) + b) % {_MINHASH_P}) AS mh
+            FROM sh, perms
+            GROUP BY id, seed
+        ),
+        banded AS (
+            SELECT id, CAST(seed // {rows_per_band} AS INT) AS band,
+                   list(mh ORDER BY seed) AS bkey
+            FROM sig GROUP BY 1, 2
+        )"""
 
 
 def duckdb_minhash_lsh(
@@ -698,40 +790,20 @@ def duckdb_minhash_lsh(
     text_col: str = "text",
     max_bucket_size: int | None = None,
 ) -> str:
-    if num_hashes % rows_per_band != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a multiple of rows_per_band "
-            f"({rows_per_band}): a partial final band would band differently "
-            "on the Spark and DuckDB sides"
-        )
-    coeffs = _minhash_coeffs(num_hashes)
-    perm_rows = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(coeffs))
     return f"""
-        WITH sh AS ({duck_shingles(table, n, id_col, text_col)}),
-        perms(seed, a, b) AS (VALUES {perm_rows}),
-        sig AS (
-            SELECT id, seed,
-                   min((a * (shingle % {_MINHASH_P}) + b) % {_MINHASH_P}) AS mh
-            FROM sh, perms
-            GROUP BY id, seed
-        ),
-        banded AS (
-            SELECT id, CAST(seed // {rows_per_band} AS INT) AS band,
-                   string_agg(mh::VARCHAR, '_' ORDER BY seed) AS bsig
-            FROM sig GROUP BY 1, 2
-        ),
+        WITH {duck_minhash_bands(table, n, num_hashes, rows_per_band, id_col, text_col)},
         kept AS (
             -- bucket-size cap: buckets with more co-bucketed ids than the cap
-            -- are DROPPED before pair expansion (lsh_candidate_pairs'
+            -- are DROPPED before pair expansion (minhash_lsh_pairs'
             -- max_bucket_size rule); uncapped = every >=2 bucket kept
-            SELECT band, bsig FROM banded GROUP BY band, bsig
+            SELECT band, bkey FROM banded GROUP BY band, bkey
             HAVING count(*) >= 2{f" AND count(*) <= {max_bucket_size}" if max_bucket_size is not None else ""}
         ),
         cands AS (
             SELECT DISTINCT a.id AS id_a, b.id AS id_b
             FROM banded a JOIN banded b
-              ON a.band = b.band AND a.bsig = b.bsig AND a.id < b.id
-            JOIN kept k ON k.band = a.band AND k.bsig = a.bsig
+              ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id
+            JOIN kept k ON k.band = a.band AND k.bkey = a.bkey
         ),
         sizes AS (SELECT id, count(*) AS sz FROM sh GROUP BY id),
         inter AS (
@@ -816,16 +888,8 @@ def positional_grams(
             ids: list = []
             poss: list[int] = []
             ghs: list[int] = []
-            texts = pdf["text"]
             id_vals = pdf["id"]
-            for row in range(len(pdf)):
-                text = texts.iloc[row]
-                if text is None:
-                    continue
-                toks = py_tokens(text)
-                if len(toks) < k:
-                    continue
-                hs = intern.hash_all(py_ngrams(toks, k))
+            for row, hs in _doc_gram_hashes(pdf["text"], k, intern):
                 ids.extend([id_vals.iloc[row]] * len(hs))
                 poss.extend(range(1, len(hs) + 1))
                 ghs.extend(hs)
@@ -1404,7 +1468,7 @@ def simhash_hamming_pairs(
     banded fingerprint off a persisted base, so the join costs one shuffle
     of (band, bval, id). ``max_bucket_size`` still guards the degenerate
     boilerplate case (oversized buckets dropped BEFORE the join, same
-    semantics as :func:`lsh_candidate_pairs`).
+    semantics as :func:`minhash_lsh_pairs`' bucket cap).
 
     radius must be 1..7 so bands stay byte-sized on a 32-bit fingerprint
     (radius+1 bands of ceil(32/(radius+1)) bits; bands are taken as equal
@@ -1861,7 +1925,7 @@ def containment_pairs(
     """
 
     # three consumers (a-side, b-side, sizes) and no exchange reuse across
-    # them — persist the shingle frame once (minhash_lsh_pairs precedent)
+    # them — persist the shingle frame once (ngram_jaccard_pairs precedent)
     sh_arr, _ = owned_persist(shingle_arrays(df, n, id_col, text_col))
     sh = sh_arr.select("id", F.explode("shingles").alias("shingle"))
     if max_df is not None:

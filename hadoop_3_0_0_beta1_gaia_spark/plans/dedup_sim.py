@@ -172,7 +172,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     "boilerplate-heavy corpora co-bucket thousands of ids and pair expansion "
     "over them is k² noise — by DROPPING any bucket with more co-bucketed "
     "ids than the cap before pair expansion (functions/dedup.py "
-    "lsh_candidate_pairs). The cap CHANGES the answer (pairs surfaced only "
+    "minhash_lsh_pairs). The cap CHANGES the answer (pairs surfaced only "
     "through an oversized bucket disappear), so the DuckDB oracle reproduces "
     "the drop rule exactly; dropped buckets/ids are counted via the "
     "lsh_bucket_cap observation (cap_counter over the caller's diag). Cap=2 "
@@ -738,32 +738,18 @@ _DECON_MOD = 7
 
 
 def _decon_nd_oracle() -> str:
-    from ..functions.dedup import _MINHASH_P, _minhash_coeffs, duck_shingles
+    from ..functions.dedup import duck_minhash_bands
     from ..functions.rounding import duck_fround
 
-    n, num_hashes = _MINHASH["n"], _MINHASH["num_hashes"]
-    rpb, thr = _MINHASH["rows_per_band"], _MINHASH["threshold"]
-    coeffs = _minhash_coeffs(num_hashes)
-    perm_rows = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(coeffs))
+    thr = _MINHASH["threshold"]
     jac = duck_fround("i.inter / (st.sz + se.sz - i.inter)", 4)
     return f"""
-        WITH sh AS ({duck_shingles("documents", n)}),
-        perms(seed, a, b) AS (VALUES {perm_rows}),
-        sig AS (
-            SELECT id, seed,
-                   min((a * (shingle % {_MINHASH_P}) + b) % {_MINHASH_P}) AS mh
-            FROM sh, perms
-            GROUP BY id, seed
-        ),
-        banded AS (
-            SELECT id, CAST(seed // {rpb} AS INT) AS band,
-                   string_agg(mh::VARCHAR, '_' ORDER BY seed) AS bsig
-            FROM sig GROUP BY 1, 2
-        ),
+        WITH {duck_minhash_bands("documents", _MINHASH["n"], _MINHASH["num_hashes"],
+                                 _MINHASH["rows_per_band"])},
         cands AS (
             SELECT DISTINCT t.id AS doc_id, e.id AS eval_id
             FROM banded t JOIN banded e
-              ON t.band = e.band AND t.bsig = e.bsig
+              ON t.band = e.band AND t.bkey = e.bkey
             WHERE t.id % {_DECON_MOD} <> 0 AND e.id % {_DECON_MOD} = 0
         ),
         sizes AS (SELECT id, count(*) AS sz FROM sh GROUP BY id),
@@ -817,31 +803,29 @@ def _decon_nd_oracle() -> str:
     "shingle anywhere, linear in corpus size (the "
     "decontaminate_eval_overlap posture lifted from span hashes to the "
     "full LSH pipeline; band/signature machinery shared verbatim with "
-    "minhash_lsh_pairs via banded_signatures)",
+    "minhash_lsh_pairs: the minhash_shingles kernel and the "
+    "banded_signatures (band, bkey) rows)",
 )
 def decontaminate_near_dup(spark, sf_dir):
     from pyspark.sql import Window
 
-    from ..functions.dedup import (
-        banded_signatures,
-        minhash_signatures,
-        shingle_arrays,
-    )
+    from ..functions.dedup import banded_signatures, minhash_shingles
     from ..functions.rounding import fround
 
     d = T(spark, sf_dir, "documents")
-    sh, _ = owned_persist(shingle_arrays(d, _MINHASH["n"]))
+    sh, _ = owned_persist(
+        minhash_shingles(d, _MINHASH["n"], _MINHASH["num_hashes"])
+    )
     banded = banded_signatures(
-        minhash_signatures(sh, _MINHASH["num_hashes"]),
-        _MINHASH["rows_per_band"],
+        sh.select("id", "sig"), _MINHASH["num_hashes"], _MINHASH["rows_per_band"]
     )
     is_eval = F.col("id") % _DECON_MOD == 0
     ev_bands = banded.filter(is_eval).select(
-        F.col("id").alias("eval_id"), "band", "bsig"
+        F.col("id").alias("eval_id"), "band", "bkey"
     )
     cands = (
         banded.filter(~is_eval)
-        .join(F.broadcast(ev_bands), ["band", "bsig"])
+        .join(F.broadcast(ev_bands), ["band", "bkey"])
         .select(F.col("id").alias("doc_id"), "eval_id")
         .distinct()
     )
@@ -909,6 +893,9 @@ def admission_summary(batch, pairs):
     (the rest). Checkpointed eagerly, so the rejected set is released before
     returning."""
     rejected = pairs.select(F.col("id_b").alias("doc_id")).distinct().persist()
+    # fill before the two consumers run: AQE submits them concurrently, and
+    # each would otherwise recompute ``pairs`` in full
+    rejected.count()
     admitted = batch.join(rejected, "doc_id", "left_anti")
     out = (
         batch.agg(F.count("*").cast("long").alias("batch_docs"))
@@ -1331,8 +1318,9 @@ def fuzzy_match_customers(spark, sf_dir):
     "dedup_incremental_exact and the steady-state LSH shape: a new batch "
     "(doc_id >= split) is admitted only where no banded-LSH candidate against "
     "the EXISTING corpus (doc_id < split) survives the exact-Jaccard verify. "
-    "Reuses the full minhash_lsh_pairs pipeline (signatures map-side, ONE "
-    "banding groupBy, in-row pair expansion, candidate-only verify) and "
+    "Reuses the full minhash_lsh_pairs pipeline (signatures map-side in "
+    "the shingle kernel, ONE bucket groupBy carrying the shingle arrays, "
+    "the Jaccard verify inside each bucket row) and "
     "keeps only cross-side pairs — id_a < split <= id_b holds automatically "
     "because banding orients pairs by id. At 100 TB the existing side is the "
     "persisted signature store; the batch side is the only fresh compute",

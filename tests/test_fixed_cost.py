@@ -6,6 +6,8 @@
 - ``session.table`` runs no schema job on a repeated read of an unchanged
   file, and sees a rewritten file's new schema.
 - The DSIR fit runs in the one collect of its bucket counts.
+- MinHash-LSH dedup runs in one scan, one bucket shuffle and one dedupe
+  shuffle: no cache, no join.
 """
 
 from __future__ import annotations
@@ -162,3 +164,30 @@ def test_dsir_fit_runs_in_two_jobs_with_the_same_log_ratios(spark, sf_dir, monke
         ref_arr[row["b"]] = row["lr"]
     assert (lr_arr[hit] == ref_arr[hit]).all()
     assert lr_arr.view(np.int64).tolist() == ref_arr.view(np.int64).tolist()
+
+
+def test_minhash_lsh_runs_in_four_jobs_without_cache_or_join(spark, sf_dir):
+    import io
+    from contextlib import redirect_stdout
+
+    from hadoop_3_0_0_beta1_gaia_spark.plans.registry import all_entries
+
+    entry = all_entries()["dedup_minhash_lsh"]
+    session.table(spark, sf_dir, "documents")  # schema memo warm, as in a pass
+
+    def run():
+        df = entry.build(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return df
+
+    try:
+        df, n = _jobs(spark, run)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+    finally:
+        session.release_owned()
+    assert n <= 4
+    plan = buf.getvalue()
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+    assert "Join" not in plan, plan

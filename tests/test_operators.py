@@ -1157,9 +1157,7 @@ def test_lsh_bucket_cap_on_boilerplate_corpus(spark):
     one (it keeps the mega-bucket) does not take over the cap-10 counts."""
     from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import (
         cap_counter,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        shingle_arrays,
+        minhash_lsh_pairs,
     )
 
     boiler = [(i, "the quick brown fox jumps over the lazy dog again and again")
@@ -1172,19 +1170,15 @@ def test_lsh_bucket_cap_on_boilerplate_corpus(spark):
     singles = [(2000 + i, f"unique document number {i} with its own words {i*7}")
                for i in range(5)]
     df = spark.createDataFrame(boiler + cluster + singles, ["doc_id", "text"])
-    sig = minhash_signatures(
-        shingle_arrays(df, n=3, id_col="doc_id", text_col="text"), num_hashes=16
-    )
+    lsh = dict(n=3, num_hashes=16, rows_per_band=4)
 
-    uncapped = lsh_candidate_pairs(sig, rows_per_band=4)
+    uncapped = minhash_lsh_pairs(df, **lsh)
     assert uncapped.count() >= 300 * 299 // 2  # quadratic blowup is real
 
     diag: dict = {}
     diag400: dict = {}
-    capped = lsh_candidate_pairs(sig, rows_per_band=4, max_bucket_size=10, diag=diag)
-    capped400 = lsh_candidate_pairs(
-        sig, rows_per_band=4, max_bucket_size=400, diag=diag400
-    )
+    capped = minhash_lsh_pairs(df, **lsh, max_bucket_size=10, diag=diag)
+    capped400 = minhash_lsh_pairs(df, **lsh, max_bucket_size=400, diag=diag400)
     pairs = {(r["id_a"], r["id_b"]) for r in capped.collect()}
     capped400.collect()
     assert (1000, 1001) in pairs  # small clusters survive the cap
@@ -1761,8 +1755,13 @@ def test_shingle_kernel_equals_expression_fold(spark, sf_dir):
     dedup family's sf10 wall) must be BIT-IDENTICAL to the expression fold,
     including element ORDER (dict.fromkeys == array_distinct first-occurrence
     order): fixture corpus plus adversarial whitespace/empty/unicode/
-    repeated-gram/NULL rows. All integer/md5 arithmetic — exact equality."""
+    repeated-gram/NULL rows. All integer/md5 arithmetic — exact equality.
+    The MinHash kernel shares the shingle loop: its shingles equal the fold
+    too, and its signature equals a plain-Python-int reference."""
     from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import (
+        _MINHASH_P,
+        _minhash_coeffs,
+        minhash_shingles,
         shingle_arrays,
         shingle_arrays_expr,
     )
@@ -1790,6 +1789,14 @@ def test_shingle_kernel_equals_expression_fold(spark, sf_dir):
     assert 9_000_005 in kern and len(kern[9_000_005]) == 3  # distinct-ed
     assert 9_000_002 not in kern and 9_000_004 not in kern
     assert 9_000_007 not in kern
+
+    mh = {r["id"]: (r["shingles"], r["sig"]) for r in minhash_shingles(docs, 3, 16).collect()}
+    assert {i: sh for i, (sh, _) in mh.items()} == expr
+    coeffs = _minhash_coeffs(16)
+    for i, (_, sig) in mh.items():
+        assert sig == [
+            min((a * (h % _MINHASH_P) + b) % _MINHASH_P for h in expr[i]) for a, b in coeffs
+        ], i
 
 
 def test_positional_grams_kernel_equals_expression_fold(spark, sf_dir):
@@ -1820,6 +1827,48 @@ def test_positional_grams_kernel_equals_expression_fold(spark, sf_dir):
     # doc 9_000_001: 16 tokens -> 9 grams, duplicates at shifted positions
     n1 = sum(1 for t in kern if t[0] == 9_000_001)
     assert n1 == 9
+
+
+def test_lsh_verify_kernel_equals_set_reference(spark):
+    """The LSH bucket verify kernel reads each pair's shingle intersection
+    off a 0/1 matmul; it must equal plain Python set intersection: every
+    pair id_a < id_b of a bucket that shares a shingle, with both set sizes
+    oriented with the ids. Zero-overlap pairs and a pair of equal ids emit
+    nothing; 60-bit shingle values stay exact."""
+    import random
+
+    from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import _verify_bucket_pairs
+
+    rng = random.Random(7)
+    vocab = list(range(1, 400)) + [2**59 + 3, 2**60 - 1]
+    buckets = []
+    for k in (2, 2, 3, 5, 9, 40):
+        base = rng.sample(vocab, 30)
+        buckets.append(
+            [
+                (
+                    rng.randrange(10**6),
+                    list(dict.fromkeys(rng.sample(base, 25) + rng.sample(vocab, 3))),
+                )
+                for _ in range(k)
+            ]
+        )
+    buckets.append([(5, [1, 2, 3]), (6, [4, 5])])  # nothing shared
+    buckets.append([(7, [1, 2]), (7, [1, 2]), (8, [2, 2**60 - 1])])  # repeated id
+    df = spark.createDataFrame(
+        [(b,) for b in buckets], "docs array<struct<id long, shingles array<long>>>"
+    )
+    got = sorted(map(tuple, _verify_bucket_pairs(df).collect()))
+    want = []
+    for b in buckets:
+        members = sorted(b, key=lambda m: m[0])
+        for i, (ia, sa) in enumerate(members):
+            for ib, sb in members[i + 1 :]:
+                inter = len(set(sa) & set(sb))
+                if ia < ib and inter:
+                    want.append((ia, ib, inter, len(sa), len(sb)))
+    assert got == sorted(want)
+    assert (7, 8, 1, 2, 2) in got and not any(r[0] == 5 for r in got)
 
 
 def test_expand_bucket_pairs_kernel_equals_expression(spark, sf_dir):

@@ -725,16 +725,18 @@ def test_capped_lsh_filters_buckets_before_expansion(spark, sf_dir):
     pair expansion (dropping a mega-bucket after expanding it would defeat
     the point). In formatted explain, node ids are leaf-first — lower id
     executes earlier — so the cap filter's id must be below that of the
-    pair-expansion kernel (the MapInArrow emitting id_a/id_b), with the
+    pair-verify kernel (the MapInArrow emitting id_a/id_b), with the
     observation counter in between."""
     import re
 
     p = _plan(spark, sf_dir, "dedup_minhash_lsh_capped")
     cap = re.search(
-        r"\((\d+)\) Filter\nInput[^\n]*\nCondition : \(size\(ids#\d+, false\) <= 2\)", p
+        r"\((\d+)\) Filter\nInput[^\n]*\nCondition : \(size\(docs#\d+, false\) <= 2\)", p
     )
     expand = re.search(
-        r"\((\d+)\) MapInArrow\nInput[^\n]*\nArguments: [^\n]*\[id_a#\d+L, id_b#\d+L\]", p
+        r"\((\d+)\) MapInArrow\nInput[^\n]*\nArguments: [^\n]*"
+        r"\[id_a#\d+L, id_b#\d+L, inter#\d+L, sz_a#\d+L, sz_b#\d+L\]",
+        p,
     )
     assert cap and expand, p[:2000]
     assert int(cap.group(1)) < int(expand.group(1)), "cap applied after expansion"
