@@ -510,27 +510,85 @@ def banded_signatures(
     return sig.select(*keep, F.inline(bands))
 
 
-def _verify_bucket_pairs(buckets: DataFrame) -> DataFrame:
+_VERIFY_BLOCK = 1 << 22  # incidence-matrix elements per matmul block
+_VERIFY_FLUSH = 1 << 16  # verified pairs per yielded Arrow batch
+
+
+def _bucket_intersections(ids, sz, flat, split=None, block=_VERIFY_BLOCK):
+    """``(a, b, inter)`` for the member pairs of one LSH bucket that share
+    a shingle: ``a``/``b`` index the members, ``ids[a] < ids[b]``, and
+    ``inter = |A ∩ B|``. ``ids`` and ``sz`` hold each member's id and
+    shingle count, ``flat`` their (distinct) shingle arrays concatenated.
+    With ``split`` only pairs ``ids[a] < split <= ids[b]`` are computed.
+
+    Every pair's intersection is one entry of M·Mᵀ, M the k × U 0/1
+    incidence matrix over the bucket's U distinct shingles (a Python set
+    intersection per pair costs ~12× more at k = 40). M is built in
+    column blocks of at most ``block`` elements (16 MiB of float32 at the
+    default), so a bucket of long, unrelated documents never holds k × U
+    at once; a block's sums are at most its width, below 2^24, so float32
+    is exact, and the blocks add up in int64. What stays is the k × k
+    count matrix — the size of the pair set the bucket can emit."""
+    import numpy as np
+
+    k = len(ids)
+    if split is None:
+        left = right = np.arange(k)
+    else:
+        left = np.flatnonzero(ids < split)
+        right = np.flatnonzero(ids >= split)
+    if not len(left) or not len(right) or not len(flat):
+        e = np.zeros(0, dtype=np.int64)
+        return e, e, e
+    order = np.argsort(flat, kind="stable")
+    srt = flat[order]
+    col = np.zeros(len(srt), dtype=np.int64)
+    np.cumsum(srt[1:] != srt[:-1], out=col[1:])
+    member = np.repeat(np.arange(k), sz)[order]
+    u = int(col[-1]) + 1
+    width = max(1, block // k)
+    counts = np.zeros((len(left), len(right)), dtype=np.int64)
+    for c0 in range(0, u, width):
+        lo, hi = np.searchsorted(col, [c0, c0 + width])
+        M = np.zeros((k, min(width, u - c0)), dtype=np.float32)
+        M[member[lo:hi], col[lo:hi] - c0] = 1.0
+        if split is None:
+            counts += (M @ M.T).astype(np.int64)
+        else:
+            counts += (M[left] @ M[right].T).astype(np.int64)
+    if split is None:
+        counts = np.triu(counts, 1)
+    i, j = np.nonzero(counts)
+    a, b, inter = left[i], right[j], counts[i, j]
+    swap = ids[a] > ids[b]
+    a, b = np.where(swap, b, a), np.where(swap, a, b)
+    keep = ids[a] < ids[b]
+    return a[keep], b[keep], inter[keep]
+
+
+def _verify_bucket_pairs(buckets: DataFrame, split: int | None = None) -> DataFrame:
     """(id_a, id_b, inter, sz_a, sz_b) for every pair id_a < id_b of each
     bucket's ``docs`` (array<struct<id long, shingles array<long>>>) that
     shares at least one shingle; ``inter = |A ∩ B|`` — the shingle arrays
     are distinct already, so this is ``size(array_intersect(A, B))`` — and
     ``sz`` is each array's length. A pair that shares several buckets is
-    emitted once per bucket; the caller dedupes.
+    emitted once per bucket; the caller dedupes. With ``split``, only pairs
+    id_a < split <= id_b (:func:`_bucket_intersections`).
 
-    Per bucket of k members the kernel builds the k × U 0/1 incidence
-    matrix over the bucket's U distinct shingles and reads every pair's
-    intersection off one matmul M·Mᵀ (exact: float64 sums of ones). Near-dup
-    buckets share most shingles, so U stays near one document's size; a
-    Python set intersection per pair costs ~12× more at k = 40."""
+    Memory per Python worker: one bucket row (its k shingle arrays), its
+    k × k counts and one incidence block; verified pairs go out in batches
+    of about ``_VERIFY_FLUSH`` rows, so a batch of buckets never gathers its
+    whole pair volume."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     src = buckets.select("docs")
+    names = ["id_a", "id_b", "inter", "sz_a", "sz_b"]
 
     def kernel(batches):
-        tri: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        out: list[list[np.ndarray]] = [[] for _ in names]
+        pending = 0
         for rb in batches:
             col = rb.column(0)
             lens = pc.list_value_length(col).to_numpy().astype(np.int64)
@@ -542,30 +600,23 @@ def _verify_bucket_pairs(buckets: DataFrame) -> DataFrame:
             np.cumsum(lens, out=m_off[1:])
             v_off = np.zeros(len(sz) + 1, dtype=np.int64)
             np.cumsum(sz, out=v_off[1:])
-            left, right, counts = [], [], []
             for m0, m1 in zip(m_off[:-1].tolist(), m_off[1:].tolist()):
-                k = m1 - m0
-                ab = tri.get(k)
-                if ab is None:
-                    ab = tri[k] = np.triu_indices(k, 1)
-                u, inv = np.unique(flat[v_off[m0] : v_off[m1]], return_inverse=True)
-                M = np.zeros((k, len(u)))
-                M[np.repeat(np.arange(k), sz[m0:m1]), inv] = 1.0
-                counts.append((M @ M.T)[ab])
-                left.append(ab[0] + m0)
-                right.append(ab[1] + m0)
-            if not counts:
-                continue
-            a, b = np.concatenate(left), np.concatenate(right)
-            inter = np.concatenate(counts).astype(np.int64)
-            swap = ids[a] > ids[b]
-            a, b = np.where(swap, b, a), np.where(swap, a, b)
-            keep = (inter > 0) & (ids[a] < ids[b])
-            a, b = a[keep], b[keep]
+                bid, bsz = ids[m0:m1], sz[m0:m1]
+                a, b, inter = _bucket_intersections(
+                    bid, bsz, flat[v_off[m0] : v_off[m1]], split
+                )
+                for acc, v in zip(out, (bid[a], bid[b], inter, bsz[a], bsz[b])):
+                    acc.append(v)
+                pending += len(a)
+                if pending >= _VERIFY_FLUSH:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(np.concatenate(acc)) for acc in out], names=names
+                    )
+                    out = [[] for _ in names]
+                    pending = 0
+        if pending:
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[a]), pa.array(ids[b]), pa.array(inter[keep]),
-                 pa.array(sz[a]), pa.array(sz[b])],
-                names=["id_a", "id_b", "inter", "sz_a", "sz_b"],
+                [pa.array(np.concatenate(acc)) for acc in out], names=names
             )
 
     return src.mapInArrow(
@@ -674,6 +725,7 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     max_bucket_size: int | None = None,
     diag: dict | None = None,
+    split: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: one scan, one bucket shuffle, one
     dedupe shuffle. Output (id_a, id_b, jaccard) with id_a < id_b, the pairs
@@ -694,9 +746,17 @@ def minhash_lsh_pairs(
 
     The trade-off: the bucket shuffle carries each document's shingle array
     once per band (``num_hashes / rows_per_band`` copies) instead of 16-byte
-    (band key, id) rows plus two id-keyed verify joins. With no cache reused
-    between runs it measured faster at every size tried (500 to 500k
-    documents); SCALE.md has the rows.
+    (band key, id) rows plus two id-keyed verify joins, and one bucket row
+    holds its k members' shingle arrays (the verify kernel's memory bound is
+    in :func:`_bucket_intersections`). With no cache reused between runs it
+    measured faster at every size tried (500 to 500k documents); SCALE.md
+    has the rows.
+
+    ``split`` restricts the output to pairs id_a < split <= id_b — an
+    incremental batch (ids >= split) checked against the corpus before it.
+    It is the same plan: buckets with no member on one side are filtered
+    out before the verify kernel, and the kernel intersects only cross-side
+    pairs.
 
     ``max_bucket_size`` caps degenerate hot buckets (boilerplate-heavy
     corpora co-bucket thousands of near-identical docs, and pair expansion
@@ -709,7 +769,6 @@ def minhash_lsh_pairs(
     of ``rows_per_band`` (partial-band semantics differ between the Spark
     slice and the DuckDB oracle, so uneven banding is rejected outright).
     """
-    _check_banding(num_hashes, rows_per_band)
     if max_bucket_size is not None and max_bucket_size < 2:
         raise ValueError("max_bucket_size must be >= 2")
     banded = banded_signatures(
@@ -735,8 +794,12 @@ def minhash_lsh_pairs(
         )
         _record_cap_obs(diag, "lsh_bucket_cap", obs)
         buckets = buckets.filter(F.size("docs") <= max_bucket_size)
+    if split is not None:
+        buckets = buckets.filter(
+            (F.array_min("docs.id") < split) & (F.array_max("docs.id") >= split)
+        )
     return (
-        _verify_bucket_pairs(buckets)
+        _verify_bucket_pairs(buckets, split)
         .withColumn(
             "jaccard",
             fround(

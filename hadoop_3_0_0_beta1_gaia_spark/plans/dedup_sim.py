@@ -1320,18 +1320,17 @@ def fuzzy_match_customers(spark, sf_dir):
     "the EXISTING corpus (doc_id < split) survives the exact-Jaccard verify. "
     "Reuses the full minhash_lsh_pairs pipeline (signatures map-side in "
     "the shingle kernel, ONE bucket groupBy carrying the shingle arrays, "
-    "the Jaccard verify inside each bucket row) and "
-    "keeps only cross-side pairs — id_a < split <= id_b holds automatically "
-    "because banding orients pairs by id. At 100 TB the existing side is the "
-    "persisted signature store; the batch side is the only fresh compute",
+    "the Jaccard verify inside each bucket row) with split= set, so only "
+    "buckets holding both sides reach the verify kernel and only cross-side "
+    "pairs (id_a < split <= id_b) are intersected. At 100 TB the existing "
+    "side is the persisted signature store; the batch side is the only "
+    "fresh compute",
 )
 def dedup_incremental_minhash(spark, sf_dir):
     from ..functions.dedup import minhash_lsh_pairs
 
     d = T(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(d, **_MINHASH).filter(
-        (F.col("id_a") < _INCR_SPLIT) & (F.col("id_b") >= _INCR_SPLIT)
-    )
+    pairs = minhash_lsh_pairs(d, **_MINHASH, split=_INCR_SPLIT)
     batch = d.filter(F.col("doc_id") >= _INCR_SPLIT).select("doc_id")
     return admission_summary(batch, pairs)
 

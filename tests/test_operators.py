@@ -1834,10 +1834,18 @@ def test_lsh_verify_kernel_equals_set_reference(spark):
     off a 0/1 matmul; it must equal plain Python set intersection: every
     pair id_a < id_b of a bucket that shares a shingle, with both set sizes
     oriented with the ids. Zero-overlap pairs and a pair of equal ids emit
-    nothing; 60-bit shingle values stay exact."""
+    nothing; 60-bit shingle values stay exact. With ``split`` only pairs
+    id_a < split <= id_b come out. The per-bucket counts are the same for
+    every incidence block width, including a wide bucket (U ≈ k·|doc|)
+    read in many blocks."""
     import random
 
-    from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import _verify_bucket_pairs
+    import numpy as np
+
+    from hadoop_3_0_0_beta1_gaia_spark.functions.dedup import (
+        _bucket_intersections,
+        _verify_bucket_pairs,
+    )
 
     rng = random.Random(7)
     vocab = list(range(1, 400)) + [2**59 + 3, 2**60 - 1]
@@ -1853,6 +1861,7 @@ def test_lsh_verify_kernel_equals_set_reference(spark):
                 for _ in range(k)
             ]
         )
+    buckets.append([(rng.randrange(10**6), rng.sample(range(6000), 300)) for _ in range(12)])
     buckets.append([(5, [1, 2, 3]), (6, [4, 5])])  # nothing shared
     buckets.append([(7, [1, 2]), (7, [1, 2]), (8, [2, 2**60 - 1])])  # repeated id
     df = spark.createDataFrame(
@@ -1869,6 +1878,24 @@ def test_lsh_verify_kernel_equals_set_reference(spark):
                     want.append((ia, ib, inter, len(sa), len(sb)))
     assert got == sorted(want)
     assert (7, 8, 1, 2, 2) in got and not any(r[0] == 5 for r in got)
+    split = 500_000
+    cross = sorted(map(tuple, _verify_bucket_pairs(df, split).collect()))
+    assert cross == sorted(r for r in want if r[0] < split <= r[1])
+    for b in buckets:
+        ids = np.array([m[0] for m in b], dtype=np.int64)
+        sz = np.array([len(m[1]) for m in b], dtype=np.int64)
+        flat = np.array([v for m in b for v in m[1]], dtype=np.int64)
+        for cut in (None, split):
+            ref = sorted(
+                (ia, ib, len(set(sa) & set(sb)))
+                for ia, sa in b
+                for ib, sb in b
+                if ia < ib and set(sa) & set(sb) and (cut is None or ia < cut <= ib)
+            )
+            for block in (1, 50, 1 << 22):
+                a, c, inter = _bucket_intersections(ids, sz, flat, cut, block)
+                pairs = zip(ids[a].tolist(), ids[c].tolist(), inter.tolist())
+                assert sorted(pairs) == ref, (len(b), cut, block)
 
 
 def test_expand_bucket_pairs_kernel_equals_expression(spark, sf_dir):
