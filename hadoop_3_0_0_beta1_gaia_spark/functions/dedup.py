@@ -1282,7 +1282,6 @@ def connected_components(
     max_iter: int = 20,
     jump: bool = True,
     diag: dict | None = None,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Dedup clusters: connected components over a near-dup pair graph via
     iterative min-label propagation — the engine's iterative-algorithm
@@ -1318,15 +1317,9 @@ def connected_components(
     with ``{"rounds": n, "converged": bool}`` (replaces the old module-level
     round counter, which made concurrent callers corrupt each other).
 
-    ``checkpoint_every`` sets the lineage-truncation cadence: round k
-    localCheckpoints (eager) only when ``k % checkpoint_every == 0``; other
-    rounds persist MEMORY_AND_DISK instead (the convergence aggregate
-    materializes the cache either way, so later rounds re-read cached
-    blocks, not lineage — the plan just grows ``checkpoint_every`` rounds
-    deep between truncations). Every-round checkpointing (default) bounds
-    plan depth hardest but pays checkpoint block writes + the localCheckpoint
-    residue force_release_all must later reap per round — the knob exists to
-    measure that trade (VERDICT r9 item 5: the components sf30 run swing).
+    Every round's label table is localCheckpointed (eager), which bounds the
+    plan depth at one round; force_release_all later reaps the checkpoint
+    blocks.
     """
     from pyspark import StorageLevel
 
@@ -1387,10 +1380,7 @@ def connected_components(
             .agg(F.min("label").alias("label"))
         )
         rounds += 1
-        if rounds % checkpoint_every == 0:
-            prop = prop.localCheckpoint(eager=True)
-        else:
-            prop = prop.persist(StorageLevel.MEMORY_AND_DISK)
+        prop = prop.localCheckpoint(eager=True)
         new_sum = prop.agg(F.sum("label").alias("s")).collect()[0]["s"]
         labels.unpersist()
         labels = prop

@@ -35,18 +35,23 @@ Fixed cost of a small pass (Hadoop's uber-job regime, JobImpl.makeUberDecision):
   PYTHONPATH, as it already must be for the pickled kernels.
 - ``table`` remembers each file's inferred schema, so a repeated read of an
   unchanged file runs no footer-inference job.
+- A session that launches the driver JVM starts it from a per-machine
+  class-data archive (``cds``), built by the first such session: a cold
+  set-up maps Spark's classes instead of loading them from the jars.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import TABLES
+from . import TABLES, cds
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+JAVA_OPTS = "-Duser.language=en -Duser.country=US"
 
 
 def get_session(
@@ -79,10 +84,21 @@ def get_session(
         # would diverge on ASCII 'I'. en_US is root-equivalent for ASCII.
         # (No effect on an already-running JVM: getOrCreate reuses it, and
         # the fixtures are ASCII-only anyway; this pins fresh deployments.)
-        .config("spark.driver.extraJavaOptions", "-Duser.language=en -Duser.country=US")
-        .config("spark.executor.extraJavaOptions", "-Duser.language=en -Duser.country=US")
+        .config("spark.executor.extraJavaOptions", JAVA_OPTS)
     )
-    return builder.getOrCreate()
+    # only a call that launches the JVM (no gateway yet) can use an archive
+    launch = cds.prepare(JAVA_OPTS) if SparkContext._gateway is None else cds.Launch(JAVA_OPTS)
+    builder.config("spark.driver.extraJavaOptions", launch.java_opts)
+    try:
+        with launch:
+            spark = builder.getOrCreate()
+    except Exception:
+        if launch.mode != "dump":
+            raise
+        # the JVM could not start in dump mode: start it as without an archive
+        return builder.config("spark.driver.extraJavaOptions", JAVA_OPTS).getOrCreate()
+    launch.write_archive(spark)
+    return spark
 
 
 # Timestamp columns in the driver testdata. The files carry parquet

@@ -8,6 +8,9 @@
 - The DSIR fit runs in the one collect of its bucket counts.
 - MinHash-LSH dedup runs in one scan, one bucket shuffle and one dedupe
   shuffle: no cache, no join.
+- The driver JVM starts from a class-data archive named after the JDK and
+  the Spark jars; only a complete archive is mapped or promoted, and a conf
+  directory with a real file leaves the launch as it was.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from hadoop_3_0_0_beta1_gaia_spark import session
+from hadoop_3_0_0_beta1_gaia_spark import cds, session
 
 
 def _jobs(spark, fn):
@@ -191,3 +194,139 @@ def test_minhash_lsh_runs_in_four_jobs_without_cache_or_join(spark, sf_dir):
     plan = buf.getvalue()
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
     assert "Join" not in plan, plan
+
+
+def _fake_install(tmp_path, monkeypatch):
+    """A Spark home with two jars and a JDK with a ``java`` file, a fresh
+    cache, and no variable that would turn the archive off."""
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    (home / "conf").mkdir()
+    (home / "conf" / "spark-defaults.conf.template").write_text("# template\n")
+    for name in ("a.jar", "b.jar"):
+        (home / "jars" / name).write_bytes(b"PK" + name.encode())
+    jdk = tmp_path / "jdk"
+    (jdk / "bin").mkdir(parents=True)
+    (jdk / "bin" / "java").write_bytes(b"java")
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    monkeypatch.setattr(cds, "LAST", cds.LAST)  # the test session's launch
+    for var in (*cds._CLASSPATH_ENV, "SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS",
+                "PYSPARK_GATEWAY_PORT"):
+        monkeypatch.delenv(var, raising=False)
+    return home
+
+
+def test_cds_archive_name_follows_jar_size_and_mtime(tmp_path, monkeypatch):
+    home = _fake_install(tmp_path, monkeypatch)
+    java = cds.java_binary()
+    key = cds.archive_key(str(home), java)
+    assert cds.archive_key(str(home), java) == key
+
+    jar = home / "jars" / "b.jar"
+    st = os.stat(jar)
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    touched = cds.archive_key(str(home), java)
+    assert touched != key
+
+    with open(jar, "ab") as fh:  # same mtime, new size
+        fh.write(b"more")
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert cds.archive_key(str(home), java) not in (key, touched)
+
+
+def test_cds_maps_and_promotes_only_a_complete_archive(spark, tmp_path, monkeypatch):
+    _fake_install(tmp_path, monkeypatch)
+    key, root = cds.site()
+    archive = os.path.join(root, f"{key}.jsa")
+    good = cds.MAGIC.to_bytes(4, sys.byteorder) + b"rest"
+
+    def dumping(body):
+        def dump(path):
+            with open(path, "wb") as fh:
+                fh.write(body)
+        monkeypatch.setattr(cds, "_dump_classes", dump)
+
+    for head in (b"\0\0\0\0", b"\xba\xba\x0b\xf0", b"\xa8"):
+        with open(archive, "wb") as fh:
+            fh.write(head + b"old")
+        # a lock whose owner is gone (this process did not start at tick 0)
+        dead = f"{key}.1.x.part"
+        with open(os.path.join(root, dead), "wb") as fh:
+            fh.write(good)
+        with open(os.path.join(root, f"{key}.lock"), "w") as fh:
+            fh.write(f"{os.getpid()} 0 {dead}\n")
+        launch = cds.prepare("-Dx=1")
+        # the incomplete archive is not mapped, the dead owner's file is dropped
+        assert launch.mode == "dump", head
+        assert launch.java_opts == f"-Dx=1 {cds.DUMP_OPTS} {cds.LOG_OFF}"
+        assert not os.path.exists(os.path.join(root, dead))
+        assert cds.prepare("-Dx=1").mode == "busy"  # this process holds the lock
+        dumping(head + b"new")
+        with launch:
+            pass
+        launch.write_archive(spark)
+        # an incomplete dump is not promoted; the lock and the dump are gone
+        with open(archive, "rb") as fh:
+            assert fh.read() == head + b"old"
+        assert set(os.listdir(root)) == {"conf", f"{key}.jsa", "mutex", "warm.parquet"}
+
+    launch = cds.prepare("-Dx=1")
+    dumping(good)
+    with launch:
+        pass
+    launch.write_archive(spark)
+    assert set(os.listdir(root)) == {"conf", f"{key}.jsa", "mutex", "warm.parquet"}
+    launch = cds.prepare("-Dx=1")
+    assert launch.mode == "use"
+    assert launch.java_opts == f"-Dx=1 -XX:SharedArchiveFile={archive} {cds.LOG_OFF}"
+
+
+def test_cds_real_conf_file_launches_as_without_archive(tmp_path, monkeypatch):
+    home = _fake_install(tmp_path, monkeypatch)
+    (home / "conf" / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
+    launch = cds.prepare("-Dx=1")
+    assert (launch.mode, launch.java_opts) == (None, "-Dx=1")
+    with launch:
+        assert "SPARK_CONF_DIR" not in os.environ
+    assert "SPARK_CONF_DIR" not in os.environ
+
+    own = tmp_path / "own-conf"
+    own.mkdir()
+    (own / "log4j2.properties").write_text("rootLogger.level = warn\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(own))
+    (home / "conf" / "spark-defaults.conf").unlink()
+    launch = cds.prepare("-Dx=1")
+    assert (launch.mode, launch.java_opts) == (None, "-Dx=1")
+    with launch:
+        assert os.environ["SPARK_CONF_DIR"] == str(own)
+    assert os.environ["SPARK_CONF_DIR"] == str(own)
+
+    monkeypatch.delenv("SPARK_CONF_DIR")
+    launch = cds.prepare("-Dx=1")
+    assert launch.mode == "dump"
+    with launch:
+        assert os.environ["SPARK_CONF_DIR"] == launch.conf_dir
+        assert os.listdir(launch.conf_dir) == []
+    assert "SPARK_CONF_DIR" not in os.environ
+
+
+def test_session_jvm_starts_with_one_cds_flag_and_the_locale(spark):
+    args = list(
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    )
+    assert "-Duser.language=en" in args
+    flags = [
+        a.split("=")[0] for a in args if "SharedArchiveFile" in a or "DynamicDumpInfo" in a
+    ]
+    launch = cds.LAST
+    assert launch is not None, "the test session's JVM was not launched by get_session"
+    if cds.site() is not None:  # CDS applies on this machine
+        assert launch.mode in ("use", "dump", "busy"), launch.mode
+    expected = {"use": ["-XX:SharedArchiveFile"], "dump": ["-XX:+RecordDynamicDumpInfo"]}
+    assert flags == expected.get(launch.mode, []), (launch.mode, args)
+    if launch.mode in expected:
+        assert "-Xlog:cds=off" in args
+    if launch.mode == "dump":  # written as soon as the session was up
+        assert cds.complete(launch.archive)

@@ -9,10 +9,13 @@ Usage:
   python tools/opt_probe.py --plans DIR --time ...        # both
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
-Timing protocol mirrors bench.py: one untimed warm-up (populates owned
-persists), then three timed noop-sink materializations, report all three +
-min. The noop sink computes every column of every row (guide §1.4) so the
-timing cannot be flattered by count()-pruning.
+Timing protocol: one untimed warm-up, then three timed noop-sink
+materializations, report all three + min. Owned persists and the cache
+are released after the warm-up and after every rep, so each rep builds
+the caches it uses (a rep that reused the warm-up's cache would make a
+change that removes a persist read slower than it is). The noop sink
+computes every column of every row (guide §1.4) so the timing cannot be
+flattered by count()-pruning.
 """
 
 from __future__ import annotations
@@ -78,6 +81,8 @@ def main() -> int:
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"opt-probe warmup {name}")
             qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            release_owned()
+            spark.catalog.clearCache()
             reps = []
             for rep in range(3):
                 spark.sparkContext.setJobDescription(f"opt-probe {name} rep{rep}")
@@ -86,9 +91,9 @@ def main() -> int:
                     "overwrite"
                 ).save()
                 reps.append(round(time.perf_counter() - t0, 3))
+                release_owned()
+                spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(None)
-            release_owned()
-            spark.catalog.clearCache()
             out[name] = {"noop_runs": reps, "noop_min": min(reps)}
             print(f"{name}: {reps} min={min(reps)}", file=sys.stderr)
     if do_time:
