@@ -38,6 +38,20 @@ Fixed cost of a small pass (Hadoop's uber-job regime, JobImpl.makeUberDecision):
 - A session that launches the driver JVM starts it from a per-machine
   class-data archive (``cds``), built by the first such session: a cold
   set-up maps Spark's classes instead of loading them from the jars.
+- The driver JVM compiles with C2 only code that is really hot
+  (``JIT_OPTS``): a small pass is over before most of what C2 would compile
+  at the default thresholds pays back its compile time.
+
+Buffer sizing, the ``io.sort.mb`` analog (MapTask.java:885-1009): the
+reference sizes its per-task sort buffer by configuration, not by the data.
+Here the Tungsten page (``spark.buffer.pageSize``, Spark's default up to
+64 MB) and the torrent-broadcast chunk (``spark.broadcast.blockSize``,
+default 4 MB) are sized from the heap the session asks for
+(``SPARK_GRAFT_DRIVER_MEM``) to stay below G1's humongous-object threshold,
+half a heap region (``buffer_bytes``). A humongous array takes whole regions
+of its own and can start a concurrent marking cycle: 64 MB pages and 4 MB
+task-binary chunks started 11 in one ``llm_pipeline`` benchmark run, and
+none start at 1 MB (NOTES.md).
 """
 
 from __future__ import annotations
@@ -52,6 +66,42 @@ from . import TABLES, cds
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 JAVA_OPTS = "-Duser.language=en -Duser.country=US"
+# Driver JVM only: C2 compiles only code that is really hot. A method reaches
+# C2 at JIT_SCALE times HotSpot's tier-4 invocation triggers (5000 calls, or
+# 600 calls with 15000 calls plus loop iterations); the back-edge trigger
+# (40000) is left as it is, so hot loops still reach C2 by on-stack
+# replacement. One C2 thread instead of two (CICompilerCount=2 is one C1 and
+# one C2 thread), and with it HotSpot's load feedback raises the triggers
+# further while C2's queue is long, as it is in a cold pass. NOTES.md "Where a
+# pass's CPU goes, thread by thread" has the policies tried and their numbers.
+JIT_SCALE = 20
+JIT_OPTS = (
+    f"-XX:Tier4InvocationThreshold={5000 * JIT_SCALE} "
+    f"-XX:Tier4MinInvocationThreshold={600 * JIT_SCALE} "
+    f"-XX:Tier4CompileThreshold={15000 * JIT_SCALE} "
+    "-XX:CICompilerCount=2"
+)
+DRIVER_OPTS = f"{JAVA_OPTS} {JIT_OPTS}"
+_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def heap_bytes(mem: str) -> int:
+    """Bytes of a ``spark.driver.memory`` value: MiB unless a unit
+    (k, m, g or t, optionally followed by b) ends it."""
+    s = mem.strip().lower().removesuffix("b")
+    if s[-1:] in _UNITS:
+        return int(s[:-1]) * _UNITS[s[-1]]
+    return int(s) << 20
+
+
+def buffer_bytes(heap: int) -> int:
+    """Tungsten page and broadcast chunk size for a G1 heap of ``heap``
+    bytes: the largest power of two whose array, with its 16-byte header,
+    stays below half a heap region, G1's humongous threshold. G1 sizes a
+    region as heap / 2048 rounded down to a power of two within
+    [1 MB, 32 MB] (4 MB at 8 GB, so 1 MB buffers)."""
+    region = 1 << min(25, max(20, (heap // 2048).bit_length() - 1))
+    return region // 4
 
 
 def get_session(
@@ -61,6 +111,8 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's scale posture."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    buf = buffer_bytes(heap_bytes(mem))
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
@@ -77,7 +129,9 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "hadoop_3_0_0_beta1_gaia_spark.pydaemon")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", mem)
+        .config("spark.buffer.pageSize", f"{buf >> 10}k")
+        .config("spark.broadcast.blockSize", f"{buf >> 10}k")
         # Pin the JVM locale (ADVICE r11): the text kernels lower-case with
         # Python str.lower() while their expression twins use JVM
         # String.toLowerCase() under the DEFAULT locale — a tr_TR/az JVM
@@ -87,7 +141,7 @@ def get_session(
         .config("spark.executor.extraJavaOptions", JAVA_OPTS)
     )
     # only a call that launches the JVM (no gateway yet) can use an archive
-    launch = cds.prepare(JAVA_OPTS) if SparkContext._gateway is None else cds.Launch(JAVA_OPTS)
+    launch = cds.prepare(DRIVER_OPTS) if SparkContext._gateway is None else cds.Launch(DRIVER_OPTS)
     builder.config("spark.driver.extraJavaOptions", launch.java_opts)
     try:
         with launch:
@@ -96,7 +150,7 @@ def get_session(
         if launch.mode != "dump":
             raise
         # the JVM could not start in dump mode: start it as without an archive
-        return builder.config("spark.driver.extraJavaOptions", JAVA_OPTS).getOrCreate()
+        return builder.config("spark.driver.extraJavaOptions", DRIVER_OPTS).getOrCreate()
     launch.write_archive(spark)
     return spark
 

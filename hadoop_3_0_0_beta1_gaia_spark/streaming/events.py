@@ -13,6 +13,7 @@ at high event-type cardinality add AQE/salting exactly as for batch skew.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +42,18 @@ _EVENTS_RAW = StructType(
         StructField("props", StringType(), True),
     ]
 )
+
+# one drain at a time: run_to_memory swaps session confs around start() and
+# unloads every state store after the query ends
+_DRAIN = threading.Lock()
+# Spark's default checkpoint manager goes through Hadoop's FileContext, which
+# without the native Hadoop library forks `readlink` on every rename and
+# status check; the FileSystem-based one does not
+_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source replay of the events table (readStream over the parquet
@@ -274,43 +287,57 @@ def run_to_memory(
     wave of tasks per batch — and restores the session value once ``start()``
     returns or raises. ``StreamExecution`` clones the session in its
     constructor, so the running query keeps the smaller count while batch
-    queries keep the session's value. Premise: one query at a time on this
-    session, as for the ``StateStore.stop()`` unload below."""
+    queries keep the session's value. The drain's checkpoints go through
+    ``FileSystemBasedCheckpointFileManager``, swapped in and restored the
+    same way: the default FileContext manager forks a ``readlink`` per
+    rename and status check when the native Hadoop library is missing.
+
+    Drains run one at a time (a module lock around the swap, ``start()``,
+    ``awaitTermination()`` and the ``StateStore.stop()`` unload below): two
+    overlapping swaps would restore each other's values, and the unload
+    would drop a running query's state stores."""
     if output_mode is None:
         plan = stream_df._jdf.queryExecution().analyzed().toString()
         output_mode = "complete" if "Aggregate" in plan else "append"
-    key = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(key)
-    spark.conf.set(
-        key, str(min(int(session_parts), spark.sparkContext.defaultParallelism))
-    )
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+    parts = "spark.sql.shuffle.partitions"
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    with _DRAIN:
+        saved = {key: spark.conf.get(key, None) for key in (parts, manager)}
+        spark.conf.set(
+            parts, str(min(int(saved[parts]), spark.sparkContext.defaultParallelism))
         )
-    finally:
-        spark.conf.set(key, session_parts)
-    q.awaitTermination()
-    # r12 (guide §5): unload the terminated query's state-store providers.
-    # Stateful availableNow drains (dropDuplicates, stream-stream joins,
-    # flatMapGroupsWithState) leave their HDFSBackedStateStoreProvider maps
-    # loaded until a lazy maintenance unload — measured r11: back-to-back
-    # re-drains of stream_dedup_counts in ONE session grew 7.9 → 14.0 →
-    # 68.5 s and eventually OOMed the probe session. StateStore.stop()
-    # unloads every provider and halts the maintenance task; the next
-    # streaming query re-initializes both on demand. Safe here because the
-    # drained query has terminated and this harness runs one query at a
-    # time; a service running CONCURRENT stateful streams must not call it
-    # mid-flight (it would drop live providers to a cold reload).
-    try:
-        jvm = spark._jvm
-        jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass  # py4j surface moved — the drain result is already materialized
+        spark.conf.set(manager, _CHECKPOINT_MANAGER)
+        try:
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(table_name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            for key, value in saved.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)
+        q.awaitTermination()
+        # r12 (guide §5): unload the terminated query's state-store providers.
+        # Stateful availableNow drains (dropDuplicates, stream-stream joins,
+        # flatMapGroupsWithState) leave their HDFSBackedStateStoreProvider maps
+        # loaded until a lazy maintenance unload — measured r11: back-to-back
+        # re-drains of stream_dedup_counts in ONE session grew 7.9 → 14.0 →
+        # 68.5 s and eventually OOMed the probe session. StateStore.stop()
+        # unloads every provider and halts the maintenance task; the next
+        # streaming query re-initializes both on demand. Safe here because the
+        # drained query has terminated and no other drain runs (``_DRAIN``);
+        # a service running CONCURRENT stateful streams must not call it
+        # mid-flight (it would drop live providers to a cold reload).
+        try:
+            jvm = spark._jvm
+            jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+        except Exception:
+            pass  # py4j surface moved — the drain result is already materialized
     return spark.table(table_name)
 
 

@@ -11,6 +11,9 @@
 - The driver JVM starts from a class-data archive named after the JDK and
   the Spark jars; only a complete archive is mapped or promoted, and a conf
   directory with a real file leaves the launch as it was.
+- The driver JVM alone gets the compile policy, once, whatever the archive
+  mode; Spark's Tungsten pages and broadcast chunks are not humongous G1
+  objects.
 """
 
 from __future__ import annotations
@@ -330,3 +333,53 @@ def test_session_jvm_starts_with_one_cds_flag_and_the_locale(spark):
         assert "-Xlog:cds=off" in args
     if launch.mode == "dump":  # written as soon as the session was up
         assert cds.complete(launch.archive)
+
+
+def test_jit_flags_once_on_the_driver_only(spark, tmp_path):
+    flags = session.JIT_OPTS.split()
+    assert flags and all(f.startswith("-XX:") for f in flags)
+    args = list(
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    )
+    assert all(args.count(f) == 1 for f in flags), args
+    executor = spark.sparkContext.getConf().get("spark.executor.extraJavaOptions")
+    assert executor.endswith(session.JAVA_OPTS)  # Spark puts its module options first
+    assert not any(f.split("=")[0] in executor for f in flags)
+
+    # every way get_session can start the driver: mapping an archive, writing
+    # one, while another session writes one, and without one
+    archive = str(tmp_path / "k.jsa")
+    launches = [
+        cds.Launch(session.DRIVER_OPTS, "use", archive=archive),
+        cds.Launch(session.DRIVER_OPTS, "dump", archive=archive,
+                   lock=str(tmp_path / "k.lock"), part=str(tmp_path / "k.part")),
+        cds.Launch(session.DRIVER_OPTS, "busy"),
+        cds.Launch(session.DRIVER_OPTS),
+    ]
+    for launch in launches:
+        opts = launch.java_opts.split()
+        assert all(opts.count(f) == 1 for f in flags), (launch.mode, opts)
+        assert opts[:2] == session.JAVA_OPTS.split()
+
+
+def test_spark_buffers_below_g1_humongous_threshold(spark):
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("UseG1GC").getValue() == "true"
+    half_region = int(bean.getVMOption("G1HeapRegionSize").getValue()) // 2
+    env = jvm.org.apache.spark.SparkEnv.get()
+    page = env.memoryManager().pageSizeBytes()
+    chunk = env.conf().getSizeAsKb("spark.broadcast.blockSize", "4m") * 1024
+    assert page + 16 < half_region and chunk + 16 < half_region, (page, chunk, half_region)
+    heap = session.heap_bytes(spark.sparkContext.getConf().get("spark.driver.memory"))
+    assert page == chunk == session.buffer_bytes(heap)
+
+    assert [session.heap_bytes(m) for m in ("8g", "8G", "4096m", "512", "2gb", "64k")] == [
+        8 << 30, 8 << 30, 4 << 30, 512 << 20, 2 << 30, 64 << 10
+    ]
+    # G1's region: heap / 2048 as a power of two within [1 MB, 32 MB]
+    assert [session.buffer_bytes(h << 30) for h in (1, 8, 12, 16, 64, 512)] == [
+        256 << 10, 1 << 20, 1 << 20, 2 << 20, 8 << 20, 8 << 20
+    ]

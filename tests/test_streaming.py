@@ -386,3 +386,88 @@ def test_late_data_drop_semantics(spark, sf_dir):
     # hour-aligned splits: no window was update-emitted twice
     keys = [(r["window_start"], r["event_type"]) for r in rows]
     assert len(keys) == len(set(keys))
+
+
+def test_drain_checkpoints_through_filesystem_manager(spark, sf_dir, monkeypatch):
+    """The drain's offset and commit logs go through the FileSystem-based
+    checkpoint manager (the FileContext one forks a ``readlink`` per file
+    operation without the native Hadoop library), and the session's own
+    value of the setting is back afterwards."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from hadoop_3_0_0_beta1_gaia_spark.streaming.events import (
+        read_events_stream,
+        run_to_memory,
+        sliding_counts,
+    )
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    session_value = pkg + "FileContextBasedCheckpointFileManager"
+    spark.conf.set(key, session_value)
+    try:
+        out = run_to_memory(
+            sliding_counts(read_events_stream(spark, sf_dir)), "fs_manager_sink", spark
+        )
+        assert out.count() > 0
+        assert spark.conf.get(key) == session_value
+    finally:
+        spark.conf.unset(key)
+    (q,) = started
+    execution = q._jsq.streamingQuery()
+    for log in (execution.offsetLog(), execution.commitLog()):
+        assert log.fileManager().getClass().getName() == pkg + "FileSystemBasedCheckpointFileManager"
+
+
+def test_concurrent_drains_run_one_at_a_time(spark, sf_dir):
+    """Two threads draining at once get the results each drain gets alone,
+    and the session values the drain swaps read back unchanged."""
+    import threading
+
+    from hadoop_3_0_0_beta1_gaia_spark.streaming.events import (
+        read_events_stream,
+        run_to_memory,
+        sliding_counts,
+        windowed_counts,
+    )
+
+    kernels = {"sliding": sliding_counts, "windowed": windowed_counts}
+
+    def drain(name, sink):
+        rows = run_to_memory(kernels[name](read_events_stream(spark, sf_dir)), sink, spark)
+        return sorted(tuple(r) for r in rows.collect())
+
+    parts = "spark.sql.shuffle.partitions"
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    before = spark.conf.get(parts)
+    spark.conf.set(parts, str(spark.sparkContext.defaultParallelism + 3))
+    try:
+        alone = {name: drain(name, f"alone_{name}_sink") for name in kernels}
+        together, errors = {}, []
+
+        def run(name):
+            try:
+                together[name] = drain(name, f"together_{name}_sink")
+            except Exception as err:  # noqa: BLE001 - reported below
+                errors.append(err)
+
+        threads = [threading.Thread(target=run, args=(name,)) for name in kernels]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert together == alone and all(alone.values())
+        assert spark.conf.get(parts) == str(spark.sparkContext.defaultParallelism + 3)
+        assert spark.conf.get(manager, None) is None
+    finally:
+        spark.conf.set(parts, before)
