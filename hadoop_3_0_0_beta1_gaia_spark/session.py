@@ -44,14 +44,14 @@ Fixed cost of a small pass (Hadoop's uber-job regime, JobImpl.makeUberDecision):
 
 Buffer sizing, the ``io.sort.mb`` analog (MapTask.java:885-1009): the
 reference sizes its per-task sort buffer by configuration, not by the data.
-Here the Tungsten page (``spark.buffer.pageSize``, Spark's default up to
-64 MB) and the torrent-broadcast chunk (``spark.broadcast.blockSize``,
-default 4 MB) are sized from the heap the session asks for
-(``SPARK_GRAFT_DRIVER_MEM``) to stay below G1's humongous-object threshold,
-half a heap region (``buffer_bytes``). A humongous array takes whole regions
-of its own and can start a concurrent marking cycle: 64 MB pages and 4 MB
-task-binary chunks started 11 in one ``llm_pipeline`` benchmark run, and
-none start at 1 MB (NOTES.md).
+Here the torrent-broadcast chunk (``spark.broadcast.blockSize``, default
+4 MB) is sized from the heap the session asks for (``SPARK_GRAFT_DRIVER_MEM``)
+to stay below G1's humongous-object threshold, half a heap region
+(``broadcast_block_bytes``). A humongous array takes whole regions of its own
+and can start a concurrent marking cycle: at 4 MB the first chunk of each
+stage's task binary is one, and warm ``llm_pipeline`` passes cost less
+without them. Spark's Tungsten page (up to 64 MB) is left at its default:
+1 MB pages measured no gain on top of the smaller chunks (NOTES.md).
 """
 
 from __future__ import annotations
@@ -94,12 +94,12 @@ def heap_bytes(mem: str) -> int:
     return int(s) << 20
 
 
-def buffer_bytes(heap: int) -> int:
-    """Tungsten page and broadcast chunk size for a G1 heap of ``heap``
-    bytes: the largest power of two whose array, with its 16-byte header,
+def broadcast_block_bytes(heap: int) -> int:
+    """Torrent-broadcast chunk size for a G1 heap of ``heap`` bytes: the
+    largest power of two whose array, with its 16-byte header,
     stays below half a heap region, G1's humongous threshold. G1 sizes a
     region as heap / 2048 rounded down to a power of two within
-    [1 MB, 32 MB] (4 MB at 8 GB, so 1 MB buffers)."""
+    [1 MB, 32 MB] (4 MB at 8 GB, so 1 MB chunks)."""
     region = 1 << min(25, max(20, (heap // 2048).bit_length() - 1))
     return region // 4
 
@@ -112,7 +112,7 @@ def get_session(
     """Build (or reuse) a SparkSession with the engine's scale posture."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    buf = buffer_bytes(heap_bytes(mem))
+    block = broadcast_block_bytes(heap_bytes(mem))
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
@@ -130,8 +130,7 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "hadoop_3_0_0_beta1_gaia_spark.pydaemon")
         .config("spark.driver.memory", mem)
-        .config("spark.buffer.pageSize", f"{buf >> 10}k")
-        .config("spark.broadcast.blockSize", f"{buf >> 10}k")
+        .config("spark.broadcast.blockSize", f"{block >> 10}k")
         # Pin the JVM locale (ADVICE r11): the text kernels lower-case with
         # Python str.lower() while their expression twins use JVM
         # String.toLowerCase() under the DEFAULT locale — a tr_TR/az JVM

@@ -302,9 +302,12 @@ def run_to_memory(
     parts = "spark.sql.shuffle.partitions"
     manager = "spark.sql.streaming.checkpointFileManagerClass"
     with _DRAIN:
+        # None for a key the session never set (get(key, None) does not fall
+        # back to Spark's default): it is unset again afterwards
         saved = {key: spark.conf.get(key, None) for key in (parts, manager)}
         spark.conf.set(
-            parts, str(min(int(saved[parts]), spark.sparkContext.defaultParallelism))
+            parts,
+            str(min(int(spark.conf.get(parts)), spark.sparkContext.defaultParallelism)),
         )
         spark.conf.set(manager, _CHECKPOINT_MANAGER)
         try:

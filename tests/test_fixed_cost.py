@@ -12,8 +12,7 @@
   the Spark jars; only a complete archive is mapped or promoted, and a conf
   directory with a real file leaves the launch as it was.
 - The driver JVM alone gets the compile policy, once, whatever the archive
-  mode; Spark's Tungsten pages and broadcast chunks are not humongous G1
-  objects.
+  mode; Spark's broadcast chunks are not humongous G1 objects.
 """
 
 from __future__ import annotations
@@ -362,24 +361,23 @@ def test_jit_flags_once_on_the_driver_only(spark, tmp_path):
         assert opts[:2] == session.JAVA_OPTS.split()
 
 
-def test_spark_buffers_below_g1_humongous_threshold(spark):
+def test_broadcast_chunks_below_g1_humongous_threshold(spark):
     jvm = spark._jvm
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
     assert bean.getVMOption("UseG1GC").getValue() == "true"
     half_region = int(bean.getVMOption("G1HeapRegionSize").getValue()) // 2
-    env = jvm.org.apache.spark.SparkEnv.get()
-    page = env.memoryManager().pageSizeBytes()
-    chunk = env.conf().getSizeAsKb("spark.broadcast.blockSize", "4m") * 1024
-    assert page + 16 < half_region and chunk + 16 < half_region, (page, chunk, half_region)
+    conf = jvm.org.apache.spark.SparkEnv.get().conf()
+    chunk = conf.getSizeAsKb("spark.broadcast.blockSize", "4m") * 1024
+    assert chunk + 16 < half_region, (chunk, half_region)
     heap = session.heap_bytes(spark.sparkContext.getConf().get("spark.driver.memory"))
-    assert page == chunk == session.buffer_bytes(heap)
+    assert chunk == session.broadcast_block_bytes(heap)
 
     assert [session.heap_bytes(m) for m in ("8g", "8G", "4096m", "512", "2gb", "64k")] == [
         8 << 30, 8 << 30, 4 << 30, 512 << 20, 2 << 30, 64 << 10
     ]
     # G1's region: heap / 2048 as a power of two within [1 MB, 32 MB]
-    assert [session.buffer_bytes(h << 30) for h in (1, 8, 12, 16, 64, 512)] == [
+    assert [session.broadcast_block_bytes(h << 30) for h in (1, 8, 12, 16, 64, 512)] == [
         256 << 10, 1 << 20, 1 << 20, 2 << 20, 8 << 20, 8 << 20
     ]

@@ -471,3 +471,45 @@ def test_concurrent_drains_run_one_at_a_time(spark, sf_dir):
         assert spark.conf.get(manager, None) is None
     finally:
         spark.conf.set(parts, before)
+
+
+def test_drain_on_a_session_without_shuffle_partitions_set(spark, sf_dir, monkeypatch):
+    """A session that never set ``spark.sql.shuffle.partitions`` (a plain
+    ``SparkSession``, as the driver protocol builds) drains with
+    min(Spark's default 200, cores) state partitions, and the setting is
+    unset again afterwards."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from hadoop_3_0_0_beta1_gaia_spark.streaming.events import (
+        read_events_stream,
+        run_to_memory,
+        sliding_counts,
+    )
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        assert spark.conf.get(key, None) is None
+        out = run_to_memory(
+            sliding_counts(read_events_stream(spark, sf_dir)), "unset_parts_sink", spark
+        )
+        assert out.count() > 0
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, before)
+    (q,) = started
+    parts = {
+        op.numShufflePartitions()
+        for progress in q._jsq.recentProgress()
+        for op in progress.stateOperators()
+    }
+    assert parts == {min(200, spark.sparkContext.defaultParallelism)}
