@@ -45,13 +45,20 @@ def tokens(text: Column) -> Column:
 # ``str.split()`` treats as whitespace would split here but not in Spark
 # (pinned in tests/test_operators.py).
 #
-# Locale note: the kernels lower-case with Python ``str.lower()`` while
-# :func:`tokens` uses Spark ``lower()``, whose non-ASCII path is JVM
-# ``String.toLowerCase()`` under the JVM DEFAULT locale; on a tr_TR/az JVM the
-# two diverge on ASCII 'I' (→ 'ı'). :func:`session.get_session` therefore
-# pins the JVM locale to the root-equivalent en_US (``-Duser.language`` /
-# ``-Duser.country`` on driver and executors); a session built elsewhere
-# needs the same pin (or an ASCII-only corpus, which every fixture is).
+# Case-mapping note: the kernels lower-case with Python ``str.lower()`` while
+# :func:`tokens` uses Spark ``lower()``. On ASCII both are the same table.
+# Otherwise Spark 4 lowercases with ICU (``UCharacter.toLowerCase``, ICU4J 77:
+# Unicode 16) unless ``spark.sql.icu.caseMappings.enabled`` is false, and then
+# with JVM ``String.toLowerCase()`` (JDK 17: Unicode 13) under the JVM DEFAULT
+# locale; CPython 3.11 maps by Unicode 14. :func:`session.get_session` turns
+# ICU off and pins the JVM locale to the root-equivalent en_US
+# (``-Duser.language`` / ``-Duser.country`` on driver and executors), because
+# a tr_TR/az locale maps ASCII 'I' to 'ı' on either path. The JVM and Python
+# then agree on every character both Unicode versions cover; a character
+# added or remapped after Unicode 13 (U+A7C0, for one) lowercases in Python
+# only. A session built elsewhere needs the same pin (or an ASCII-only
+# corpus, which every fixture is), and with ICU on it also lowercases
+# characters new in Unicode 15-16 that Python leaves.
 _WS_RE = re.compile(WS, re.ASCII)
 
 

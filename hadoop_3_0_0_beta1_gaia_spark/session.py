@@ -30,9 +30,17 @@ Fixed cost of a small pass (Hadoop's uber-job regime, JobImpl.makeUberDecision):
   ``importlib.invalidate_caches()``, which on CPython < 3.13 re-reads
   ``pyspark.zip``'s directory once per zipimporter (~16 per worker, ~230 ms
   of CPU per task); the daemon re-reads an archive only when it changed,
-  then runs the stock ``pyspark.daemon`` manager. Workers import it as
-  ``python -m``, so the package must be importable from the JVM's cwd or
-  PYTHONPATH, as it already must be for the pickled kernels.
+  imports pandas and pyarrow, then runs the stock ``pyspark.daemon``
+  manager, which forks the workers: no worker imports them in its first
+  task. Workers import it as ``python -m``, so the package must be
+  importable from the JVM's cwd or PYTHONPATH, as it already must be for
+  the pickled kernels.
+- ``lower``/``upper``/``initcap`` run without ICU
+  (``spark.sql.icu.caseMappings.enabled=false``): ASCII strings take
+  ``UTF8String``'s fast path and others JVM ``String`` case mapping under
+  the pinned en_US locale. With ICU, the first ``lower()`` of every JVM
+  builds a title-case table over all 1.1M code points, which only
+  ``initcap`` reads.
 - ``table`` remembers each file's inferred schema, so a repeated read of an
   unchanged file runs no footer-inference job.
 - A session that launches the driver JVM starts it from a per-machine
@@ -131,12 +139,13 @@ def get_session(
         .config("spark.python.daemon.module", "hadoop_3_0_0_beta1_gaia_spark.pydaemon")
         .config("spark.driver.memory", mem)
         .config("spark.broadcast.blockSize", f"{block >> 10}k")
-        # Pin the JVM locale (ADVICE r11): the text kernels lower-case with
-        # Python str.lower() while their expression twins use JVM
-        # String.toLowerCase() under the DEFAULT locale — a tr_TR/az JVM
-        # would diverge on ASCII 'I'. en_US is root-equivalent for ASCII.
-        # (No effect on an already-running JVM: getOrCreate reuses it, and
-        # the fixtures are ASCII-only anyway; this pins fresh deployments.)
+        # case mapping without ICU's per-JVM table (module docstring)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+        # Pin the JVM locale: with ICU off, lower() is JVM
+        # String.toLowerCase() under the DEFAULT locale, and the text kernels
+        # lower-case with Python str.lower(); a tr_TR/az JVM would diverge on
+        # ASCII 'I'. en_US is root-equivalent. (No effect on an
+        # already-running JVM: getOrCreate reuses it.)
         .config("spark.executor.extraJavaOptions", JAVA_OPTS)
     )
     # only a call that launches the JVM (no gateway yet) can use an archive

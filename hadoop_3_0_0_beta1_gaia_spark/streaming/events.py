@@ -294,8 +294,11 @@ def run_to_memory(
 
     Drains run one at a time (a module lock around the swap, ``start()``,
     ``awaitTermination()`` and the ``StateStore.stop()`` unload below): two
-    overlapping swaps would restore each other's values, and the unload
-    would drop a running query's state stores."""
+    overlapping swaps would restore each other's values. The unload is
+    skipped while another query of the session is active
+    (``spark.streams.active``): it would drop that query's loaded state
+    stores and halt their maintenance. A stream running in another session
+    of the same JVM is not seen."""
     if output_mode is None:
         plan = stream_df._jdf.queryExecution().analyzed().toString()
         output_mode = "complete" if "Aggregate" in plan else "append"
@@ -332,15 +335,16 @@ def run_to_memory(
         # re-drains of stream_dedup_counts in ONE session grew 7.9 → 14.0 →
         # 68.5 s and eventually OOMed the probe session. StateStore.stop()
         # unloads every provider and halts the maintenance task; the next
-        # streaming query re-initializes both on demand. Safe here because the
-        # drained query has terminated and no other drain runs (``_DRAIN``);
-        # a service running CONCURRENT stateful streams must not call it
-        # mid-flight (it would drop live providers to a cold reload).
-        try:
-            jvm = spark._jvm
-            jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        except Exception:
-            pass  # py4j surface moved — the drain result is already materialized
+        # streaming query re-initializes both on demand. Safe only when no
+        # query runs: the drained one has terminated, no other drain runs
+        # (``_DRAIN``), and a running stream would lose its live providers
+        # to a cold reload, so the unload waits for a drain without one.
+        if not spark.streams.active:
+            try:
+                jvm = spark._jvm
+                jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+            except Exception:
+                pass  # py4j surface moved — the drain result is already materialized
     return spark.table(table_name)
 
 

@@ -13,6 +13,9 @@
   directory with a real file leaves the launch as it was.
 - The driver JVM alone gets the compile policy, once, whatever the archive
   mode; Spark's broadcast chunks are not humongous G1 objects.
+- ``lower()`` runs without ICU, so no query builds ICU's title-case table,
+  and Python workers are forked from a daemon that has pandas and pyarrow
+  loaded.
 """
 
 from __future__ import annotations
@@ -381,3 +384,57 @@ def test_broadcast_chunks_below_g1_humongous_threshold(spark):
     assert [session.broadcast_block_bytes(h << 30) for h in (1, 8, 12, 16, 64, 512)] == [
         256 << 10, 1 << 20, 1 << 20, 2 << 20, 8 << 20, 8 << 20
     ]
+
+
+def test_lower_leaves_icu_case_mapping_table_unbuilt(spark):
+    from hadoop_3_0_0_beta1_gaia_spark.functions.text_metrics import tokens
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    df = spark.createDataFrame([("\u0130STANBUL Stra\u1e9ee",), ("Plain ASCII",)], "t string")
+    assert [len(r[0]) for r in df.select(tokens(F.col("t"))).collect()] == [2, 2]
+    jvm = spark._jvm
+    # Class.forName without initializing; the class's static initializer
+    # builds the table on its first use
+    icu = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String",
+        False,
+        spark._jsc.getClass().getClassLoader(),
+    )
+    field = jvm.java.lang.Class.forName("sun.misc.Unsafe").getDeclaredField("theUnsafe")
+    field.setAccessible(True)
+    assert field.get(None).shouldBeInitialized(icu)
+
+
+def test_workers_fork_with_pandas_and_pyarrow_loaded(spark):
+    # defined in the test so it pickles by value: workers cannot import tests/
+    def daemon_libraries(batches):
+        import os
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        daemon = os.getppid()
+        with open(f"/proc/{daemon}/cmdline", "rb") as f:
+            cmdline = f.read().replace(b"\0", b" ").decode()
+        with open(f"/proc/{daemon}/maps") as f:
+            paths = {line.split()[-1] for line in f if "/" in line}
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([cmdline]),
+                pa.array([any("/libarrow.so" in p for p in paths)]),
+                pa.array([any("/pandas/_libs/" in p and ".so" in p for p in paths)]),
+            ],
+            names=["cmdline", "arrow", "pandas"],
+        )
+
+    rows = (
+        spark.range(4)
+        .repartition(2)
+        .mapInArrow(daemon_libraries, "cmdline string, arrow boolean, pandas boolean")
+        .collect()
+    )
+    assert len(rows) == 2
+    for r in rows:
+        assert "hadoop_3_0_0_beta1_gaia_spark.pydaemon" in r["cmdline"], r
+        assert r["arrow"] and r["pandas"], r

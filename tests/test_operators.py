@@ -998,8 +998,13 @@ def test_py_tokens_equal_spark_tokens(spark):
     ``tokens`` expression on \\x0b/\\x0c (whitespace to Java ``\\s`` and to
     Python alike), on U+00A0, \\x1c-\\x1f, U+0085 and U+3000 (whitespace
     to ``str.split()`` but not to Java ``\\s``), on runs of spaces,
-    leading/trailing spaces and ``""``; py_ngrams equals the
-    ``array_join(slice(...))`` n-grams over those tokens."""
+    leading/trailing spaces and ``""``, and on non-ASCII case mappings
+    (dotted capital I, capital sharp s, final sigma, the DZ digraphs,
+    Cyrillic, Armenian); py_ngrams equals the ``array_join(slice(...))``
+    n-grams over those tokens. The session lowercases with JVM ``String``
+    case mapping (ICU off), so the non-ASCII cases stay at characters JDK 17
+    (Unicode 13) and CPython 3.11 (Unicode 14) map alike: CPython, for one,
+    lowercases U+A7C0 and JDK 17 does not."""
     from pyspark.sql import functions as F
 
     from hadoop_3_0_0_beta1_gaia_spark.functions.text_metrics import (
@@ -1010,7 +1015,11 @@ def test_py_tokens_equal_spark_tokens(spark):
 
     texts = ["a\x0bb", "a\x0cb", "a\u00a0b", "a\x1cb\x1dc\x1ed\x1fe",
              "x\u0085y\u3000z", "one   two\t\tthree", "  lead and trail  ",
-             "", " ", "MiXeD Case\nLines\rCR", "ab cd ef gh"]
+             "", " ", "MiXeD Case\nLines\rCR", "ab cd ef gh",
+             "\u0130STANBUL \u0130i", "STRA\u1e9eE",
+             "\u039f\u0394\u039f\u03a3 \u039f\u0394\u039f\u03a3. \u03a3\u039f\u03a3\u03a3",
+             "\u01c4EMAL \u01c5emal", "\u041c\u041e\u0421\u041a\u0412\u0410 \u0401\u0416",
+             "\u0531\u0550\u0531\u0550\u0531\u054f"]
     n = 3
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
     toks = tokens(F.col("t"))
@@ -1028,6 +1037,12 @@ def test_py_tokens_equal_spark_tokens(spark):
         assert list(py_ngrams(py_tokens(t), n)) == list(r["grams"]), repr(t)
     # the cases above really split differently under str.split()
     assert "a\u00a0b".split() != py_tokens("a\u00a0b")
+    # and the non-ASCII ones really map outside ASCII, one code point to two
+    # for the dotted I, the sigma by its position
+    assert py_tokens("\u0130STANBUL")[0] == "i\u0307stanbul"
+    assert py_tokens("\u039f\u0394\u039f\u03a3 \u03a3\u039f\u03a3\u03a3") == [
+        "\u03bf\u03b4\u03bf\u03c2", "\u03c3\u03bf\u03c3\u03c2"
+    ]
 
 
 def test_winnow_kernel_nonascii_fallback(spark, tmp_path):

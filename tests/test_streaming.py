@@ -513,3 +513,58 @@ def test_drain_on_a_session_without_shuffle_partitions_set(spark, sf_dir, monkey
         for op in progress.stateOperators()
     }
     assert parts == {min(200, spark.sparkContext.defaultParallelism)}
+
+
+def test_drain_keeps_a_running_stream_state_stores(spark, sf_dir, tmp_path):
+    """A drain while another stateful query of the session runs leaves the
+    state stores loaded: the running query stays active without an error,
+    and its next batch counts what a batch query over the same files counts.
+    Once no query runs, a drain unloads them again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_3_0_0_beta1_gaia_spark.streaming.events import (
+        read_events_stream,
+        run_to_memory,
+        windowed_counts,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def write(name, keys):
+        pq.write_table(pa.table({"k": pa.array(keys, pa.int64())}), str(src / name))
+
+    def drain(sink):
+        return run_to_memory(windowed_counts(read_events_stream(spark, sf_dir)), sink, spark)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    ss = spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
+    write("a.parquet", [1, 1, 2])
+    live = (
+        spark.readStream.schema("k long").parquet(str(src))
+        .groupBy("k").count()
+        .writeStream.format("memory").queryName("live_counts_sink")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    try:
+        live.processAllAvailable()
+        assert ss.isMaintenanceRunning()
+        assert rows(drain("beside_live_sink"))
+        assert live.isActive and live.exception() is None
+        assert ss.isMaintenanceRunning()
+
+        write("b.parquet", [1, 3])
+        live.processAllAvailable()
+        assert live.isActive and live.exception() is None
+        expected = rows(spark.read.parquet(str(src)).groupBy("k").count())
+        assert rows(spark.table("live_counts_sink")) == expected == [(1, 3), (2, 1), (3, 1)]
+    finally:
+        live.stop()
+    drain("after_live_sink")
+    assert not ss.isMaintenanceRunning()
